@@ -257,7 +257,7 @@ def _proc_stat() -> tuple[int, int] | None:
 
 def main() -> None:
     from map_reduce_spark.registry import queries
-    from map_reduce_spark.session import get_spark, release_caches
+    from map_reduce_spark.session import _cpus, get_spark, release_caches
 
     load_start = _host_load()  # contention reading BEFORE Spark ramps up
     stat_start = _proc_stat()
@@ -348,8 +348,7 @@ def main() -> None:
     # main run's per-query map. The stamped name keeps every
     # configuration's detail on disk; the legacy name stays for
     # existing tooling.
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "0")) or (os.cpu_count() or 0)
-    stamped = f"BENCH_DETAIL_cpus{cpus}_sf{sf}.json"
+    stamped = f"BENCH_DETAIL_cpus{_cpus()}_sf{sf}.json"
     summary["queries_detail"] = stamped
     detail = dict(summary, queries=timings, queries_norm=queries_norm, cold=cold)
     here = os.path.dirname(os.path.abspath(__file__))

@@ -564,22 +564,20 @@ def ensure_avro_fixture(sf_dir: str) -> str:
     Fixture generation is driver-side and cached across runs — it is
     the test stand-in for data that already LIVES in Avro; the operator
     under measure is the read path."""
-    import hashlib
     import math
     import os
-    import shutil
-    import tempfile
 
     import pyarrow.parquet as pq
 
-    key = hashlib.md5(os.path.abspath(sf_dir).encode()).hexdigest()[:12]
-    dest = os.path.join(tempfile.gettempdir(), f"mr_spark_avro_{key}")
+    from map_reduce_spark.sources import lakecommit
+
+    dest = lakecommit.fixture_dir("avro", sf_dir)
     if os.path.isdir(dest):
         return dest
     tbl = pq.read_table(os.path.join(sf_dir, "customer.parquet"))
     names = [f["name"] for f in _CUSTOMER_AVRO_SCHEMA["fields"]]
     rows = list(zip(*(tbl.column(c).to_pylist() for c in names)))
-    tmp = f"{dest}.tmp{os.getpid()}"
+    tmp = lakecommit.fixture_tmp(dest)
     os.makedirs(tmp, exist_ok=True)
     per = max(1, math.ceil(len(rows) / _FIXTURE_FILES))
     for i in range(_FIXTURE_FILES):
@@ -591,10 +589,7 @@ def ensure_avro_fixture(sf_dir: str) -> str:
             codec="deflate",
             rows_per_block=_FIXTURE_ROWS_PER_BLOCK,
         )
-    try:
-        os.rename(tmp, dest)  # atomic publish
-    except OSError:
-        shutil.rmtree(tmp, ignore_errors=True)  # lost the race: theirs won
+    lakecommit.publish_fixture(tmp, dest)
     return dest
 
 

@@ -15,18 +15,13 @@ latest ``add`` wins and a ``remove`` tombstones it. Supported protocol
 surface: ``minReaderVersion <= 1`` (no deletion vectors / column
 mapping — those raise loudly at plan time, never mis-read).
 
-Commit protocol: filesystem put-if-absent. Data files are staged into
-the table directory under a dot-prefixed scratch dir (invisible to
-readers — only log-listed paths are ever scanned), moved into place,
-then the version's JSON is fsynced and published with ``os.link``
-(fails if the version already exists — the same rename-no-overwrite
-primitive delta-core uses on HDFS). Losing the race means another
-writer owns that version: appends blindly retry with the next number;
-rewrites (delete/merge) re-derive their file set against the new
-snapshot before retrying, which is exactly delta-core's
-OptimisticTransaction conflict loop. A crash anywhere before the link
-leaves staged/moved data files that no log entry references —
-invisible, and swept by ``vacuum_delta``.
+Commit protocol: the shared put-if-absent core in ``lakecommit``
+(publish, optimistic retry, staging, footer statistics). Data files
+stage under the table root, keeping hive ``k=v`` subdirs and Spark's
+part names; each version's JSON publishes through ``try_commit``.
+Appends blindly retry with the next number; rewrites
+(delete/merge/update/optimize) re-derive their file set against the
+new snapshot — delta-core's OptimisticTransaction conflict loop.
 
 Scale shape: the log plane is METADATA-sized — snapshot reconstruction
 reads a few KB of JSON (plus one columnar checkpoint read via pyarrow)
@@ -59,7 +54,6 @@ versioned, time-travelable table commits over the same plain files.
 from __future__ import annotations
 
 import hashlib
-import itertools
 import json
 import os
 import re
@@ -71,6 +65,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import LongType, StringType, StructField, StructType
 
 from map_reduce_spark.registry import register
+from map_reduce_spark.sources import lakecommit
 
 _LOG = "_delta_log"
 _LAST_CHECKPOINT = "_last_checkpoint"
@@ -81,8 +76,6 @@ _CONTROL_PLANE_MAX = 100_000
 # vacuum won't reap a staging dir quieter than this (a live writer may
 # be mid-stage; see vacuum_delta)
 _STAGING_RETENTION_SEC = 600
-# per-process staging sequence (see _stage_and_move)
-_STAGING_SEQ = itertools.count()
 
 
 # --------------------------------------------------------------------
@@ -188,35 +181,11 @@ def _read_commit(table: str, version: int) -> list[dict]:
 
 
 def try_commit(table: str, version: int, actions: list[dict]) -> bool:
-    """Atomically publish ``version`` iff it does not exist yet.
-
-    fsync the temp file, then ``os.link`` it to the final name —
-    link-to-existing raises, which IS the put-if-absent semantics the
-    Delta commit protocol requires of its log store. Returns False
-    when another writer won the version.
-    """
-    d = _log_dir(table)
-    os.makedirs(d, exist_ok=True)
-    tmp = os.path.join(d, f".{version:020d}.json.tmp{os.getpid()}")
-    with open(tmp, "w", encoding="utf-8") as fh:
-        for a in actions:
-            fh.write(json.dumps(a, separators=(",", ":")) + "\n")
-        fh.flush()
-        os.fsync(fh.fileno())
-    try:
-        os.link(tmp, _json_path(table, version))
-        won = True
-    except FileExistsError:
-        won = False
-    finally:
-        os.remove(tmp)
-    if won:
-        dirfd = os.open(d, os.O_RDONLY)
-        try:
-            os.fsync(dirfd)  # persist the link itself
-        finally:
-            os.close(dirfd)
-    return won
+    """Atomically publish ``version`` iff it does not exist yet
+    (``lakecommit.publish_if_absent``). Returns False when another
+    writer won the version."""
+    payload = "".join(json.dumps(a, separators=(",", ":")) + "\n" for a in actions)
+    return lakecommit.publish_if_absent(_json_path(table, version), payload)
 
 
 def _gate_protocol(protocol: dict) -> None:
@@ -751,47 +720,18 @@ def write_checkpoint_v2(
 # --------------------------------------------------------------------
 
 
-def _file_stats(path: str, stats_cols: tuple[str, ...]) -> str | None:
-    """Delta ``add.stats`` JSON from the file's parquet footer:
-    numRecords always; min/max/nullCount for ``stats_cols`` when the
-    footer carries statistics. Bytes/binary columns are skipped (their
+def _file_stats(md, stats_cols: tuple[str, ...]) -> str:
+    """Delta ``add.stats`` JSON from a parquet footer: numRecords
+    always; min/max/nullCount for ``stats_cols`` when the footer
+    carries statistics. Bytes/binary columns are skipped (their
     truncated physical stats don't round-trip through JSON)."""
-    import pyarrow.parquet as pq
-
-    md = pq.ParquetFile(path).metadata
     stats: dict = {"numRecords": md.num_rows}
-    if stats_cols:
-        names = {md.schema.column(i).name: i for i in range(md.num_columns)}
-        mins: dict = {}
-        maxs: dict = {}
-        nulls: dict = {}
-        for col in stats_cols:
-            if col not in names:
-                continue
-            idx = names[col]
-            lo = hi = None
-            nn = 0
-            ok = True
-            for rg in range(md.num_row_groups):
-                st = md.row_group(rg).column(idx).statistics
-                if st is None or not st.has_min_max:
-                    ok = False
-                    break
-                v_lo, v_hi = st.min, st.max
-                if isinstance(v_lo, bytes):
-                    ok = False
-                    break
-                lo = v_lo if lo is None else min(lo, v_lo)
-                hi = v_hi if hi is None else max(hi, v_hi)
-                nn += st.null_count or 0
-            if ok and lo is not None:
-                mins[col] = lo
-                maxs[col] = hi
-                nulls[col] = nn
-        if mins:
-            stats["minValues"] = mins
-            stats["maxValues"] = maxs
-            stats["nullCount"] = nulls
+    ranges = lakecommit.footer_ranges(md, (bytes,), stats_cols) if stats_cols else {}
+    cols = [c for c in stats_cols if c in ranges]
+    if cols:
+        stats["minValues"] = {c: ranges[c][0] for c in cols}
+        stats["maxValues"] = {c: ranges[c][1] for c in cols}
+        stats["nullCount"] = {c: ranges[c][2] for c in cols}
     return json.dumps(stats, separators=(",", ":"))
 
 
@@ -890,81 +830,41 @@ def read_delta_py(
 def _stage_and_move(
     df: DataFrame, table: str, partition_by: tuple[str, ...],
     distribute: bool = False,
-) -> list[tuple[str, dict, int]]:
-    """Write ``df`` to a dot-prefixed scratch dir INSIDE the table dir
-    (same filesystem — moves are rename-cheap; invisible to readers,
-    who only scan log-listed paths), then move the parquet parts into
-    place preserving hive-style partition subdirs. Returns
-    [(relative path, partitionValues, size)] for the add actions.
-    File names keep Spark's task-committed unique part names.
+) -> list[lakecommit.StagedFile]:
+    """Stage ``df`` into the table dir (``lakecommit.stage_parquet``),
+    keeping hive-style partition subdirs and Spark's task-committed
+    unique part names."""
+    return lakecommit.stage_parquet(
+        df, table, lambda rel: os.path.join(table, rel), partition_by, distribute
+    )
 
-    ``distribute=True`` adds an AQE REBALANCE (on the partition
-    columns when partitioned) before the write — the
-    distribution-mode=hash posture: a rewrite that scanned N small
-    files would otherwise emit ~N (x partition values) small files
-    again, and every later scan/rewrite of the table pays for them.
-    AQE owns the sizing: toy rewrites coalesce to one file per tuple,
-    an oversized tuple splits at the advisory partition size at
-    100 TB. Callers that own their layout (OPTIMIZE/Z-ORDER's
-    repartitionByRange) keep the default."""
-    os.makedirs(table, exist_ok=True)
-    # unique per process AND per call: two THREADS of one writer must
-    # never share a staging dir (itertools.count is GIL-atomic)
-    token = f"{os.getpid()}-{next(_STAGING_SEQ)}"
-    staging = os.path.join(table, f".staging-{token}")
-    if distribute:
-        # backtick-quote: hint parameters parse as SQL expressions, and
-        # a column-mapping table's PHYSICAL partition names (col-<uuid>)
-        # fail the unquoted-identifier rule
-        df = df.hint("rebalance", *[f"`{c}`" for c in partition_by])
-    w = df.write.mode("overwrite")
-    if partition_by:
-        w = w.partitionBy(*partition_by)
-    w.parquet(staging)
-    moved: list[tuple[str, dict, int]] = []
-    for root, _, names in os.walk(staging):
-        rel_dir = os.path.relpath(root, staging)
-        pvals: dict[str, str] = {}
-        if rel_dir != ".":
-            for seg in rel_dir.split(os.sep):
-                k, _, v = seg.partition("=")
-                pvals[k] = urllib.parse.unquote(v)
-        for name in names:
-            if not name.endswith(".parquet"):
-                continue
-            rel = name if rel_dir == "." else os.path.join(rel_dir, name)
-            dest = os.path.join(table, rel)
-            os.makedirs(os.path.dirname(dest), exist_ok=True)
-            os.rename(os.path.join(root, name), dest)
-            moved.append((rel, pvals, os.path.getsize(dest)))
-    shutil.rmtree(staging, ignore_errors=True)
-    return moved
+
+def _rel(table: str, f: lakecommit.StagedFile) -> str:
+    return urllib.parse.quote(os.path.relpath(f.path, table).replace(os.sep, "/"))
+
+
+def _pvals(f: lakecommit.StagedFile) -> dict[str, str]:
+    return {k: urllib.parse.unquote(v) for k, v in f.parts.items()}
 
 
 def _add_actions(
     table: str,
-    moved: list[tuple[str, dict, int]],
+    staged: list[lakecommit.StagedFile],
     stats_cols: tuple[str, ...],
     data_change: bool = True,
 ) -> list[dict]:
     acts = []
-    for rel, pvals, size in moved:
-        stats = _file_stats(os.path.join(table, rel), stats_cols)
-        if json.loads(stats)["numRecords"] == 0:
-            # a rewrite that emptied its file, or an empty writer task:
-            # never commit zero-row files (they bloat the log and carry
-            # no min/max stats to skip on)
-            os.remove(os.path.join(table, rel))
-            continue
+    for f in staged:
+        st = os.stat(f.path)
         acts.append(
             {
                 "add": {
-                    "path": urllib.parse.quote(rel.replace(os.sep, "/")),
-                    "partitionValues": pvals,
-                    "size": size,
-                    "modificationTime": int(os.path.getmtime(os.path.join(table, rel)) * 1000),
+                    "path": _rel(table, f),
+                    "partitionValues": _pvals(f),
+                    "size": st.st_size,
+                    "modificationTime": int(st.st_mtime * 1000),
                     "dataChange": data_change,
-                    "stats": stats,
+                    "stats": _file_stats(f.meta, stats_cols),
                 }
             }
         )
@@ -1006,7 +906,31 @@ def _maybe_checkpoint(table: str, version: int, interval: int) -> None:
             write_checkpoint(table, snap)
 
 
-def enable_v2_checkpoints(table: str, _max_retries: int = 5) -> int:
+def _commit(
+    table: str,
+    version: int,
+    actions: list[dict],
+    checkpoint_interval: int = 0,
+    owns_files: bool = False,
+):
+    """One publish of ``actions`` as ``version``: on a win cut the
+    automatic checkpoint when due and return the version; on a loss
+    return ``lakecommit.LOST``, first removing every add/cdc file of
+    ``actions`` when ``owns_files`` (this attempt staged them all)."""
+    if try_commit(table, version, actions):
+        _maybe_checkpoint(table, version, checkpoint_interval)
+        return version
+    if owns_files:
+        lakecommit.discard(
+            os.path.join(table, urllib.parse.unquote(a[k]["path"]))
+            for a in actions
+            for k in ("add", "cdc")
+            if k in a
+        )
+    return lakecommit.LOST
+
+
+def enable_v2_checkpoints(table: str) -> int:
     """Switch a table to the v2 checkpoint policy: one commit that
     (a) upgrades the protocol to the feature form with ``v2Checkpoint``
     in reader+writer features (carrying existing capabilities — the
@@ -1015,7 +939,8 @@ def enable_v2_checkpoints(table: str, _max_retries: int = 5) -> int:
     checkpoint then emits the uuid manifest + parquet sidecars.
     Returns the committed version (idempotent: no-op commit-free if
     already enabled)."""
-    for _ in range(_max_retries):
+
+    def attempt():
         snap = snapshot(table)
         cfg = dict(snap.metadata.get("configuration") or {})
         rf = set(snap.protocol.get("readerFeatures") or [])
@@ -1048,9 +973,9 @@ def enable_v2_checkpoints(table: str, _max_retries: int = 5) -> int:
                 }
             },
         ]
-        if try_commit(table, snap.version + 1, actions):
-            return snap.version + 1
-    raise RuntimeError(f"v2-checkpoint enablement on {table!r} lost 5 races")
+        return _commit(table, snap.version + 1, actions)
+
+    return lakecommit.retry_commit(f"v2-checkpoint enablement on {table!r}", attempt)
 
 
 def write_delta_py(
@@ -1090,9 +1015,9 @@ def write_delta_py(
             df = df.select([F.col(n).alias(p) for n, p in mapping.items()])
             partition_by = tuple(mapping[c] for c in partition_by)
             stats_cols = tuple(mapping[c] for c in stats_cols)
-    moved = _stage_and_move(df, table, partition_by)
-    adds = _add_actions(table, moved, stats_cols)
-    while True:
+    adds = _add_actions(table, _stage_and_move(df, table, partition_by), stats_cols)
+
+    def attempt():
         cur = latest_version(table)
         v = 0 if cur is None else cur + 1
         actions: list[dict] = []
@@ -1109,9 +1034,9 @@ def write_delta_py(
             )
         actions.extend(adds)
         actions.append({"commitInfo": {"operation": mode.upper(), "engine": "map_reduce_spark"}})
-        if try_commit(table, v, actions):
-            _maybe_checkpoint(table, v, checkpoint_interval)
-            return v
+        return _commit(table, v, actions, checkpoint_interval)
+
+    return lakecommit.retry_commit(f"{mode} on {table!r}", attempt)
 
 
 def delete_where(
@@ -1120,7 +1045,6 @@ def delete_where(
     predicate,
     stats_cols: tuple[str, ...] = (),
     checkpoint_interval: int = 10,
-    _max_retries: int = 5,
 ) -> int:
     """Delta DELETE: find the files containing matching rows (file-
     granularity control plane via ``_metadata.file_path``), rewrite
@@ -1135,7 +1059,8 @@ def delete_where(
     ``coalesce(predicate, false)`` (a bare ``~predicate`` would turn
     NULL into NULL and silently drop those rows from the rewrite)."""
     pred_true = F.coalesce(predicate, F.lit(False))
-    for _ in range(_max_retries):
+
+    def attempt():
         snap = snapshot(table)
         _gate_dv_rewrite(snap, "delete_where (file rewrite)")
         active = read_delta_py(spark, table, snap.version)
@@ -1167,13 +1092,13 @@ def delete_where(
                 _stage_cdc_files(deleted, table, tuple(snap.partition_columns))
             )
         actions.append({"commitInfo": {"operation": "DELETE", "engine": "map_reduce_spark"}})
-        if try_commit(table, snap.version + 1, actions):
-            _maybe_checkpoint(table, snap.version + 1, checkpoint_interval)
-            return snap.version + 1
-        # lost the race: the winner may have rewritten our victims —
-        # re-derive everything against the new snapshot (our staged
-        # files become unreferenced orphans; vacuum_delta sweeps them)
-    raise RuntimeError(f"delete on {table!r} lost {_max_retries} commit races")
+        # a lost race re-derives everything against the new snapshot:
+        # the winner may have rewritten our victims
+        return _commit(
+            table, snap.version + 1, actions, checkpoint_interval, owns_files=True
+        )
+
+    return lakecommit.retry_commit(f"delete on {table!r}", attempt)
 
 
 def _rel_paths(snap: DeltaSnapshot, abs_paths) -> list[str]:
@@ -1202,7 +1127,6 @@ def merge_upsert(
     key: str,
     stats_cols: tuple[str, ...] = (),
     checkpoint_interval: int = 10,
-    _max_retries: int = 5,
 ) -> int:
     """Delta MERGE (upsert): matched target rows take the source row's
     values, unmatched source rows insert. Candidate files come from
@@ -1249,8 +1173,7 @@ def merge_upsert(
     src = source.withColumn(key, guarded_key).persist()
     try:
         return _merge_upsert_inner(
-            spark, table, src, key, stats_cols, checkpoint_interval,
-            _max_retries,
+            spark, table, src, key, stats_cols, checkpoint_interval
         )
     finally:
         src.unpersist(blocking=True)
@@ -1263,11 +1186,11 @@ def _merge_upsert_inner(
     key: str,
     stats_cols: tuple[str, ...],
     checkpoint_interval: int,
-    _max_retries: int,
 ) -> int:
     bounds_df = src.agg(F.min(key).alias("lo"), F.max(key).alias("hi"))
     lo_hi = _control_plane_rows(bounds_df, "merge key bounds")[0]
-    for _ in range(_max_retries):
+
+    def attempt():
         snap = snapshot(table)
         _gate_dv_rewrite(snap, "merge_upsert")
         cols = [f.name for f in snap.schema.fields]
@@ -1327,10 +1250,11 @@ def _merge_upsert_inner(
                 _stage_cdc_files(changes, table, tuple(snap.partition_columns))
             )
         actions.append({"commitInfo": {"operation": "MERGE", "engine": "map_reduce_spark"}})
-        if try_commit(table, snap.version + 1, actions):
-            _maybe_checkpoint(table, snap.version + 1, checkpoint_interval)
-            return snap.version + 1
-    raise RuntimeError(f"merge on {table!r} lost {_max_retries} commit races")
+        return _commit(
+            table, snap.version + 1, actions, checkpoint_interval, owns_files=True
+        )
+
+    return lakecommit.retry_commit(f"merge on {table!r}", attempt)
 
 
 def delta_history_table(spark: SparkSession, table: str) -> DataFrame:
@@ -1907,7 +1831,6 @@ def delete_where_dv(
     table: str,
     predicate,
     checkpoint_interval: int = 10,
-    _max_retries: int = 5,
 ) -> int:
     """Delta DELETE via DELETION VECTORS (merge-on-read): mark matching
     rows deleted in per-file .bin bitmaps instead of rewriting data
@@ -1922,7 +1845,8 @@ def delete_where_dv(
     rows. Returns the committed version."""
     codec = make_dv_codec()
     pred_true = F.coalesce(predicate, F.lit(False))
-    for _ in range(_max_retries):
+
+    def attempt():
         snap = snapshot(table)
         paths = snap.file_paths()
         if not paths:
@@ -2065,14 +1989,14 @@ def delete_where_dv(
         actions.append(
             {"commitInfo": {"operation": "DELETE", "engine": "map_reduce_spark"}}
         )
-        if try_commit(table, snap.version + 1, actions):
-            _maybe_checkpoint(table, snap.version + 1, checkpoint_interval)
-            return snap.version + 1
-        # lost the race: re-derive against the new snapshot (orphan DV
-        # bins are content-addressed; a later identical delete reuses
-        # them, and they are invisible to readers either way — as are
-        # cdc files staged for the lost attempt)
-    raise RuntimeError(f"DV delete on {table!r} lost {_max_retries} commit races")
+        # a lost race re-derives against the new snapshot (the adds
+        # name existing data files, so nothing is discarded; orphan DV
+        # bins are content-addressed — a later identical delete reuses
+        # them — and invisible to readers, as are this attempt's cdc
+        # files)
+        return _commit(table, snap.version + 1, actions, checkpoint_interval)
+
+    return lakecommit.retry_commit(f"DV delete on {table!r}", attempt)
 
 
 # --------------------------------------------------------------------
@@ -2125,14 +2049,10 @@ def ensure_delta_fixture(spark: SparkSession, sf_dir: str) -> str:
     data skipping pays on). The fixture is the test stand-in for a
     corpus that already LIVES in Delta; the operators under measure
     are the log-replay read and the transactional writes."""
-    import tempfile
-
-    key = hashlib.md5(os.path.abspath(sf_dir).encode()).hexdigest()[:12]
-    dest = os.path.join(tempfile.gettempdir(), f"mr_spark_delta_{key}")
+    dest = lakecommit.fixture_dir("delta", sf_dir)
     if os.path.isdir(dest):
         return dest
-    tmp = f"{dest}.tmp{os.getpid()}"
-    shutil.rmtree(tmp, ignore_errors=True)
+    tmp = lakecommit.fixture_tmp(dest)
     d = _orders_frame(spark, sf_dir)
     b8 = _bucket(F.col("o_orderkey"), 8)
     b16 = _bucket(F.col("o_orderkey"), 16)
@@ -2159,10 +2079,7 @@ def ensure_delta_fixture(spark: SparkSession, sf_dir: str) -> str:
         stats_cols=("o_orderkey",),
         checkpoint_interval=2,
     )
-    try:
-        os.rename(tmp, dest)  # atomic publish
-    except OSError:
-        shutil.rmtree(tmp, ignore_errors=True)  # lost the race: theirs won
+    lakecommit.publish_fixture(tmp, dest)
     return dest
 
 
@@ -2417,15 +2334,11 @@ def ensure_delta_v2ckpt_fixture(spark: SparkSession, sf_dir: str) -> str:
     chasing, checkpoint-only version service, and json replay above
     the checkpoint — the exact layout today's Spark/Databricks writers
     produce at scale."""
-    import tempfile
-
-    key = hashlib.md5(os.path.abspath(sf_dir).encode()).hexdigest()[:12]
-    dest = os.path.join(tempfile.gettempdir(), f"mr_spark_delta_v2c_{key}")
+    dest = lakecommit.fixture_dir("delta_v2c", sf_dir)
     if os.path.isdir(dest):
         return dest
     base = ensure_delta_fixture(spark, sf_dir)
-    tmp = f"{dest}.tmp{os.getpid()}"
-    shutil.rmtree(tmp, ignore_errors=True)
+    tmp = lakecommit.fixture_tmp(dest)
     clone_delta_table(base, tmp)
     snap = snapshot(tmp)
     write_checkpoint_v2(tmp, snap)
@@ -2449,10 +2362,7 @@ def ensure_delta_v2ckpt_fixture(spark: SparkSession, sf_dir: str) -> str:
         stats_cols=("o_orderkey",),
         checkpoint_interval=10_000,  # keep the v2 checkpoint the only seed
     )
-    try:
-        os.rename(tmp, dest)  # atomic publish
-    except OSError:
-        shutil.rmtree(tmp, ignore_errors=True)  # lost the race: theirs won
+    lakecommit.publish_fixture(tmp, dest)
     return dest
 
 
@@ -2515,14 +2425,10 @@ def ensure_delta_v2policy_fixture(spark: SparkSession, sf_dir: str) -> str:
     lands above it. Reading this table proves the ordinary write path
     round-trips its own v2 layout: manifest discovery, sidecar chase,
     checkpoint-only version service, json replay above the seed."""
-    import tempfile
-
-    key = hashlib.md5(os.path.abspath(sf_dir).encode()).hexdigest()[:12]
-    dest = os.path.join(tempfile.gettempdir(), f"mr_spark_delta_v2p_{key}")
+    dest = lakecommit.fixture_dir("delta_v2p", sf_dir)
     if os.path.isdir(dest):
         return dest
-    tmp = f"{dest}.tmp{os.getpid()}"
-    shutil.rmtree(tmp, ignore_errors=True)
+    tmp = lakecommit.fixture_tmp(dest)
     d = _orders_frame(spark, sf_dir)
     b8 = _bucket(F.col("o_orderkey"), 8)
     write_delta_py(
@@ -2553,10 +2459,7 @@ def ensure_delta_v2policy_fixture(spark: SparkSession, sf_dir: str) -> str:
         stats_cols=("o_orderkey",),
         checkpoint_interval=0,
     )
-    try:
-        os.rename(tmp, dest)
-    except OSError:
-        shutil.rmtree(tmp, ignore_errors=True)
+    lakecommit.publish_fixture(tmp, dest)
     return dest
 
 
@@ -2642,24 +2545,17 @@ def ensure_customer_delta(spark: SparkSession, sf_dir: str) -> str:
     c_custkey into 8 key-disjoint files (so ``skip_files`` has real
     ranges to prune against). Same cache/publish discipline as
     ``ensure_delta_fixture``."""
-    import tempfile
-
-    key = hashlib.md5(os.path.abspath(sf_dir).encode()).hexdigest()[:12]
-    dest = os.path.join(tempfile.gettempdir(), f"mr_spark_delta_cust_{key}")
+    dest = lakecommit.fixture_dir("delta_cust", sf_dir)
     if os.path.isdir(dest):
         return dest
-    tmp = f"{dest}.tmp{os.getpid()}"
-    shutil.rmtree(tmp, ignore_errors=True)
+    tmp = lakecommit.fixture_tmp(dest)
     write_delta_py(
         _customer_frame(spark, sf_dir).repartitionByRange(8, "c_custkey"),
         tmp,
         mode="overwrite",
         stats_cols=("c_custkey",),
     )
-    try:
-        os.rename(tmp, dest)
-    except OSError:
-        shutil.rmtree(tmp, ignore_errors=True)
+    lakecommit.publish_fixture(tmp, dest)
     return dest
 
 
@@ -2775,7 +2671,6 @@ def optimize_compact(
     stats_cols: tuple[str, ...] = (),
     zorder_by: tuple[str, str] | None = None,
     checkpoint_interval: int = 10,
-    _max_retries: int = 5,
 ) -> int | None:
     """Delta OPTIMIZE: rewrite each partition's sub-target files into
     ~target-sized ones, committed as remove+add with
@@ -2800,7 +2695,8 @@ def optimize_compact(
     a linear sort can only serve one. When zordering, ALL of a
     partition's files are victims (the clustering is the point, not
     just size)."""
-    for _ in range(_max_retries):
+
+    def attempt():
         snap = snapshot(table)
         _gate_dv_rewrite(snap, "optimize_compact")
         by_part: dict[tuple, list[str]] = {}
@@ -2846,10 +2742,11 @@ def optimize_compact(
         actions.append(
             {"commitInfo": {"operation": "OPTIMIZE", "engine": "map_reduce_spark"}}
         )
-        if try_commit(table, snap.version + 1, actions):
-            _maybe_checkpoint(table, snap.version + 1, checkpoint_interval)
-            return snap.version + 1
-    raise RuntimeError(f"optimize on {table!r} lost {_max_retries} commit races")
+        return _commit(
+            table, snap.version + 1, actions, checkpoint_interval, owns_files=True
+        )
+
+    return lakecommit.retry_commit(f"optimize on {table!r}", attempt)
 
 
 def append_stream_batch(
@@ -2875,31 +2772,27 @@ def append_stream_batch(
             return None
     moved = _stage_and_move(df, table, partition_by)
     adds = _add_actions(table, moved, stats_cols)
-    while True:
+
+    def attempt():
         cur = latest_version(table)
         v = 0 if cur is None else cur + 1
         actions: list[dict] = []
         if cur is None:
             actions.append(_PROTOCOL_ACTION)
             actions.append(_meta_action(df.schema, table, partition_by))
-        else:
-            # the writer that beat us may have been our own appId's
-            # previous incarnation committing this very epoch
-            if snapshot(table).txns.get(app_id, -1) >= epoch_id:
-                for rel, _, _ in moved:  # our duplicate files: orphan them
-                    try:
-                        os.remove(os.path.join(table, rel))
-                    except OSError:
-                        pass
-                return None
+        elif snapshot(table).txns.get(app_id, -1) >= epoch_id:
+            # the writer that beat us was our own appId's previous
+            # incarnation committing this very epoch: drop our files
+            lakecommit.discard(f.path for f in moved)
+            return None
         actions.extend(adds)
         actions.append({"txn": {"appId": app_id, "version": epoch_id}})
         actions.append(
             {"commitInfo": {"operation": "STREAMING UPDATE", "engine": "map_reduce_spark"}}
         )
-        if try_commit(table, v, actions):
-            _maybe_checkpoint(table, v, checkpoint_interval)
-            return v
+        return _commit(table, v, actions, checkpoint_interval)
+
+    return lakecommit.retry_commit(f"stream batch on {table!r}", attempt)
 
 
 def write_stream_delta(
@@ -3090,7 +2983,8 @@ def set_delta_table_property(table: str, key: str, value: str) -> int:
     """Commit an updated table configuration (metaData action with the
     new key) — how ``delta.enableChangeDataFeed`` is switched on.
     Returns the committed version."""
-    for _ in range(5):
+
+    def attempt():
         snap = snapshot(table)
         cfg = dict(snap.metadata.get("configuration") or {})
         if cfg.get(key) == value:
@@ -3101,9 +2995,9 @@ def set_delta_table_property(table: str, key: str, value: str) -> int:
             {"commitInfo": {"operation": "SET TBLPROPERTIES",
                             "engine": "map_reduce_spark"}},
         ]
-        if try_commit(table, snap.version + 1, actions):
-            return snap.version + 1
-    raise RuntimeError(f"property commit on {table!r} lost 5 races")
+        return _commit(table, snap.version + 1, actions)
+
+    return lakecommit.retry_commit(f"property commit on {table!r}", attempt)
 
 
 def _stage_cdc_files(
@@ -3130,22 +3024,17 @@ def _stage_cdc_files(
         )
         partition_by = tuple(mapping[c] for c in partition_by)
     cdc_root = os.path.join(table, "_change_data")
-    moved = _stage_and_move(change_df, cdc_root, partition_by, distribute=True)
-    acts = []
-    for rel, pvals, size in moved:
-        acts.append(
-            {
-                "cdc": {
-                    "path": urllib.parse.quote(
-                        ("_change_data/" + rel.replace(os.sep, "/"))
-                    ),
-                    "partitionValues": pvals,
-                    "size": size,
-                    "dataChange": False,
-                }
+    return [
+        {
+            "cdc": {
+                "path": _rel(table, f),
+                "partitionValues": _pvals(f),
+                "size": os.path.getsize(f.path),
+                "dataChange": False,
             }
-        )
-    return acts
+        }
+        for f in _stage_and_move(change_df, cdc_root, partition_by, distribute=True)
+    ]
 
 
 def read_delta_changes_cdf(
@@ -3477,13 +3366,16 @@ def append_with_evolution(
     evolved the schema (added a column), committing a schemaString
     merged against the stale snapshot would silently drop the winner's
     column from table metadata while its data files remain."""
-    unified = evolve_schema_for_append(table, df.schema)
-    snap = snapshot(table)
-    moved = _stage_and_move(df, table, tuple(snap.partition_columns))
+    snap0 = snapshot(table)
+    moved = _stage_and_move(df, table, tuple(snap0.partition_columns))
     adds = _add_actions(table, moved, stats_cols)
-    while True:
-        cur = latest_version(table)
-        v = (cur or 0) + 1
+
+    def attempt():
+        # merge against the latest schema, THEN take the metaData base
+        # (ordering matters — the evolve helper reads the latest
+        # snapshot itself; a racer may have committed in between)
+        unified = evolve_schema_for_append(table, df.schema)
+        snap = snapshot(table)
         actions: list[dict] = []
         if unified.json() != snap.metadata["schemaString"]:
             meta = dict(snap.metadata)
@@ -3493,14 +3385,9 @@ def append_with_evolution(
         actions.append(
             {"commitInfo": {"operation": "APPEND", "engine": "map_reduce_spark"}}
         )
-        if try_commit(table, v, actions):
-            _maybe_checkpoint(table, v, checkpoint_interval)
-            return v
-        # lost the race: re-merge against the winner's schema, then
-        # re-derive the metaData base (ordering matters — the evolve
-        # helper reads the latest snapshot itself)
-        unified = evolve_schema_for_append(table, df.schema)
-        snap = snapshot(table)
+        return _commit(table, snap.version + 1, actions, checkpoint_interval)
+
+    return lakecommit.retry_commit(f"append with evolution on {table!r}", attempt)
 
 
 @register(
@@ -3724,14 +3611,10 @@ def ensure_delta_dv_fixture(spark: SparkSession, sf_dir: str) -> str:
     the certified read path replays DV state THROUGH a checkpoint, not
     just JSON commits. Built once per sf_dir under the system tmp dir,
     every mutation inside the build, atomic-rename published."""
-    import tempfile
-
-    key = hashlib.md5(os.path.abspath(sf_dir).encode()).hexdigest()[:12]
-    dest = os.path.join(tempfile.gettempdir(), f"mr_spark_deltadv_{key}")
+    dest = lakecommit.fixture_dir("deltadv", sf_dir)
     if os.path.isdir(dest):
         return dest
-    tmp = f"{dest}.tmp{os.getpid()}"
-    shutil.rmtree(tmp, ignore_errors=True)
+    tmp = lakecommit.fixture_tmp(dest)
     d = _orders_frame(spark, sf_dir)
     b16 = _bucket(F.col("o_orderkey"), 16)
     write_delta_py(
@@ -3748,10 +3631,7 @@ def ensure_delta_dv_fixture(spark: SparkSession, sf_dir: str) -> str:
         checkpoint_interval=0,
     )
     write_checkpoint(tmp, snapshot(tmp))
-    try:
-        os.rename(tmp, dest)  # atomic publish
-    except OSError:
-        shutil.rmtree(tmp, ignore_errors=True)  # lost the race: theirs won
+    lakecommit.publish_fixture(tmp, dest)
     return dest
 
 
@@ -3814,16 +3694,12 @@ def ensure_delta_evo_fixture(spark: SparkSession, sf_dir: str) -> str:
     v1 appends buckets 4-7 WITH a new c_nationkey column through
     ``append_with_evolution`` — one atomic commit carrying the widened
     schemaString. Built once per sf_dir, atomic-rename published."""
-    import tempfile
-
     from map_reduce_spark.io import load_table
 
-    key = hashlib.md5(os.path.abspath(sf_dir).encode()).hexdigest()[:12]
-    dest = os.path.join(tempfile.gettempdir(), f"mr_spark_deltaevo_{key}")
+    dest = lakecommit.fixture_dir("deltaevo", sf_dir)
     if os.path.isdir(dest):
         return dest
-    tmp = f"{dest}.tmp{os.getpid()}"
-    shutil.rmtree(tmp, ignore_errors=True)
+    tmp = lakecommit.fixture_tmp(dest)
     c = load_table(spark, sf_dir, "customer").select(
         "c_custkey",
         "c_mktsegment",
@@ -3841,10 +3717,7 @@ def ensure_delta_evo_fixture(spark: SparkSession, sf_dir: str) -> str:
         c.filter(b8 >= 4).repartitionByRange(2, "c_custkey"), tmp,
         stats_cols=("c_custkey",),
     )
-    try:
-        os.rename(tmp, dest)
-    except OSError:
-        shutil.rmtree(tmp, ignore_errors=True)
+    lakecommit.publish_fixture(tmp, dest)
     return dest
 
 
@@ -3960,12 +3833,9 @@ def write_mapped_table(
         *adds,
         {"commitInfo": {"operation": "CREATE", "engine": "map_reduce_spark"}},
     ]
-    while True:
-        cur = latest_version(table)
-        if cur is not None:
-            raise ValueError(f"{table!r} already exists; mapped writer creates only")
-        if try_commit(table, 0, actions):
-            return 0
+    if latest_version(table) is not None or not try_commit(table, 0, actions):
+        raise ValueError(f"{table!r} already exists; mapped writer creates only")
+    return 0
 
 
 def ensure_delta_cm_fixture(spark: SparkSession, sf_dir: str) -> str:
@@ -3974,14 +3844,10 @@ def ensure_delta_cm_fixture(spark: SparkSession, sf_dir: str) -> str:
     the full minReaderVersion=3 readerFeatures=[columnMapping,
     deletionVectors] combination — plus a parquet checkpoint so the
     mapping mode and the DVs both replay from the checkpoint path."""
-    import tempfile
-
-    key = hashlib.md5(os.path.abspath(sf_dir).encode()).hexdigest()[:12]
-    dest = os.path.join(tempfile.gettempdir(), f"mr_spark_deltacm_{key}")
+    dest = lakecommit.fixture_dir("deltacm", sf_dir)
     if os.path.isdir(dest):
         return dest
-    tmp = f"{dest}.tmp{os.getpid()}"
-    shutil.rmtree(tmp, ignore_errors=True)
+    tmp = lakecommit.fixture_tmp(dest)
     d = _orders_frame(spark, sf_dir)
     write_mapped_table(
         d.repartitionByRange(4, "o_orderkey"),
@@ -3993,10 +3859,7 @@ def ensure_delta_cm_fixture(spark: SparkSession, sf_dir: str) -> str:
         spark, tmp, _bucket(F.col("o_orderkey"), 16) == 7, checkpoint_interval=0
     )
     write_checkpoint(tmp, snapshot(tmp))
-    try:
-        os.rename(tmp, dest)
-    except OSError:
-        shutil.rmtree(tmp, ignore_errors=True)
+    lakecommit.publish_fixture(tmp, dest)
     return dest
 
 
@@ -4052,14 +3915,10 @@ def ensure_delta_cm_cdf_fixture(spark: SparkSession, sf_dir: str) -> str:
     cdc files scanned physically and projected to logical, the append
     leg ditto, per-commit attribution through the broadcast
     file→version join."""
-    import tempfile
-
-    key = hashlib.md5(os.path.abspath(sf_dir).encode()).hexdigest()[:12]
-    dest = os.path.join(tempfile.gettempdir(), f"mr_spark_deltacmcdf_{key}")
+    dest = lakecommit.fixture_dir("deltacmcdf", sf_dir)
     if os.path.isdir(dest):
         return dest
-    tmp = f"{dest}.tmp{os.getpid()}"
-    shutil.rmtree(tmp, ignore_errors=True)
+    tmp = lakecommit.fixture_tmp(dest)
     d = _orders_frame(spark, sf_dir)
     write_mapped_table(
         d.repartitionByRange(4, "o_orderkey"),
@@ -4081,10 +3940,7 @@ def ensure_delta_cm_cdf_fixture(spark: SparkSession, sf_dir: str) -> str:
         stats_cols=("o_orderkey",),
         checkpoint_interval=0,
     )
-    try:
-        os.rename(tmp, dest)
-    except OSError:
-        shutil.rmtree(tmp, ignore_errors=True)
+    lakecommit.publish_fixture(tmp, dest)
     return dest
 
 
@@ -4153,14 +4009,10 @@ def ensure_delta_logclean_fixture(spark: SparkSession, sf_dir: str) -> str:
     must sweep NOTHING: the base data's only references live in the
     checkpoint, so a json-only reference sweep (the pre-fix bug)
     deletes live files and the oracle catches the loss."""
-    import tempfile
-
-    key = hashlib.md5(os.path.abspath(sf_dir).encode()).hexdigest()[:12]
-    dest = os.path.join(tempfile.gettempdir(), f"mr_spark_deltalogclean_{key}")
+    dest = lakecommit.fixture_dir("deltalogclean", sf_dir)
     if os.path.isdir(dest):
         return dest
-    tmp = f"{dest}.tmp{os.getpid()}"
-    shutil.rmtree(tmp, ignore_errors=True)
+    tmp = lakecommit.fixture_tmp(dest)
     d = _orders_frame(spark, sf_dir)
     b8 = _bucket(F.col("o_orderkey"), 8)
     b16 = _bucket(F.col("o_orderkey"), 16)
@@ -4208,10 +4060,7 @@ def ensure_delta_logclean_fixture(spark: SparkSession, sf_dir: str) -> str:
     if swept:  # checkpoint's references — a json-only sweep would
         shutil.rmtree(tmp, ignore_errors=True)  # delete live base data
         raise RuntimeError(f"vacuum after log cleanup swept {swept} live files")
-    try:
-        os.rename(tmp, dest)
-    except OSError:
-        shutil.rmtree(tmp, ignore_errors=True)
+    lakecommit.publish_fixture(tmp, dest)
     return dest
 
 
@@ -4284,14 +4133,10 @@ def ensure_delta_part_fixture(spark: SparkSession, sf_dir: str) -> str:
     time), cached per sf_dir with the usual atomic publish. The year
     column is derived TZ-free from the µs epoch so the fixture is
     byte-identical under any session timezone."""
-    import tempfile
-
-    key = hashlib.md5(os.path.abspath(sf_dir).encode()).hexdigest()[:12]
-    dest = os.path.join(tempfile.gettempdir(), f"mr_spark_delta_part_{key}")
+    dest = lakecommit.fixture_dir("delta_part", sf_dir)
     if os.path.isdir(dest):
         return dest
-    tmp = f"{dest}.tmp{os.getpid()}"
-    shutil.rmtree(tmp, ignore_errors=True)
+    tmp = lakecommit.fixture_tmp(dest)
     o = spark.read.parquet(os.path.join(sf_dir, "orders.parquet"))
     if o.schema["o_orderdate"].dataType.simpleString() == "timestamp":
         o = o.withColumn(
@@ -4315,10 +4160,7 @@ def ensure_delta_part_fixture(spark: SparkSession, sf_dir: str) -> str:
         d.repartition(2), tmp, mode="overwrite", partition_by=("o_year",),
         stats_cols=("o_orderkey",),
     )
-    try:
-        os.rename(tmp, dest)
-    except OSError:
-        shutil.rmtree(tmp, ignore_errors=True)  # lost the race: theirs won
+    lakecommit.publish_fixture(tmp, dest)
     return dest
 
 
@@ -4360,7 +4202,6 @@ def update_where(
     set_exprs: dict,
     stats_cols: tuple[str, ...] = (),
     checkpoint_interval: int = 10,
-    _max_retries: int = 5,
 ) -> int:
     """Delta UPDATE: rewrite only the files containing predicate-TRUE
     rows, applying ``set_exprs`` (column → Column) to those rows and
@@ -4374,7 +4215,8 @@ def update_where(
     if unknown:
         raise KeyError(f"update_where: unknown columns {sorted(unknown)}")
     pred_true = F.coalesce(predicate, F.lit(False))
-    for _ in range(_max_retries):
+
+    def attempt():
         snap = snapshot(table)
         _gate_dv_rewrite(snap, "update_where (file rewrite)")
         active = read_delta_py(spark, table, snap.version)
@@ -4421,10 +4263,11 @@ def update_where(
         actions.append(
             {"commitInfo": {"operation": "UPDATE", "engine": "map_reduce_spark"}}
         )
-        if try_commit(table, snap.version + 1, actions):
-            _maybe_checkpoint(table, snap.version + 1, checkpoint_interval)
-            return snap.version + 1
-    raise RuntimeError(f"update on {table!r} lost {_max_retries} commit races")
+        return _commit(
+            table, snap.version + 1, actions, checkpoint_interval, owns_files=True
+        )
+
+    return lakecommit.retry_commit(f"update on {table!r}", attempt)
 
 
 def restore_table(
@@ -4432,7 +4275,6 @@ def restore_table(
     table: str,
     version: int,
     stats_cols: tuple[str, ...] = (),
-    _max_retries: int = 5,
 ) -> int:
     """Delta RESTORE: commit a NEW version whose active file set is
     exactly the target version's — removes for files added since,
@@ -4445,7 +4287,8 @@ def restore_table(
     # mapping state re-adds files this writer's rewriting operators
     # (and a pre-fix reader of the restored state) must not mishandle
     _gate_dv_rewrite(target, "restore_table (target snapshot)")
-    for _ in range(_max_retries):
+
+    def attempt():
         cur = snapshot(table)
         _gate_dv_rewrite(cur, "restore_table")
         actions: list[dict] = []
@@ -4506,9 +4349,9 @@ def restore_table(
         actions.append(
             {"commitInfo": {"operation": "RESTORE", "engine": "map_reduce_spark"}}
         )
-        if try_commit(table, cur.version + 1, actions):
-            return cur.version + 1
-    raise RuntimeError(f"restore on {table!r} lost {_max_retries} commit races")
+        return _commit(table, cur.version + 1, actions)
+
+    return lakecommit.retry_commit(f"restore on {table!r}", attempt)
 
 
 @register(

@@ -39,11 +39,13 @@ Scale shape: metadata cost is O(manifests touched) — the spec's own
 design goal (manifest lists exist so planning can skip whole
 manifests); the data plane is the same native FileScan every other
 source here bottoms out in. The writer half is the real optimistic
-commit protocol (round 9): metadata versions publish put-if-absent
-via os.link — the same log-store contract as ``delta_py.try_commit``
-— so concurrent appenders all land; schema evolution preserves the
-schema history per the spec; ``commit_positional_deletes`` writes
-merge-on-read deletes without rewriting data files; and
+commit protocol on the shared core in ``lakecommit`` (publish,
+optimistic retry, staging, footer statistics): metadata versions
+publish put-if-absent, so concurrent appenders all land; data files
+stage flat into ``data/<prefix>-<token>-<name>``; schema evolution
+preserves the schema history per the spec;
+``commit_positional_deletes`` writes merge-on-read deletes without
+rewriting data files; and
 ``expire_snapshots`` is the vacuum twin.
 
 Reference parity: SURVEY.md §2.2 scans/sources — the reference engine
@@ -55,7 +57,6 @@ Delta (sources/delta_py.py).
 from __future__ import annotations
 
 import hashlib
-import itertools
 import json
 import os
 import shutil
@@ -67,6 +68,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import StructField, StructType
 
 from map_reduce_spark.registry import register
+from map_reduce_spark.sources import lakecommit
 
 _MAGIC = b"Obj\x01"
 
@@ -970,37 +972,13 @@ def _spark_to_iceberg_type(t: str) -> str:
     raise NotImplementedError(f"iceberg_py writer: Spark type {t!r}")
 
 
-_WRITE_SEQ = itertools.count()
-
-
-def _write_token() -> str:
-    # unique per process AND per call (two threads of one writer must
-    # never collide on a staged name); deterministic — no entropy
-    return f"{os.getpid()}-{next(_WRITE_SEQ)}"
-
-
-# spark dtype -> can this column's parquet footer min/max become
-# manifest bounds? (strings excluded: writers may TRUNCATE physical
-# string stats, and a truncated max understates the upper bound —
-# the same soundness rule as delta_py._file_stats)
-_BOUNDABLE_SPARK = ("bigint", "int", "smallint", "double", "float",
-                    "date", "timestamp", "timestamp_ntz")
-
-
-def _footer_bounds(path: str) -> dict[str, tuple]:
-    """{column: (min, max)} from the parquet footer, aggregated across
-    row groups, numerics/dates/timestamps only (values normalized to
-    the manifest grid: µs for timestamps, day ordinals for dates).
-    Columns with any stats-less chunk are omitted — partial bounds
-    could under-cover the file."""
+def _footer_bounds(md) -> dict[str, tuple]:
+    """{column: (min, max)} from a parquet footer, aggregated across
+    row groups (values normalized to the manifest grid: µs for
+    timestamps, day ordinals for dates). Strings are excluded: writers
+    may TRUNCATE physical string stats, and a truncated max
+    understates the upper bound."""
     import datetime as _dt
-
-    import pyarrow.parquet as pq
-
-    md = pq.ParquetFile(path).metadata
-    lo: dict[str, object] = {}
-    hi: dict[str, object] = {}
-    bad: set[str] = set()
 
     def norm(v):
         if isinstance(v, _dt.datetime):
@@ -1012,65 +990,25 @@ def _footer_bounds(path: str) -> dict[str, tuple]:
             return (v - _dt.date(1970, 1, 1)).days
         return v
 
-    for rg in range(md.num_row_groups):
-        for ci in range(md.num_columns):
-            col = md.row_group(rg).column(ci)
-            name = col.path_in_schema
-            st = col.statistics
-            if st is None or not st.has_min_max or isinstance(st.min, (bytes, str)):
-                bad.add(name)
-                continue
-            mn, mx = norm(st.min), norm(st.max)
-            lo[name] = mn if name not in lo else min(lo[name], mn)
-            hi[name] = mx if name not in hi else max(hi[name], mx)
-    return {n: (lo[n], hi[n]) for n in lo if n not in bad}
+    return {
+        n: (norm(lo), norm(hi))
+        for n, (lo, hi, _nulls) in lakecommit.footer_ranges(md, (bytes, str)).items()
+    }
 
 
-def _stage_parquet_files(
-    spark_df: DataFrame, table: str, prefix: str, distribute: bool = False
-) -> list[dict]:
-    """Write ``spark_df`` to a scratch dir inside the table, move the
-    parquet parts into ``data/`` under collision-free names, and
-    return spec-shape data_file descriptors (without content — the
-    caller sets 0/1). Each descriptor carries ``_bounds_by_name``
-    (column → (min, max) python values from the footer) which
-    ``_commit_snapshot`` serializes into the manifest's
-    lower/upper_bounds once field ids are resolved.
-
-    ``distribute=True`` adds an AQE REBALANCE before the write so a
-    rewrite that scanned many small files emits advisory-sized output
-    files instead of one file per scan task (see the partitioned
-    twin's docstring); layout-owning callers keep the default."""
-    import pyarrow.parquet as pq
-
-    data_dir = os.path.join(table, "data")
-    os.makedirs(data_dir, exist_ok=True)
-    staging = os.path.join(table, f".staging-{_write_token()}")
-    shutil.rmtree(staging, ignore_errors=True)
-    if distribute:
-        spark_df = spark_df.hint("rebalance")
-    spark_df.write.mode("overwrite").parquet(staging)
-    descs = []
-    for name in sorted(os.listdir(staging)):
-        if not name.endswith(".parquet"):
-            continue
-        dest = os.path.join(data_dir, f"{prefix}-{_write_token()}-{name}")
-        os.rename(os.path.join(staging, name), dest)
-        n_rows = pq.ParquetFile(dest).metadata.num_rows
-        if n_rows == 0:
-            os.remove(dest)  # never commit zero-row files
-            continue
-        descs.append(
-            {
-                "file_path": dest,
-                "file_format": "PARQUET",
-                "record_count": n_rows,
-                "file_size_in_bytes": os.path.getsize(dest),
-                "_bounds_by_name": _footer_bounds(dest),
-            }
-        )
-    shutil.rmtree(staging, ignore_errors=True)
-    return descs
+def _data_file(f: lakecommit.StagedFile, content: int) -> dict:
+    """Spec-shape data_file descriptor of a staged file. It carries
+    ``_bounds_by_name`` (column → (min, max) python values from the
+    footer) which ``_build_manifest_entries`` serializes into the
+    manifest's lower/upper_bounds once field ids are resolved."""
+    return {
+        "file_path": f.path,
+        "file_format": "PARQUET",
+        "record_count": f.meta.num_rows,
+        "file_size_in_bytes": os.path.getsize(f.path),
+        "content": content,
+        "_bounds_by_name": _footer_bounds(f.meta),
+    }
 
 
 def _spec_field_name(col: str, kind: str) -> str:
@@ -1079,38 +1017,40 @@ def _spec_field_name(col: str, kind: str) -> str:
     return f"{col}_{'trunc' if kind == 'truncate' else kind}"
 
 
-def _stage_partitioned_files(
+def _stage_parquet_files(
     spark_df: DataFrame,
     table: str,
     prefix: str,
-    partition_by: list[tuple[str, str]],
     distribute: bool = False,
+    partition_by: list[tuple[str, str]] | None = None,
+    content: int = 0,
 ) -> list[dict]:
-    """Partitioned staging: compute each spec field's partition value
-    as a derived ``__p{i}`` column (spec transforms — see
-    iceberg_transforms; bucket values come from the Arrow-batched
-    murmur3 UDF, everything else stays whole-stage codegen), write
-    with ``partitionBy`` so every data file holds exactly one
-    partition tuple, recover the tuple from the hive-layout directory
-    names, and return descriptors carrying ``partition`` (by spec
-    field name) plus footer bounds. The derived columns are dropped by
+    """Stage ``spark_df`` (``lakecommit.stage_parquet``) flat into
+    ``data/`` under collision-free ``<prefix>-<token>-<part>`` names
+    and return data_file descriptors (``_data_file``).
+
+    ``partition_by`` (``[(column, transform)]``) computes each spec
+    field's partition value as a derived ``__p{i}`` column (spec
+    transforms — see iceberg_transforms; bucket values come from the
+    Arrow-batched murmur3 UDF, everything else stays whole-stage
+    codegen), writes with ``partitionBy`` so every data file holds
+    exactly one partition tuple, and recovers the tuple from the
+    hive-layout directory names into the descriptor's ``partition``
+    (by spec field name). The derived columns are dropped by
     ``partitionBy`` itself; the SOURCE columns stay in the data files
     (hidden partitioning — the spec's whole point).
 
     ``distribute=True`` is Iceberg's ``write.distribution-mode=hash``:
-    an AQE REBALANCE on the partition-value columns before the write,
-    so each partition tuple lands in one right-sized task instead of
-    appearing once per upstream task (a no-shuffle ``partitionBy``
-    emits tasks x tuples files — a rewrite that read N small files
-    re-emits ~N small files forever). AQE owns the sizing, so the same
-    code coalesces a toy rewrite to one file per tuple and SPLITS an
-    oversized tuple at the advisory partition size at 100 TB — no
-    fixed file count anywhere. Callers whose layout IS the point
-    (compaction's out_files contract, range-clustered rewrites) keep
-    the default and own their distribution."""
+    an AQE REBALANCE (on the partition-value columns) before the
+    write, so each partition tuple lands in one right-sized task
+    instead of appearing once per upstream task (a no-shuffle
+    ``partitionBy`` emits tasks x tuples files — a rewrite that read N
+    small files re-emits ~N small files forever). AQE owns the sizing,
+    so the same code coalesces a toy rewrite to one file per tuple and
+    SPLITS an oversized tuple at the advisory partition size at
+    100 TB. Callers whose layout IS the point (compaction's out_files
+    contract, range-clustered rewrites) keep the default."""
     import urllib.parse
-
-    import pyarrow.parquet as pq
 
     from map_reduce_spark.sources.iceberg_transforms import (
         parse_transform,
@@ -1119,14 +1059,14 @@ def _stage_partitioned_files(
     )
 
     dtypes = dict(spark_df.dtypes)
-    pcols, pnames, ptypes = [], [], []
+    fields = {}  # __p{i} -> (spec field name, value type)
     out = spark_df
-    for i, (col, transform) in enumerate(partition_by):
+    for i, (col, transform) in enumerate(partition_by or []):
         kind, arg = parse_transform(transform)
         ice_t = _spark_to_iceberg_type(dtypes[col])
-        pc = f"__p{i}"
+        vt = transform_result_type(kind, ice_t)
         pexpr = transform_column(col, kind, arg, ice_t)
-        if transform_result_type(kind, ice_t) == "string":
+        if vt == "string":
             # Hive layout maps BOTH null and '' to
             # __HIVE_DEFAULT_PARTITION__; recovering the tuple from the
             # directory name would then stamp partition=None on a file
@@ -1136,17 +1076,8 @@ def _stage_partitioned_files(
             # (concat propagates null), so '' stages as 'v' and only
             # true nulls land in the default dir; parse_val strips it.
             pexpr = F.concat(F.lit("v"), pexpr)
-        out = out.withColumn(pc, pexpr)
-        pcols.append(pc)
-        pnames.append(_spec_field_name(col, kind))
-        ptypes.append(transform_result_type(kind, ice_t))
-    data_dir = os.path.join(table, "data")
-    os.makedirs(data_dir, exist_ok=True)
-    staging = os.path.join(table, f".staging-{_write_token()}")
-    shutil.rmtree(staging, ignore_errors=True)
-    if distribute:
-        out = out.hint("rebalance", *pcols)
-    out.write.mode("overwrite").partitionBy(*pcols).parquet(staging)
+        out = out.withColumn(f"__p{i}", pexpr)
+        fields[f"__p{i}"] = (_spec_field_name(col, kind), vt)
 
     def parse_val(raw: str, vt: str):
         if raw == "__HIVE_DEFAULT_PARTITION__":
@@ -1157,35 +1088,24 @@ def _stage_partitioned_files(
         # strip the stage-time 'v' disambiguation prefix (see above)
         return raw[1:] if vt == "string" else raw
 
+    data_dir = os.path.join(table, "data")
+    staged = lakecommit.stage_parquet(
+        out,
+        table,
+        lambda rel: os.path.join(
+            data_dir, f"{prefix}-{lakecommit.token()}-{os.path.basename(rel)}"
+        ),
+        list(fields),
+        distribute,
+    )
     descs = []
-    for root, _dirs, files in os.walk(staging):
-        for name in sorted(files):
-            if not name.endswith(".parquet"):
-                continue
-            rel = os.path.relpath(root, staging)
-            parts = {}
-            for seg in [] if rel == "." else rel.split(os.sep):
-                k, _, v = seg.partition("=")
-                idx = pcols.index(k)
-                parts[pnames[idx]] = parse_val(v, ptypes[idx])
-            src = os.path.join(root, name)
-            dest = os.path.join(data_dir, f"{prefix}-{_write_token()}-{name}")
-            os.rename(src, dest)
-            n_rows = pq.ParquetFile(dest).metadata.num_rows
-            if n_rows == 0:
-                os.remove(dest)
-                continue
-            descs.append(
-                {
-                    "file_path": dest,
-                    "file_format": "PARQUET",
-                    "record_count": n_rows,
-                    "file_size_in_bytes": os.path.getsize(dest),
-                    "partition": parts,
-                    "_bounds_by_name": _footer_bounds(dest),
-                }
-            )
-    shutil.rmtree(staging, ignore_errors=True)
+    for f in staged:
+        d = _data_file(f, content)
+        if partition_by:
+            d["partition"] = {
+                fields[k][0]: parse_val(v, fields[k][1]) for k, v in f.parts.items()
+            }
+        descs.append(d)
     return descs
 
 
@@ -1269,34 +1189,52 @@ def _load_meta_versioned(table: str) -> tuple[dict | None, int]:
 
 
 def _try_publish_metadata(table: str, version: int, new_meta: dict) -> bool:
-    """Put-if-absent publish of ``v{version}.metadata.json`` — fsync
-    the temp file, then ``os.link`` to the final name; link-to-existing
-    raises, which IS the optimistic-commit semantics (the same log
-    store contract as ``delta_py.try_commit``). The version hint is
-    advisory (readers take the max on-disk version) and refreshed
-    best-effort after a win."""
+    """Put-if-absent publish of ``v{version}.metadata.json``
+    (``lakecommit.publish_if_absent``). The version hint is advisory
+    (readers take the max on-disk version) and refreshed best-effort
+    after a win."""
     mdir = os.path.join(table, "metadata")
-    os.makedirs(mdir, exist_ok=True)
     path = os.path.join(mdir, f"v{version}.metadata.json")
-    tmp = path + f".tmp{_write_token()}"
+    if not lakecommit.publish_if_absent(path, json.dumps(new_meta, indent=1)):
+        return False
+    hint = os.path.join(mdir, "version-hint.text")
+    tmp = hint + f".tmp{lakecommit.token()}"
     with open(tmp, "w") as fh:
-        json.dump(new_meta, fh, indent=1)
-        fh.flush()
-        os.fsync(fh.fileno())
-    try:
-        os.link(tmp, path)
-        won = True
-    except FileExistsError:
-        won = False
-    finally:
-        os.remove(tmp)
-    if won:
-        hint = os.path.join(mdir, "version-hint.text")
-        tmp = hint + f".tmp{_write_token()}"
-        with open(tmp, "w") as fh:
-            fh.write(str(version))
-        os.replace(tmp, hint)
-    return won
+        fh.write(str(version))
+    os.replace(tmp, hint)
+    return True
+
+
+def _default_spec_fields(meta: dict | None) -> list[dict] | None:
+    """The stored fields of the table's default partition spec."""
+    sid = (meta or {}).get("default-spec-id", 0)
+    return next(
+        (
+            s["fields"]
+            for s in (meta or {}).get("partition-specs") or []
+            if s.get("spec-id") == sid
+        ),
+        None,
+    )
+
+
+def _default_partition_by(
+    meta: dict | None, ice_schema: dict | None = None
+) -> list[tuple[str, str]] | None:
+    """The default spec as ``[(column, transform)]`` with column names
+    from ``ice_schema`` (default: the table's current schema), or None
+    for an unpartitioned (or not yet created) table."""
+    stored = _default_spec_fields(meta)
+    if not stored:
+        return None
+    if ice_schema is None:
+        ice_schema = next(
+            s
+            for s in meta.get("schemas") or []
+            if s.get("schema-id") == meta.get("current-schema-id", 0)
+        )
+    by_id = {f["id"]: f["name"] for f in ice_schema["fields"]}
+    return [(by_id[f["source-id"]], f["transform"]) for f in stored]
 
 
 def _resolve_spec(
@@ -1312,12 +1250,7 @@ def _resolve_spec(
     from map_reduce_spark.sources.iceberg_transforms import parse_transform
 
     by_name = {f["name"]: f for f in schema_fields}
-    stored = None
-    if meta is not None:
-        sid = meta.get("default-spec-id", 0)
-        for s in meta.get("partition-specs") or []:
-            if s.get("spec-id") == sid:
-                stored = s["fields"]
+    stored = _default_spec_fields(meta)
     if stored:
         if partition_by is not None:
             by_id = {f["id"]: f["name"] for f in schema_fields}
@@ -1347,6 +1280,27 @@ def _resolve_spec(
             }
         )
     return fields
+
+
+def _spec_value_types(
+    spec_fields: list[dict], schema_fields: list[dict]
+) -> list[tuple[str, str]]:
+    """(spec field name, partition value type) for each spec field."""
+    from map_reduce_spark.sources.iceberg_transforms import (
+        parse_transform,
+        transform_result_type,
+    )
+
+    by_id = {f["id"]: f for f in schema_fields}
+    return [
+        (
+            f["name"],
+            transform_result_type(
+                parse_transform(f["transform"])[0], by_id[f["source-id"]]["type"]
+            ),
+        )
+        for f in spec_fields
+    ]
 
 
 def _build_manifest_entries(
@@ -1427,7 +1381,6 @@ def _commit_snapshot(
     dtypes=None,
     partition_by: list[tuple[str, str]] | None = None,
     txn: tuple[str, int] | None = None,
-    _max_retries: int = 20,
 ) -> int | None:
     """The optimistic commit loop: build the new snapshot's manifest +
     manifest list + metadata against the CURRENT table state, publish
@@ -1441,27 +1394,18 @@ def _commit_snapshot(
     files' parquet footers; the manifest-list row carries per-spec-
     field value summaries — the three metadata layers the reader's
     pruning consumes."""
-    from map_reduce_spark.sources.iceberg_transforms import (
-        parse_transform,
-        sv_serialize,
-        transform_result_type,
-    )
-
     av = make_generic_avro()
     mdir = os.path.join(table, "metadata")
     os.makedirs(mdir, exist_ok=True)
-    for _ in range(_max_retries):
+
+    def attempt():
         meta, version = _load_meta_versioned(table)
         snap_id = version + 1
         if txn is not None and _txn_ledger(meta, txn[0]) >= txn[1]:
             # post-commit replay (possibly our own appId's previous
             # incarnation winning a race mid-loop): orphan this
             # attempt's staged data files, commit nothing
-            for d in entry_descs:
-                try:
-                    os.remove(d["file_path"])
-                except FileNotFoundError:
-                    pass
+            lakecommit.discard(d["file_path"] for d in entry_descs)
             return None
         if dtypes is not None:
             schemas, cur_schema_id, last_col = _evolve_iceberg_schemas(meta, dtypes)
@@ -1476,19 +1420,9 @@ def _commit_snapshot(
         )
         spec_fields = _resolve_spec(meta, partition_by, cur_schema["fields"])
         default_sid = meta.get("default-spec-id", 0) if meta else 0
-        by_id = {f["id"]: f for f in cur_schema["fields"]}
         by_name = {f["name"]: f for f in cur_schema["fields"]}
-        spec_value_types = [
-            (
-                f["name"],
-                transform_result_type(
-                    parse_transform(f["transform"])[0],
-                    by_id[f["source-id"]]["type"],
-                ),
-            )
-            for f in spec_fields
-        ]
-        token = _write_token()
+        spec_value_types = _spec_value_types(spec_fields, cur_schema["fields"])
+        token = lakecommit.token()
         carry_partition = manifest_content == 0 and bool(spec_fields)
         entries = _build_manifest_entries(
             entry_descs, by_name, snap_id, carry_partition
@@ -1585,12 +1519,10 @@ def _commit_snapshot(
         # lost the race: drop this attempt's manifest pair and rebuild
         # against the winner's state (staged data files keep their
         # collision-free names and simply re-wrap in the next manifest)
-        for p in (manifest, mlist):
-            try:
-                os.remove(p)
-            except FileNotFoundError:
-                pass
-    raise RuntimeError(f"iceberg commit on {table!r} lost {_max_retries} races")
+        lakecommit.discard((manifest, mlist))
+        return lakecommit.LOST
+
+    return lakecommit.retry_commit(f"iceberg {operation} on {table!r}", attempt)
 
 
 def append_iceberg_snapshot(
@@ -1615,33 +1547,8 @@ def append_iceberg_snapshot(
     Appends to an existing partitioned table inherit its spec (pass
     None); a different spec is refused (spec evolution unclaimed)."""
     if partition_by is None:
-        meta, _v = _load_meta_versioned(table)
-        if meta is not None:
-            sid = meta.get("default-spec-id", 0)
-            stored = next(
-                (
-                    s["fields"]
-                    for s in meta.get("partition-specs") or []
-                    if s.get("spec-id") == sid
-                ),
-                None,
-            )
-            if stored:
-                cur = next(
-                    s
-                    for s in meta.get("schemas") or []
-                    if s.get("schema-id") == meta.get("current-schema-id", 0)
-                )
-                by_id = {f["id"]: f["name"] for f in cur["fields"]}
-                partition_by = [
-                    (by_id[f["source-id"]], f["transform"]) for f in stored
-                ]
-    if partition_by:
-        descs = _stage_partitioned_files(spark_df, table, "s", partition_by)
-    else:
-        descs = _stage_parquet_files(spark_df, table, "s")
-    for d in descs:
-        d["content"] = 0
+        partition_by = _default_partition_by(_load_meta_versioned(table)[0])
+    descs = _stage_parquet_files(spark_df, table, "s", partition_by=partition_by)
     return _commit_snapshot(
         table, descs, manifest_content=0, operation="append",
         dtypes=spark_df.dtypes, partition_by=partition_by,
@@ -1696,11 +1603,9 @@ def commit_positional_deletes(
         .repartitionByRange(max(out_files, 1), "file_path", "pos")
         .sortWithinPartitions("file_path", "pos")
     )
-    descs = _stage_parquet_files(hits, table, "delete")
+    descs = _stage_parquet_files(hits, table, "delete", content=1)
     if not descs:
         return snap["snapshot-id"]
-    for d in descs:
-        d["content"] = 1
     return _commit_snapshot(
         table, descs, manifest_content=1, operation="delete", dtypes=None
     )
@@ -1731,7 +1636,7 @@ def expire_snapshots(table: str, keep_last: int = 1) -> dict:
                     out.add(os.path.abspath(_local(e["data_file"]["file_path"])))
         return out
 
-    for _ in range(20):
+    def attempt():
         meta, version = _load_meta_versioned(table)
         if meta is None:
             raise FileNotFoundError(f"no Iceberg metadata at {table!r}")
@@ -1744,21 +1649,23 @@ def expire_snapshots(table: str, keep_last: int = 1) -> dict:
         if not expired:
             return {"expired_snapshots": 0, "removed_files": 0, "version": version}
         new_meta = dict(meta, snapshots=kept)
-        if _try_publish_metadata(table, version + 1, new_meta):
-            orphans = _refs(meta, expired) - _refs(meta, kept)
-            removed = 0
-            for p in sorted(orphans):
-                try:
-                    os.remove(p)
-                    removed += 1
-                except FileNotFoundError:
-                    pass
-            return {
-                "expired_snapshots": len(expired),
-                "removed_files": removed,
-                "version": version + 1,
-            }
-    raise RuntimeError(f"expire_snapshots on {table!r} lost 20 races")
+        if not _try_publish_metadata(table, version + 1, new_meta):
+            return lakecommit.LOST
+        orphans = _refs(meta, expired) - _refs(meta, kept)
+        removed = 0
+        for p in sorted(orphans):
+            try:
+                os.remove(p)
+                removed += 1
+            except FileNotFoundError:
+                pass
+        return {
+            "expired_snapshots": len(expired),
+            "removed_files": removed,
+            "version": version + 1,
+        }
+
+    return lakecommit.retry_commit(f"expire_snapshots on {table!r}", attempt)
 
 
 def iceberg_files_table(
@@ -1953,22 +1860,15 @@ def ensure_iceberg_fixture(spark: SparkSession, sf_dir: str) -> str:
     published. The read path then exercises the full metadata chain:
     version hint -> metadata.json -> manifest list (Avro) -> manifests
     (Avro) -> live parquet set."""
-    import tempfile
-
-    key = hashlib.md5(os.path.abspath(sf_dir).encode()).hexdigest()[:12]
-    dest = os.path.join(tempfile.gettempdir(), f"mr_spark_iceberg_{key}")
+    dest = lakecommit.fixture_dir("iceberg", sf_dir)
     if os.path.isdir(dest):
         return dest
-    tmp = f"{dest}.tmp{os.getpid()}"
-    shutil.rmtree(tmp, ignore_errors=True)
+    tmp = lakecommit.fixture_tmp(dest)
     d = _lineitem_frame(spark, sf_dir)
     b8 = _li_bucket(8)
     append_iceberg_snapshot(d.filter(b8 < 5).repartition(4), tmp)
     append_iceberg_snapshot(d.filter(b8 >= 5).repartition(2), tmp)
-    try:
-        os.rename(tmp, dest)
-    except OSError:
-        shutil.rmtree(tmp, ignore_errors=True)  # lost the race: theirs won
+    lakecommit.publish_fixture(tmp, dest)
     return dest
 
 
@@ -1979,14 +1879,10 @@ def ensure_iceberg_renamed_fixture(spark: SparkSession, sf_dir: str) -> str:
     `price_cents` recording spec name mapping, snapshot 2 appends
     under the new name. Reading it exercises the name-mapping
     resolution path on the pre-rename files."""
-    import tempfile
-
-    key = hashlib.md5(os.path.abspath(sf_dir).encode()).hexdigest()[:12]
-    dest = os.path.join(tempfile.gettempdir(), f"mr_spark_iceberg_nm_{key}")
+    dest = lakecommit.fixture_dir("iceberg_nm", sf_dir)
     if os.path.isdir(dest):
         return dest
-    tmp = f"{dest}.tmp{os.getpid()}"
-    shutil.rmtree(tmp, ignore_errors=True)
+    tmp = lakecommit.fixture_tmp(dest)
     d = _lineitem_frame(spark, sf_dir)
     b8 = _li_bucket(8)
     append_iceberg_snapshot(
@@ -1997,10 +1893,7 @@ def ensure_iceberg_renamed_fixture(spark: SparkSession, sf_dir: str) -> str:
     )
     rename_iceberg_column(tmp, "l_price_legacy", "price_cents")
     append_iceberg_snapshot(d.filter(b8 >= 5).repartition(2), tmp)
-    try:
-        os.rename(tmp, dest)
-    except OSError:
-        shutil.rmtree(tmp, ignore_errors=True)  # lost the race: theirs won
+    lakecommit.publish_fixture(tmp, dest)
     return dest
 
 
@@ -2390,14 +2283,10 @@ def ensure_iceberg_changelog_fixture(spark: SparkSession, sf_dir: str) -> str:
     the changelog over the full range must net to exactly
     (all bulk rows as INSERTs) + (the deleted rows as DELETEs) +
     (the second append as INSERTs)."""
-    import tempfile
-
-    key = hashlib.md5(os.path.abspath(sf_dir).encode()).hexdigest()[:12]
-    dest = os.path.join(tempfile.gettempdir(), f"mr_spark_iceberg_cl_{key}")
+    dest = lakecommit.fixture_dir("iceberg_cl", sf_dir)
     if os.path.isdir(dest):
         return dest
-    tmp = f"{dest}.tmp{os.getpid()}"
-    shutil.rmtree(tmp, ignore_errors=True)
+    tmp = lakecommit.fixture_tmp(dest)
     d = _orders_frame(spark, sf_dir)
     b8 = (
         F.conv(F.substring(F.md5(F.col("o_orderkey").cast("string")), 1, 8), 16, 10)
@@ -2412,10 +2301,7 @@ def ensure_iceberg_changelog_fixture(spark: SparkSession, sf_dir: str) -> str:
         spark, tmp, (F.col("o_orderstatus") == "F") & (b16 == 0)
     )
     append_iceberg_snapshot(d.filter(b8 >= 6).repartition(2), tmp)
-    try:
-        os.rename(tmp, dest)
-    except OSError:
-        shutil.rmtree(tmp, ignore_errors=True)  # lost the race: theirs won
+    lakecommit.publish_fixture(tmp, dest)
     return dest
 
 
@@ -2481,21 +2367,14 @@ def ensure_iceberg_mor_fixture(spark: SparkSession, sf_dir: str) -> str:
     md5-bucket8 >= 6 (no data file rewritten). Built once per sf_dir
     under the system tmp dir, every mutation inside the build, then
     atomic-rename published — re-runs only read."""
-    import tempfile
-
-    key = hashlib.md5(os.path.abspath(sf_dir).encode()).hexdigest()[:12]
-    dest = os.path.join(tempfile.gettempdir(), f"mr_spark_iceberg_mor_{key}")
+    dest = lakecommit.fixture_dir("iceberg_mor", sf_dir)
     if os.path.isdir(dest):
         return dest
-    tmp = f"{dest}.tmp{os.getpid()}"
-    shutil.rmtree(tmp, ignore_errors=True)
+    tmp = lakecommit.fixture_tmp(dest)
     d = _lineitem_frame(spark, sf_dir)
     append_iceberg_snapshot(d.repartition(4), tmp)
     commit_positional_deletes(spark, tmp, _li_bucket(8) >= 6)
-    try:
-        os.rename(tmp, dest)
-    except OSError:
-        shutil.rmtree(tmp, ignore_errors=True)  # lost the race: theirs won
+    lakecommit.publish_fixture(tmp, dest)
     return dest
 
 
@@ -2572,14 +2451,10 @@ def ensure_iceberg_expire_fixture(spark: SparkSession, sf_dir: str) -> str:
     b8>=6) then ``expire_snapshots(keep_last=1)`` — all inside the
     build, with the expiry's result recorded in the table dir so the
     registered query can report what actually happened."""
-    import tempfile
-
-    key = hashlib.md5(os.path.abspath(sf_dir).encode()).hexdigest()[:12]
-    dest = os.path.join(tempfile.gettempdir(), f"mr_spark_iceberg_exp_{key}")
+    dest = lakecommit.fixture_dir("iceberg_exp", sf_dir)
     if os.path.isdir(dest):
         return dest
-    tmp = f"{dest}.tmp{os.getpid()}"
-    shutil.rmtree(tmp, ignore_errors=True)
+    tmp = lakecommit.fixture_tmp(dest)
     d = _lineitem_frame(spark, sf_dir)
     b8 = _li_bucket(8)
     append_iceberg_snapshot(d.filter(b8 < 5).repartition(2), tmp)
@@ -2588,10 +2463,7 @@ def ensure_iceberg_expire_fixture(spark: SparkSession, sf_dir: str) -> str:
     result = expire_snapshots(tmp, keep_last=1)
     with open(os.path.join(tmp, "expire_result.json"), "w") as fh:
         json.dump(result, fh)
-    try:
-        os.rename(tmp, dest)
-    except OSError:
-        shutil.rmtree(tmp, ignore_errors=True)
+    lakecommit.publish_fixture(tmp, dest)
     return dest
 
 
@@ -2601,15 +2473,11 @@ def ensure_iceberg_orphan_fixture(spark: SparkSession, sf_dir: str) -> str:
     staged output) and a crashed writer's ``.staging-`` directory —
     then swept by ``remove_orphan_iceberg_files`` at build time, the
     count recorded next to the table."""
-    import tempfile
-
     base = ensure_iceberg_fixture(spark, sf_dir)
-    key = hashlib.md5(os.path.abspath(sf_dir).encode()).hexdigest()[:12]
-    dest = os.path.join(tempfile.gettempdir(), f"mr_spark_iceberg_orph_{key}")
+    dest = lakecommit.fixture_dir("iceberg_orph", sf_dir)
     if os.path.isdir(dest):
         return dest
-    tmp = f"{dest}.tmp{os.getpid()}"
-    shutil.rmtree(tmp, ignore_errors=True)
+    tmp = lakecommit.fixture_tmp(dest)
     shutil.copytree(base, tmp, copy_function=os.link)
     data_dir = os.path.join(tmp, "data")
     some = next(
@@ -2624,10 +2492,7 @@ def ensure_iceberg_orphan_fixture(spark: SparkSession, sf_dir: str) -> str:
     n = remove_orphan_iceberg_files(tmp)
     with open(os.path.join(tmp, "orphan_result.json"), "w") as fh:
         json.dump({"removed": n}, fh)
-    try:
-        os.rename(tmp, dest)
-    except OSError:
-        shutil.rmtree(tmp, ignore_errors=True)  # lost the race: theirs won
+    lakecommit.publish_fixture(tmp, dest)
     return dest
 
 
@@ -2711,24 +2576,17 @@ def ensure_iceberg_evo_fixture(spark: SparkSession, sf_dir: str) -> str:
     metadata (``_evolve_iceberg_schemas`` preserves history) and each
     snapshot records its own schema-id, so travel renders each under
     its schema (the spec's contract)."""
-    import tempfile
-
-    key = hashlib.md5(os.path.abspath(sf_dir).encode()).hexdigest()[:12]
-    dest = os.path.join(tempfile.gettempdir(), f"mr_spark_icebergevo_{key}")
+    dest = lakecommit.fixture_dir("icebergevo", sf_dir)
     if os.path.isdir(dest):
         return dest
-    tmp = f"{dest}.tmp{os.getpid()}"
-    shutil.rmtree(tmp, ignore_errors=True)
+    tmp = lakecommit.fixture_tmp(dest)
     d = _lineitem_frame(spark, sf_dir)
     b8 = _li_bucket(8)
     narrow = d.filter(b8 < 5).select("l_returnflag", "price_cents")
     wide = d.filter(b8 >= 5).select("l_returnflag", "price_cents", "qty_cents")
     append_iceberg_snapshot(narrow.repartition(2), tmp)
     append_iceberg_snapshot(wide.repartition(2), tmp)
-    try:
-        os.rename(tmp, dest)
-    except OSError:
-        shutil.rmtree(tmp, ignore_errors=True)
+    lakecommit.publish_fixture(tmp, dest)
     return dest
 
 
@@ -2812,12 +2670,11 @@ def commit_equality_deletes(
         raise ValueError(f"equality columns {missing} not in table schema")
     ids = [int(by_name[c]) for c in equality_cols]
     descs = _stage_parquet_files(
-        delete_df.select(*equality_cols).distinct(), table, "eqdelete"
+        delete_df.select(*equality_cols).distinct(), table, "eqdelete", content=2
     )
     if not descs:
         return snap["snapshot-id"]
     for d in descs:
-        d["content"] = 2
         d["equality_ids"] = ids
     return _commit_snapshot(
         table, descs, manifest_content=1, operation="delete", dtypes=None
@@ -2833,14 +2690,10 @@ def ensure_iceberg_eq_fixture(spark: SparkSession, sf_dir: str) -> str:
     bucket-7 rows SURVIVE (their data sequence exceeds the delete's) —
     so the current snapshot equals lineitem WHERE b8 != 6, and any
     sequence-ordering slip double-counts or empties bucket 7."""
-    import tempfile
-
-    key = hashlib.md5(os.path.abspath(sf_dir).encode()).hexdigest()[:12]
-    dest = os.path.join(tempfile.gettempdir(), f"mr_spark_iceberg_eq_{key}")
+    dest = lakecommit.fixture_dir("iceberg_eq", sf_dir)
     if os.path.isdir(dest):
         return dest
-    tmp = f"{dest}.tmp{os.getpid()}"
-    shutil.rmtree(tmp, ignore_errors=True)
+    tmp = lakecommit.fixture_tmp(dest)
     d = _lineitem_frame(spark, sf_dir)
     b8 = _li_bucket(8)
     append_iceberg_snapshot(d.repartition(4), tmp)
@@ -2848,10 +2701,7 @@ def ensure_iceberg_eq_fixture(spark: SparkSession, sf_dir: str) -> str:
         spark, tmp, d.filter(b8 >= 6), ["l_orderkey", "l_linenumber"]
     )
     append_iceberg_snapshot(d.filter(b8 == 7).repartition(2), tmp)
-    try:
-        os.rename(tmp, dest)
-    except OSError:
-        shutil.rmtree(tmp, ignore_errors=True)
+    lakecommit.publish_fixture(tmp, dest)
     return dest
 
 
@@ -2945,14 +2795,10 @@ def ensure_iceberg_part_fixture(spark: SparkSession, sf_dir: str) -> str:
     price ranges — the layout that makes the footer-bounds min/max
     skipping measurable. Cached under tmp per sf_dir, atomic-rename
     published."""
-    import tempfile
-
-    key = hashlib.md5(os.path.abspath(sf_dir).encode()).hexdigest()[:12]
-    dest = os.path.join(tempfile.gettempdir(), f"mr_spark_iceberg_part_{key}")
+    dest = lakecommit.fixture_dir("iceberg_part", sf_dir)
     if os.path.isdir(dest):
         return dest
-    tmp = f"{dest}.tmp{os.getpid()}"
-    shutil.rmtree(tmp, ignore_errors=True)
+    tmp = lakecommit.fixture_tmp(dest)
     d = _orders_frame(spark, sf_dir)
     even = d.filter(F.col("o_orderkey") % 2 == 0)
     odd = d.filter(F.col("o_orderkey") % 2 == 1)
@@ -2960,10 +2806,7 @@ def ensure_iceberg_part_fixture(spark: SparkSession, sf_dir: str) -> str:
         even.repartitionByRange(2, "totalprice_cents"), tmp, _PART_SPEC
     )
     append_iceberg_snapshot(odd.repartitionByRange(2, "totalprice_cents"), tmp)
-    try:
-        os.rename(tmp, dest)
-    except OSError:
-        shutil.rmtree(tmp, ignore_errors=True)  # lost the race: theirs won
+    lakecommit.publish_fixture(tmp, dest)
     return dest
 
 
@@ -3031,14 +2874,10 @@ def ensure_iceberg_bucket_time_fixture(spark: SparkSession, sf_dir: str) -> str:
     write path the r10 temporal-hashing fix covers (pandas would hash
     datetime64[ns] nanoseconds; the spec hashes epoch µs / day
     ordinals). Two appends so manifest-level summaries engage."""
-    import tempfile
-
-    key = hashlib.md5(os.path.abspath(sf_dir).encode()).hexdigest()[:12]
-    dest = os.path.join(tempfile.gettempdir(), f"mr_spark_iceberg_bt_{key}")
+    dest = lakecommit.fixture_dir("iceberg_bt", sf_dir)
     if os.path.isdir(dest):
         return dest
-    tmp = f"{dest}.tmp{os.getpid()}"
-    shutil.rmtree(tmp, ignore_errors=True)
+    tmp = lakecommit.fixture_tmp(dest)
     d = _orders_frame(spark, sf_dir).withColumn(
         "od_day", F.col("o_orderdate").cast("date")
     )
@@ -3047,10 +2886,7 @@ def ensure_iceberg_bucket_time_fixture(spark: SparkSession, sf_dir: str) -> str:
         d.filter(F.col("o_orderkey") % 2 == 0).repartition(2), tmp, spec
     )
     append_iceberg_snapshot(d.filter(F.col("o_orderkey") % 2 == 1).repartition(2), tmp)
-    try:
-        os.rename(tmp, dest)
-    except OSError:
-        shutil.rmtree(tmp, ignore_errors=True)  # lost the race: theirs won
+    lakecommit.publish_fixture(tmp, dest)
     return dest
 
 
@@ -3178,11 +3014,6 @@ def _try_commit_rewrite(
     inheritance is unchanged; their summaries carry over (they may
     over-cover after filtering, which is sound — pruning bounds only
     ever need to be INCLUSIVE)."""
-    from map_reduce_spark.sources.iceberg_transforms import (
-        parse_transform,
-        transform_result_type,
-    )
-
     av = make_generic_avro()
     mdir = os.path.join(table, "metadata")
     # the commit is PINNED to the state the caller planned against
@@ -3197,20 +3028,10 @@ def _try_commit_rewrite(
     cur_schema_id = meta.get("current-schema-id", 0)
     cur_schema = next(s for s in schemas if s.get("schema-id") == cur_schema_id)
     spec_fields = _resolve_spec(meta, None, cur_schema["fields"])
-    by_id = {f["id"]: f for f in cur_schema["fields"]}
     by_name = {f["name"]: f for f in cur_schema["fields"]}
-    spec_value_types = [
-        (
-            f["name"],
-            transform_result_type(
-                parse_transform(f["transform"])[0],
-                by_id[f["source-id"]]["type"],
-            ),
-        )
-        for f in spec_fields
-    ]
+    spec_value_types = _spec_value_types(spec_fields, cur_schema["fields"])
     _local = _make_localizer(table, meta)
-    token = _write_token()
+    token = lakecommit.token()
     rows = []
     scratch: list[str] = []  # this attempt's manifest files, removed on loss
     if meta.get("snapshots"):
@@ -3299,12 +3120,24 @@ def _try_commit_rewrite(
     # current root would orphan every pre-rewrite path.
     if _try_publish_metadata(table, snap_id, new_meta):
         return snap_id
-    for p in scratch:
-        try:
-            os.remove(p)
-        except FileNotFoundError:
-            pass
+    lakecommit.discard(scratch)
     return None
+
+
+def _rewrite_attempt(
+    table: str,
+    victim_locals: set[str],
+    new_descs: list[dict],
+    operation: str,
+    base: tuple[dict, int],
+):
+    """``_try_commit_rewrite`` for a retry loop: a lost race removes the
+    attempt's staged data files and returns ``lakecommit.LOST``."""
+    snap_id = _try_commit_rewrite(table, victim_locals, new_descs, operation, base)
+    if snap_id is None:
+        lakecommit.discard(d["file_path"] for d in new_descs)
+        return lakecommit.LOST
+    return snap_id
 
 
 _MERGE_INLIST_MAX = 10_000
@@ -3315,7 +3148,6 @@ def merge_iceberg_upsert(
     table: str,
     source: DataFrame,
     key: str,
-    _max_retries: int = 5,
 ) -> int:
     """Copy-on-write MERGE (upsert) into an Iceberg table — the
     delta_py.merge_upsert twin: matched target rows take the source
@@ -3363,7 +3195,7 @@ def merge_iceberg_upsert(
     src = source.withColumn(key, guarded_key).persist()
     try:
         return _merge_iceberg_upsert_inner(
-            spark, table, src, key, schema, ice_schema0, _max_retries
+            spark, table, src, key, schema, ice_schema0
         )
     finally:
         src.unpersist(blocking=True)
@@ -3376,7 +3208,6 @@ def _merge_iceberg_upsert_inner(
     key: str,
     schema: StructType,
     ice_schema0: dict,
-    _max_retries: int,
 ) -> int:
     from map_reduce_spark.sources.delta_py import _control_plane_rows
 
@@ -3401,7 +3232,8 @@ def _merge_iceberg_upsert_inner(
         preds = [(key, "in", key_set)] if key_set else None
     cols = [f.name for f in schema.fields]
     src_named = src.select(*[F.col(c).alias(f"__s_{c}") for c in cols])
-    for _ in range(_max_retries):
+
+    def attempt():
         meta, base_version = _load_meta_versioned(table)
         snap = _pick_snapshot(meta, None)
         plan = scan_plan_for_snapshot(table, meta, snap, predicates=preds)
@@ -3435,39 +3267,19 @@ def _merge_iceberg_upsert_inner(
             out = rewritten.unionByName(inserts)
         else:  # no file can hold a match: pure insert
             out = src_named.select(*[F.col(f"__s_{c}").alias(c) for c in cols])
-        sid = meta.get("default-spec-id", 0)
-        stored = next(
-            (
-                s["fields"]
-                for s in meta.get("partition-specs") or []
-                if s.get("spec-id") == sid
-            ),
-            None,
+        descs = _stage_parquet_files(
+            out, table, "m", distribute=True,
+            partition_by=_default_partition_by(meta, ice_schema0),
         )
-        if stored:
-            by_id = {f["id"]: f["name"] for f in ice_schema0["fields"]}
-            partition_by = [(by_id[f["source-id"]], f["transform"]) for f in stored]
-            descs = _stage_partitioned_files(
-                out, table, "m", partition_by, distribute=True
-            )
-        else:
-            descs = _stage_parquet_files(out, table, "m", distribute=True)
-        for d in descs:
-            d["content"] = 0
-        snap_id = _try_commit_rewrite(
+        return _rewrite_attempt(
             table,
             {os.path.abspath(p) for p in cand},
             descs,
-            base=(meta, base_version),
+            "overwrite",
+            (meta, base_version),
         )
-        if snap_id is not None:
-            return snap_id
-        for d in descs:  # lost the race: drop this attempt's data files
-            try:
-                os.remove(d["file_path"])
-            except FileNotFoundError:
-                pass
-    raise RuntimeError(f"iceberg merge on {table!r} lost {_max_retries} races")
+
+    return lakecommit.retry_commit(f"iceberg merge on {table!r}", attempt)
 
 
 def _cust_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3491,23 +3303,16 @@ def ensure_iceberg_cust_fixture(spark: SparkSession, sf_dir: str) -> str:
     the per-file bounds — the layout that gives the COW merge real
     write-amplification numbers. Cached/atomic-published like every
     fixture."""
-    import tempfile
-
-    key = hashlib.md5(os.path.abspath(sf_dir).encode()).hexdigest()[:12]
-    dest = os.path.join(tempfile.gettempdir(), f"mr_spark_iceberg_cust_{key}")
+    dest = lakecommit.fixture_dir("iceberg_cust", sf_dir)
     if os.path.isdir(dest):
         return dest
-    tmp = f"{dest}.tmp{os.getpid()}"
-    shutil.rmtree(tmp, ignore_errors=True)
+    tmp = lakecommit.fixture_tmp(dest)
     append_iceberg_snapshot(
         _cust_frame(spark, sf_dir).repartitionByRange(6, "c_custkey"),
         tmp,
         [("c_nationkey", "bucket[4]")],
     )
-    try:
-        os.rename(tmp, dest)
-    except OSError:
-        shutil.rmtree(tmp, ignore_errors=True)  # lost the race: theirs won
+    lakecommit.publish_fixture(tmp, dest)
     return dest
 
 
@@ -3632,30 +3437,9 @@ def append_iceberg_stream_batch(
     meta, _v = _load_meta_versioned(table)
     if _txn_ledger(meta, app_id) >= epoch_id:
         return None
-    if partition_by is None and meta is not None:
-        sid = meta.get("default-spec-id", 0)
-        stored = next(
-            (
-                s["fields"]
-                for s in meta.get("partition-specs") or []
-                if s.get("spec-id") == sid
-            ),
-            None,
-        )
-        if stored:
-            cur = next(
-                s
-                for s in meta.get("schemas") or []
-                if s.get("schema-id") == meta.get("current-schema-id", 0)
-            )
-            by_id = {f["id"]: f["name"] for f in cur["fields"]}
-            partition_by = [(by_id[f["source-id"]], f["transform"]) for f in stored]
-    if partition_by:
-        descs = _stage_partitioned_files(df, table, "s", partition_by)
-    else:
-        descs = _stage_parquet_files(df, table, "s")
-    for d in descs:
-        d["content"] = 0
+    if partition_by is None:
+        partition_by = _default_partition_by(meta)
+    descs = _stage_parquet_files(df, table, "s", partition_by=partition_by)
     return _commit_snapshot(
         table,
         descs,
@@ -3737,9 +3521,7 @@ def streaming_iceberg_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def delete_iceberg_where(
-    spark: SparkSession, table: str, predicate, _max_retries: int = 5
-) -> int:
+def delete_iceberg_where(spark: SparkSession, table: str, predicate) -> int:
     """Copy-on-write DELETE — the delta_py.delete_where twin: find the
     files actually CONTAINING matching rows (file-granularity control
     plane via ``_metadata.file_path`` on one scan), rewrite only those
@@ -3757,7 +3539,8 @@ def delete_iceberg_where(
     from map_reduce_spark.sources.delta_py import _control_plane_rows
 
     pred_true = F.coalesce(predicate, F.lit(False))
-    for _ in range(_max_retries):
+
+    def attempt():
         meta, base_version = _load_meta_versioned(table)
         snap = _pick_snapshot(meta, None)
         plan = scan_plan_for_snapshot(table, meta, snap)
@@ -3785,36 +3568,13 @@ def delete_iceberg_where(
         keep_rows = _mapped_parquet_scan(
             spark, meta, ice_schema, sorted(victims)
         ).filter(~pred_true)
-        sid = meta.get("default-spec-id", 0)
-        stored = next(
-            (
-                s["fields"]
-                for s in meta.get("partition-specs") or []
-                if s.get("spec-id") == sid
-            ),
-            None,
+        descs = _stage_parquet_files(
+            keep_rows, table, "d", distribute=True,
+            partition_by=_default_partition_by(meta, ice_schema),
         )
-        if stored:
-            by_id = {f["id"]: f["name"] for f in ice_schema["fields"]}
-            partition_by = [(by_id[f["source-id"]], f["transform"]) for f in stored]
-            descs = _stage_partitioned_files(
-                keep_rows, table, "d", partition_by, distribute=True
-            )
-        else:
-            descs = _stage_parquet_files(keep_rows, table, "d", distribute=True)
-        for d in descs:
-            d["content"] = 0
-        snap_id = _try_commit_rewrite(
-            table, victims, descs, operation="delete", base=(meta, base_version)
-        )
-        if snap_id is not None:
-            return snap_id
-        for d in descs:  # lost the race: re-derive against the winner
-            try:
-                os.remove(d["file_path"])
-            except FileNotFoundError:
-                pass
-    raise RuntimeError(f"iceberg delete on {table!r} lost {_max_retries} races")
+        return _rewrite_attempt(table, victims, descs, "delete", (meta, base_version))
+
+    return lakecommit.retry_commit(f"iceberg delete on {table!r}", attempt)
 
 
 @register(
@@ -3875,7 +3635,6 @@ def compact_iceberg_files(
     table: str,
     out_files: int = 4,
     order_by: tuple[str, ...] = (),
-    _max_retries: int = 5,
 ) -> int:
     """Rewrite the current snapshot's data files into a compacted
     layout — ``out_files`` files when unpartitioned, ~one
@@ -3902,7 +3661,8 @@ def compact_iceberg_files(
     that BUYS min/max pruning (the Iceberg twin of Delta's OPTIMIZE
     ZORDER for the 1-D case). The sort order is recorded in metadata
     ``sort-orders``."""
-    for _ in range(_max_retries):
+
+    def attempt():
         meta, version = _load_meta_versioned(table)
         if meta is None:
             raise ValueError("compact on a table with no metadata")
@@ -3914,43 +3674,25 @@ def compact_iceberg_files(
                 out_files, *order_by
             ).sortWithinPartitions(*order_by)
         sid = meta.get("default-spec-id", 0)
-        stored = next(
-            (
-                s["fields"]
-                for s in meta.get("partition-specs") or []
-                if s.get("spec-id") == sid
-            ),
-            None,
-        )
-        ice_schema = _current_schema(meta, snap)
-        if not order_by and not stored:
+        partition_by = _default_partition_by(meta, _current_schema(meta, snap))
+        if not order_by and not partition_by:
             # unpartitioned, unsorted: out_files IS the layout contract
             resolved = resolved.repartition(out_files)
-        if stored:
-            by_id = {f["id"]: f["name"] for f in ice_schema["fields"]}
-            partition_by = [(by_id[f["source-id"]], f["transform"]) for f in stored]
-            # Unsorted partitioned compaction distributes by the
-            # partition tuple (AQE REBALANCE inside the staging — the
-            # write.distribution-mode=hash posture): each tuple lands as
-            # ~one advisory-sized file instead of out_files x tuples
-            # (the old round-robin repartition re-EXPANDED a 112-file
-            # layout to 224 files — compaction that grew the file
-            # count). A sorted rewrite keeps its range layout: the
-            # repartitionByRange above owns the distribution.
-            descs = _stage_partitioned_files(
-                resolved, table, "c", partition_by, distribute=not order_by
-            )
-        else:
-            descs = _stage_parquet_files(resolved, table, "c")
-        for d in descs:
-            d["content"] = 0
+        # Unsorted partitioned compaction distributes by the partition
+        # tuple (AQE REBALANCE inside the staging — the
+        # write.distribution-mode=hash posture): each tuple lands as
+        # ~one advisory-sized file instead of out_files x tuples (the
+        # old round-robin repartition re-EXPANDED a 112-file layout to
+        # 224 files — compaction that grew the file count). A sorted
+        # rewrite keeps its range layout: the repartitionByRange above
+        # owns the distribution.
+        descs = _stage_parquet_files(
+            resolved, table, "c",
+            distribute=bool(partition_by) and not order_by,
+            partition_by=partition_by,
+        )
         # commit: a manifest list holding ONLY the new manifest — every
         # old data file and delete file leaves the live set atomically
-        from map_reduce_spark.sources.iceberg_transforms import (
-            parse_transform,
-            transform_result_type,
-        )
-
         av = make_generic_avro()
         mdir = os.path.join(table, "metadata")
         schemas = meta.get("schemas") or []
@@ -3958,22 +3700,12 @@ def compact_iceberg_files(
         cur_schema = next(
             s for s in schemas if s.get("schema-id") == cur_schema_id
         )
-        spec_fields = stored or []
-        by_id_f = {f["id"]: f for f in cur_schema["fields"]}
+        spec_fields = _default_spec_fields(meta) or []
         by_name = {f["name"]: f for f in cur_schema["fields"]}
-        spec_value_types = [
-            (
-                f["name"],
-                transform_result_type(
-                    parse_transform(f["transform"])[0],
-                    by_id_f[f["source-id"]]["type"],
-                ),
-            )
-            for f in spec_fields
-        ]
+        spec_value_types = _spec_value_types(spec_fields, cur_schema["fields"])
         carry = bool(spec_fields)
         entries = _build_manifest_entries(descs, by_name, snap_id, carry)
-        token = _write_token()
+        token = lakecommit.token()
         manifest = os.path.join(mdir, f"manifest-{snap_id}-{token}.avro")
         av.write_file(
             manifest,
@@ -3999,7 +3731,6 @@ def compact_iceberg_files(
         )
         sort_meta = {}
         if order_by:
-            by_name_f = {f["name"]: f for f in cur_schema["fields"]}
             prev_orders = meta.get("sort-orders") or []
             order_id = max((o.get("order-id", 0) for o in prev_orders), default=0) + 1
             sort_meta = {
@@ -4010,7 +3741,7 @@ def compact_iceberg_files(
                         "fields": [
                             {
                                 "transform": "identity",
-                                "source-id": by_name_f[c]["id"],
+                                "source-id": by_name[c]["id"],
                                 "direction": "asc",
                                 "null-order": "nulls-first",
                             }
@@ -4041,17 +3772,10 @@ def compact_iceberg_files(
         )
         if _try_publish_metadata(table, snap_id, new_meta):
             return snap_id
-        for p in (manifest, mlist):
-            try:
-                os.remove(p)
-            except FileNotFoundError:
-                pass
-        for d in descs:
-            try:
-                os.remove(d["file_path"])
-            except FileNotFoundError:
-                pass
-    raise RuntimeError(f"iceberg compact on {table!r} lost {_max_retries} races")
+        lakecommit.discard([manifest, mlist] + [d["file_path"] for d in descs])
+        return lakecommit.LOST
+
+    return lakecommit.retry_commit(f"iceberg compact on {table!r}", attempt)
 
 
 @register(
@@ -4115,9 +3839,7 @@ def _name_mapping(meta: dict) -> dict[int, list[str]] | None:
     return out or None
 
 
-def rename_iceberg_column(
-    table: str, old: str, new: str, _max_retries: int = 20
-) -> int:
+def rename_iceberg_column(table: str, old: str, new: str) -> int:
     """Iceberg RENAME COLUMN: a new current schema with the SAME field
     id under the new name — zero data files touched (ids, not names,
     are the spec's identity). Because this engine's data files are
@@ -4126,7 +3848,8 @@ def rename_iceberg_column(
     historical name of each field maps to its id), which the reader
     consumes to resolve pre-rename files by their old column name.
     Metadata-only put-if-absent commit; returns the new schema id."""
-    for _ in range(_max_retries):
+
+    def attempt():
         meta, version = _load_meta_versioned(table)
         if meta is None:
             raise ValueError("cannot rename a column of a table with no metadata")
@@ -4172,11 +3895,13 @@ def rename_iceberg_column(
         )
         if _try_publish_metadata(table, version + 1, new_meta):
             return new_sid
-    raise RuntimeError(f"rename on {table!r} lost {_max_retries} races")
+        return lakecommit.LOST
+
+    return lakecommit.retry_commit(f"rename on {table!r}", attempt)
 
 
 def evolve_iceberg_partition_spec(
-    table: str, new_partition_by: list[tuple[str, str]], _max_retries: int = 20
+    table: str, new_partition_by: list[tuple[str, str]]
 ) -> int:
     """Iceberg's headline layout feature: change the partition spec
     WITHOUT touching a single data file. A new spec (next spec-id,
@@ -4189,7 +3914,7 @@ def evolve_iceberg_partition_spec(
     returns the new spec id."""
     from map_reduce_spark.sources.iceberg_transforms import parse_transform
 
-    for _ in range(_max_retries):
+    def attempt():
         meta, version = _load_meta_versioned(table)
         if meta is None:
             raise ValueError("cannot evolve the spec of a table with no metadata")
@@ -4227,7 +3952,9 @@ def evolve_iceberg_partition_spec(
         )
         if _try_publish_metadata(table, version + 1, new_meta):
             return new_sid
-    raise RuntimeError(f"spec evolution on {table!r} lost {_max_retries} races")
+        return lakecommit.LOST
+
+    return lakecommit.retry_commit(f"spec evolution on {table!r}", attempt)
 
 
 @register(
@@ -4252,13 +3979,9 @@ def iceberg_partition_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     evolved table still answers exactly. This is the 100 TB
     re-layout story: changing the partitioning of a petabyte table is
     a metadata commit, not a rewrite."""
-    import tempfile
-
-    key = hashlib.md5(os.path.abspath(sf_dir).encode()).hexdigest()[:12]
-    table = os.path.join(tempfile.gettempdir(), f"mr_spark_ice_evo_{key}")
+    table = lakecommit.fixture_dir("ice_evo", sf_dir)
     if not os.path.isdir(table):
-        tmp = f"{table}.tmp{os.getpid()}"
-        shutil.rmtree(tmp, ignore_errors=True)
+        tmp = lakecommit.fixture_tmp(table)
         d = _orders_frame(spark, sf_dir)
         append_iceberg_snapshot(
             d.filter(F.col("o_orderkey") % 2 == 0).repartition(2),
@@ -4271,10 +3994,7 @@ def iceberg_partition_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
         append_iceberg_snapshot(
             d.filter(F.col("o_orderkey") % 2 == 1).repartition(2), tmp
         )
-        try:
-            os.rename(tmp, table)
-        except OSError:
-            shutil.rmtree(tmp, ignore_errors=True)  # lost the race
+        lakecommit.publish_fixture(tmp, table)
     predicates = [
         ("o_orderdate", ">=", _US_1996),
         ("o_orderdate", "<", _US_1998),
@@ -4328,30 +4048,13 @@ def migrate_delta_to_iceberg(
     os.makedirs(data_dir, exist_ok=True)
     descs = []
     for rel in sorted(snap.adds):
-        src = os.path.join(delta_table, rel)
         dest = os.path.join(
-            data_dir, f"mig-{_write_token()}-{os.path.basename(rel)}"
+            data_dir, f"mig-{lakecommit.token()}-{os.path.basename(rel)}"
         )
-        try:
-            os.link(src, dest)
-        except FileExistsError:
-            pass
-        import pyarrow.parquet as pq
-
-        n_rows = pq.ParquetFile(dest).metadata.num_rows
-        if n_rows == 0:
-            os.remove(dest)
-            continue
-        descs.append(
-            {
-                "file_path": dest,
-                "file_format": "PARQUET",
-                "record_count": n_rows,
-                "file_size_in_bytes": os.path.getsize(dest),
-                "content": 0,
-                "_bounds_by_name": _footer_bounds(dest),
-            }
-        )
+        os.link(os.path.join(delta_table, rel), dest)
+        f = lakecommit.staged_file(dest)
+        if f is not None:
+            descs.append(_data_file(f, 0))
     dtypes = [(f.name, f.dataType.simpleString()) for f in snap.schema.fields]
     return _commit_snapshot(
         iceberg_table, descs, manifest_content=0, operation="append",
@@ -4379,21 +4082,14 @@ def migrate_delta_to_iceberg_query(spark: SparkSession, sf_dir: str) -> DataFram
     Post-migration the table is a full citizen: footer bounds are in
     its manifests, so min/max pruning works immediately
     (tests/test_iceberg_migrate.py)."""
-    import tempfile
-
     from map_reduce_spark.sources.delta_py import ensure_customer_delta
 
     base = ensure_customer_delta(spark, sf_dir)
-    key = hashlib.md5(os.path.abspath(sf_dir).encode()).hexdigest()[:12]
-    dest = os.path.join(tempfile.gettempdir(), f"mr_spark_ice_mig_{key}")
+    dest = lakecommit.fixture_dir("ice_mig", sf_dir)
     if not os.path.isdir(dest):
-        tmp = f"{dest}.tmp{os.getpid()}"
-        shutil.rmtree(tmp, ignore_errors=True)
+        tmp = lakecommit.fixture_tmp(dest)
         migrate_delta_to_iceberg(spark, base, tmp)
-        try:
-            os.rename(tmp, dest)
-        except OSError:
-            shutil.rmtree(tmp, ignore_errors=True)  # lost the race
+        lakecommit.publish_fixture(tmp, dest)
     df = read_iceberg_py(spark, dest)
     return df.groupBy("c_mktsegment").agg(
         F.count("*").alias("cnt"),
@@ -4458,12 +4154,13 @@ def migrate_iceberg_to_delta(
     os.makedirs(delta_table, exist_ok=True)
     moved = []
     for src in sorted(plan["data_files"]):
-        rel = f"mig-{_write_token()}-{os.path.basename(src)}"
-        try:
-            os.link(src, os.path.join(delta_table, rel))
-        except FileExistsError:
-            pass
-        moved.append((rel, {}, os.path.getsize(src)))
+        dest = os.path.join(
+            delta_table, f"mig-{lakecommit.token()}-{os.path.basename(src)}"
+        )
+        os.link(src, dest)
+        f = lakecommit.staged_file(dest)
+        if f is not None:
+            moved.append(f)
     actions = [_PROTOCOL_ACTION, _meta_action(schema, delta_table, ())]
     actions.extend(_add_actions(delta_table, moved, stats_cols))
     actions.append(
@@ -4492,23 +4189,16 @@ def migrate_iceberg_to_delta_query(spark: SparkSession, sf_dir: str) -> DataFram
     aggregate must hash-equal the plain batch SQL. Together with
     ``migrate_delta_to_iceberg`` this closes the format-migration
     pair: a user can move either direction as a metadata commit."""
-    import tempfile
-
     from map_reduce_spark.sources.delta_py import read_delta_py
 
     base = ensure_iceberg_fixture(spark, sf_dir)
-    key = hashlib.md5(os.path.abspath(sf_dir).encode()).hexdigest()[:12]
-    dest = os.path.join(tempfile.gettempdir(), f"mr_spark_delta_mig_{key}")
+    dest = lakecommit.fixture_dir("delta_mig", sf_dir)
     if not os.path.isdir(dest):
-        tmp = f"{dest}.tmp{os.getpid()}"
-        shutil.rmtree(tmp, ignore_errors=True)
+        tmp = lakecommit.fixture_tmp(dest)
         migrate_iceberg_to_delta(
             spark, base, tmp, stats_cols=("l_orderkey",)
         )
-        try:
-            os.rename(tmp, dest)
-        except OSError:
-            shutil.rmtree(tmp, ignore_errors=True)  # lost the race
+        lakecommit.publish_fixture(tmp, dest)
     df = read_delta_py(spark, dest)
     return df.groupBy("l_returnflag", "l_linestatus").agg(
         F.count("*").alias("cnt"),
@@ -4910,11 +4600,9 @@ def streaming_iceberg_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     decade: memory-table scans serialize row blocks INTO tasks)."""
     import tempfile
 
-    key = hashlib.md5(os.path.abspath(sf_dir).encode()).hexdigest()[:12]
-    table = os.path.join(tempfile.gettempdir(), f"mr_spark_ice_src_{key}")
+    table = lakecommit.fixture_dir("ice_src", sf_dir)
     if not os.path.isdir(table):
-        tmp = f"{table}.tmp{os.getpid()}"
-        shutil.rmtree(tmp, ignore_errors=True)
+        tmp = lakecommit.fixture_tmp(table)
         d = _orders_frame(spark, sf_dir).select(
             "o_orderkey", "o_custkey", "o_orderstatus",
             "totalprice_cents", "o_orderpriority",
@@ -4923,10 +4611,7 @@ def streaming_iceberg_source(spark: SparkSession, sf_dir: str) -> DataFrame:
             append_iceberg_snapshot(
                 d.filter(F.col("o_orderkey") % 3 == i).repartition(2), tmp
             )
-        try:
-            os.rename(tmp, table)
-        except OSError:
-            shutil.rmtree(tmp, ignore_errors=True)  # lost the race
+        lakecommit.publish_fixture(tmp, table)
     scratch = os.path.join(
         tempfile.gettempdir(), f"mr_spark_ice_src_out_{os.getpid()}"
     )
@@ -4975,7 +4660,6 @@ def update_iceberg_where(
     table: str,
     predicate,
     set_exprs: dict,
-    _max_retries: int = 5,
 ) -> int:
     """Iceberg COW UPDATE — the delta_py.update_where twin: rewrite
     only the files containing predicate-TRUE rows, applying
@@ -4986,7 +4670,8 @@ def update_iceberg_where(
     from map_reduce_spark.sources.delta_py import _control_plane_rows
 
     pred_true = F.coalesce(predicate, F.lit(False))
-    for _ in range(_max_retries):
+
+    def attempt():
         meta, base_version = _load_meta_versioned(table)
         snap = _pick_snapshot(meta, None)
         plan = scan_plan_for_snapshot(table, meta, snap)
@@ -5023,45 +4708,23 @@ def update_iceberg_where(
                 for c in cols
             ]
         )
-        sid = meta.get("default-spec-id", 0)
-        stored = next(
-            (
-                s["fields"]
-                for s in meta.get("partition-specs") or []
-                if s.get("spec-id") == sid
-            ),
-            None,
+        descs = _stage_parquet_files(
+            out, table, "u", distribute=True,
+            partition_by=_default_partition_by(meta, ice_schema),
         )
-        if stored:
-            by_id = {f["id"]: f["name"] for f in ice_schema["fields"]}
-            partition_by = [(by_id[f["source-id"]], f["transform"]) for f in stored]
-            descs = _stage_partitioned_files(
-                out, table, "u", partition_by, distribute=True
-            )
-        else:
-            descs = _stage_parquet_files(out, table, "u", distribute=True)
-        for d in descs:
-            d["content"] = 0
-        snap_id = _try_commit_rewrite(
-            table, victims, descs, operation="update", base=(meta, base_version)
-        )
-        if snap_id is not None:
-            return snap_id
-        for d in descs:
-            try:
-                os.remove(d["file_path"])
-            except FileNotFoundError:
-                pass
-    raise RuntimeError(f"iceberg update on {table!r} lost {_max_retries} races")
+        return _rewrite_attempt(table, victims, descs, "update", (meta, base_version))
+
+    return lakecommit.retry_commit(f"iceberg update on {table!r}", attempt)
 
 
-def rollback_iceberg(table: str, snapshot_id: int, _max_retries: int = 20) -> int:
+def rollback_iceberg(table: str, snapshot_id: int) -> int:
     """Iceberg ROLLBACK: point the table's current snapshot back at an
     older one as a NEW metadata commit — zero data or manifest work,
     full history preserved above and below (the rolled-back snapshots
     stay time-travelable until expire-snapshots). The standard
     recovery move after a bad write."""
-    for _ in range(_max_retries):
+
+    def attempt():
         meta, version = _load_meta_versioned(table)
         if meta is None:
             raise ValueError("rollback on a table with no metadata")
@@ -5090,7 +4753,9 @@ def rollback_iceberg(table: str, snapshot_id: int, _max_retries: int = 20) -> in
         )
         if _try_publish_metadata(table, version + 1, new_meta):
             return version + 1
-    raise RuntimeError(f"rollback on {table!r} lost {_max_retries} races")
+        return lakecommit.LOST
+
+    return lakecommit.retry_commit(f"rollback on {table!r}", attempt)
 
 
 @register(

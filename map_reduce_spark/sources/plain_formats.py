@@ -32,30 +32,15 @@ Python in the data path):
 
 from __future__ import annotations
 
-import hashlib
 import math
 import os
-import shutil
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 
 from map_reduce_spark.registry import register
+from map_reduce_spark.sources import lakecommit
 
 _FIXTURE_FILES = 4
-
-
-def _fixture_dir(tag: str, sf_dir: str) -> str:
-    key = hashlib.md5(os.path.abspath(sf_dir).encode()).hexdigest()[:12]
-    return os.path.join(tempfile.gettempdir(), f"mr_spark_{tag}_{key}")
-
-
-def _publish(tmp: str, dest: str) -> None:
-    """Atomic-rename publish; losing a concurrent race is fine (theirs won)."""
-    try:
-        os.rename(tmp, dest)
-    except OSError:
-        shutil.rmtree(tmp, ignore_errors=True)
 
 
 def ensure_orc_fixture(sf_dir: str) -> str:
@@ -69,7 +54,7 @@ def ensure_orc_fixture(sf_dir: str) -> str:
     import pyarrow.orc as po
     import pyarrow.parquet as pq
 
-    dest = _fixture_dir("orc", sf_dir)
+    dest = lakecommit.fixture_dir("orc", sf_dir)
     if os.path.isdir(dest):
         return dest
     tbl = pq.read_table(os.path.join(sf_dir, "orders.parquet"))
@@ -77,14 +62,14 @@ def ensure_orc_fixture(sf_dir: str) -> str:
     tbl = tbl.set_column(
         idx, "o_orderdate", tbl.column("o_orderdate").cast(pa.date32())
     )
-    tmp = f"{dest}.tmp{os.getpid()}"
+    tmp = lakecommit.fixture_tmp(dest)
     os.makedirs(tmp, exist_ok=True)
     per = max(1, math.ceil(tbl.num_rows / _FIXTURE_FILES))
     for i in range(_FIXTURE_FILES):
         po.write_table(
             tbl.slice(i * per, per), os.path.join(tmp, f"part-{i:05d}.orc")
         )
-    _publish(tmp, dest)
+    lakecommit.publish_fixture(tmp, dest)
     return dest
 
 
@@ -99,13 +84,13 @@ def ensure_csv_fixture(sf_dir: str) -> str:
 
     import pyarrow.parquet as pq
 
-    dest = _fixture_dir("csv", sf_dir)
+    dest = lakecommit.fixture_dir("csv", sf_dir)
     if os.path.isdir(dest):
         return dest
     tbl = pq.read_table(os.path.join(sf_dir, "customer.parquet"))
     cols = ["c_custkey", "c_name", "c_nationkey", "c_acctbal", "c_mktsegment"]
     rows = list(zip(*(tbl.column(c).to_pylist() for c in cols)))
-    tmp = f"{dest}.tmp{os.getpid()}"
+    tmp = lakecommit.fixture_tmp(dest)
     os.makedirs(tmp, exist_ok=True)
     per = max(1, math.ceil(len(rows) / _FIXTURE_FILES))
     header = ["c_custkey", "c_name", "c_nationkey", "acctbal_cents", "c_mktsegment"]
@@ -117,7 +102,7 @@ def ensure_csv_fixture(sf_dir: str) -> str:
             w.writerow(header)
             for ck, name, nk, bal, seg in rows[i * per : (i + 1) * per]:
                 w.writerow([ck, name, nk, round(bal * 100), seg])
-    _publish(tmp, dest)
+    lakecommit.publish_fixture(tmp, dest)
     return dest
 
 
@@ -135,7 +120,7 @@ def ensure_json_fixture(sf_dir: str) -> str:
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    dest = _fixture_dir("json", sf_dir)
+    dest = lakecommit.fixture_dir("json", sf_dir)
     if os.path.isdir(dest):
         return dest
     tbl = pq.read_table(os.path.join(sf_dir, "events.parquet"))
@@ -158,7 +143,7 @@ def ensure_json_fixture(sf_dir: str) -> str:
         "props": tbl.column("props").to_pylist(),
     }
     n = tbl.num_rows
-    tmp = f"{dest}.tmp{os.getpid()}"
+    tmp = lakecommit.fixture_tmp(dest)
     os.makedirs(tmp, exist_ok=True)
     per = max(1, math.ceil(n / _FIXTURE_FILES))
     names = list(cols)
@@ -170,7 +155,7 @@ def ensure_json_fixture(sf_dir: str) -> str:
                                separators=(",", ":"))
                     + "\n"
                 )
-    _publish(tmp, dest)
+    lakecommit.publish_fixture(tmp, dest)
     return dest
 
 

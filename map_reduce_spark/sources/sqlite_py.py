@@ -46,7 +46,6 @@ widened source surface (SURVEY.md §2.2 scans/sources).
 
 from __future__ import annotations
 
-import hashlib
 import os
 import sqlite3
 
@@ -340,12 +339,11 @@ def ensure_sqlite_fixture(sf_dir: str) -> str:
     The fixture is the stand-in for data that already LIVES in an
     operational database; the operator under measure is the
     partitioned, pushdown-capable read path."""
-    import tempfile
-
     import pyarrow.parquet as pq
 
-    key = hashlib.md5(os.path.abspath(sf_dir).encode()).hexdigest()[:12]
-    dest = os.path.join(tempfile.gettempdir(), f"mr_spark_sqlite_{key}.db")
+    from map_reduce_spark.sources import lakecommit
+
+    dest = lakecommit.fixture_dir("sqlite", sf_dir) + ".db"
     if os.path.isfile(dest):
         return dest
     tbl = pq.read_table(
@@ -353,14 +351,9 @@ def ensure_sqlite_fixture(sf_dir: str) -> str:
         columns=[c for c, _ in _SUPPLIER_COLS],
     )
     rows = list(zip(*(tbl.column(c).to_pylist() for c, _ in _SUPPLIER_COLS)))
-    tmp = f"{dest}.tmp{os.getpid()}"
-    if os.path.exists(tmp):
-        os.remove(tmp)
+    tmp = lakecommit.fixture_tmp(dest)
     write_sqlite_table(rows, _SUPPLIER_COLS, tmp, "supplier")
-    try:
-        os.rename(tmp, dest)  # atomic publish; loser's tmp is distinct
-    except OSError:
-        os.remove(tmp)
+    lakecommit.publish_fixture(tmp, dest)
     return dest
 
 

@@ -93,6 +93,25 @@ def test_put_if_absent_race(spark, tbl):
     assert D.latest_version(tbl) == 1
 
 
+def test_put_if_absent_reentrant_race(spark, tbl, monkeypatch):
+    """Two writers of one process race for the same version: a second
+    commit lands between the first one's fsync and its link. The first
+    must report the lost race, not crash on a temp file it shared."""
+    D.write_delta_py(_mk(spark, 10), tbl, mode="overwrite")
+    real_link = os.link
+    winner = [{"commitInfo": {"operation": "WINNER"}}]
+
+    def link_once(src, dst):
+        monkeypatch.setattr(os, "link", real_link)
+        assert D.try_commit(tbl, 1, winner) is True
+        return real_link(src, dst)
+
+    monkeypatch.setattr(os, "link", link_once)
+    assert D.try_commit(tbl, 1, [{"commitInfo": {"operation": "LOSER"}}]) is False
+    assert D.latest_version(tbl) == 1
+    assert D._read_commit(tbl, 1) == winner
+
+
 def test_delete_rewrites_only_victims(spark, tbl):
     D.write_delta_py(_mk(spark, 300, parts=3), tbl, mode="overwrite", stats_cols=("id",))
     before = set(D.snapshot(tbl).adds)
