@@ -369,7 +369,9 @@ def main() -> None:
     cur: dict[str, float] = {}
     for k, v in timings.items():
         cur[k] = v
-        if len(json.dumps(cur)) > chunk_limit:
+        # a lone oversized entry stays as its own chunk: popping it
+        # would flush an empty {} chunk
+        if len(json.dumps(cur)) > chunk_limit and len(cur) > 1:
             cur.popitem()
             chunks.append(cur)
             cur = {k: v}

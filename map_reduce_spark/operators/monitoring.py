@@ -96,11 +96,11 @@ def drift_psi(spark: SparkSession, sf_dir: str) -> DataFrame:
     p = (c+1)/(n+10) per source, q likewise overall;
     psi = sum((p - q) * ln(p / q)).
 
-    Scale shape (100 TB): ONE narrow scan -> two partial-aggregated
-    groupBys (source x bin, then the bin marginal derived from the
-    first — bins are re-aggregated from the (source, bin) counts, not
-    a second scan); everything downstream of the counts is
-    constant-size (sources x 10 rows). No percentile pass, no sort.
+    Scale shape (100 TB): ONE narrow scan -> one partial-aggregated
+    groupBy (source x bin); everything downstream of the counts is
+    constant-size (one row per source, the bin marginals from a
+    whole-frame window over it — not a second scan, not a join). No
+    percentile pass, no sort.
     """
     docs = load_table(spark, sf_dir, "documents")
     binned = psi_bins(docs)
@@ -110,39 +110,32 @@ def drift_psi(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def psi_from_counts(c: DataFrame) -> DataFrame:
     """PSI finish over a (source, bin, c) counts frame — everything
-    here is constant-size (sources x 10 rows). The streaming twin
+    here is constant-size (one row per source). The streaming twin
     (streaming/jobs.py streaming_drift_psi) feeds it the state-store
     counts its incremental aggregation maintains; the batch query
     feeds it the one-scan counts. Same math, one definition.
 
-    The n/o/tot marginals re-alias their grouping keys through fresh
-    expression ids: they all derive from the SAME input plan that is
-    then re-joined against, and a streaming memory-sink View pins its
-    attribute ids, so without the re-alias the grid-side join trips
-    Spark's conflicting-attribute check (batch lineages get
-    auto-disambiguated; View-backed ones do not)."""
-    spark = c.sparkSession
-    base = c.select(
-        F.col("source").alias("src"), F.col("bin").alias("b"), F.col("c").alias("cnt")
+    Join-free: ONE groupBy("source") pivots the counts into
+    ``n = sum(c)`` plus the ten per-bin counts ``c0..c9`` (an absent
+    bin sums to 0, so no bin spine is needed), whole-frame windows
+    over that per-source frame give the bin marginals ``o0..o9`` and
+    the corpus total, and the PSI is a fixed 10-term sum of the 9-dp
+    rounded terms, rounded to 6 dp. Each column family is one SQL
+    text (NOTES rule 61)."""
+    k = range(_PSI_BINS)
+    wide = c.groupBy("source").agg(
+        F.expr("sum(c) AS n"),
+        *[F.expr(f"sum(CASE WHEN bin = {b} THEN c ELSE 0 END) AS c{b}") for b in k],
     )
-    n = base.groupBy(F.col("src").alias("source")).agg(F.sum("cnt").alias("n"))
-    o = base.groupBy(F.col("b").alias("bin")).agg(F.sum("cnt").alias("o"))
-    tot = base.agg(F.sum("cnt").alias("t"))
-    bins = spark.range(_PSI_BINS).select(F.col("id").cast("int").alias("bin"))
-    grid = n.crossJoin(F.broadcast(bins))
-    joined = (
-        grid.join(c, ["source", "bin"], "left")
-        .join(F.broadcast(o), "bin", "left")
-        .crossJoin(F.broadcast(tot))
+    marg = [f"sum(c{b}) OVER () AS o{b}" for b in k] + ["sum(n) OVER () AS t"]
+    wide = wide.selectExpr("*", *marg)
+    p = [f"((c{b} + 1.0D) / (n + {_PSI_BINS}.0D))" for b in k]
+    q = [f"((o{b} + 1.0D) / (t + {_PSI_BINS}.0D))" for b in k]
+    terms = " + ".join(
+        f"round(({p[b]} - {q[b]}) * ln({p[b]} / {q[b]}), 9)" for b in k
     )
-    p = (F.coalesce(F.col("c"), F.lit(0)) + 1.0) / (F.col("n") + float(_PSI_BINS))
-    q = (F.coalesce(F.col("o"), F.lit(0)) + 1.0) / (F.col("t") + float(_PSI_BINS))
-    term = F.round((p - q) * F.log(p / q), 9)
-    return (
-        joined.select("source", "n", term.alias("term"))
-        .groupBy("source", "n")
-        .agg(F.round(F.sum("term"), 6).alias("psi"))
-        .select("source", F.col("n").cast("long").alias("n_docs"), "psi")
+    return wide.selectExpr(
+        "source", "CAST(n AS BIGINT) AS n_docs", f"round({terms}, 6) AS psi"
     )
 
 
@@ -448,18 +441,26 @@ _SLICES_PER_MD5 = 4
 
 
 def _perm_expr_sql(p: int) -> str:
+    """Permutation ``p`` of the K portable MinHash permutations over a
+    ``gram`` column — ONE SQL definition, run verbatim by DuckDB (the
+    oracle) and by Spark (``_signature_mins``)."""
     g, s = p // _SLICES_PER_MD5, p % _SLICES_PER_MD5
     return f"substr(md5(concat('{g}:', gram)), {1 + 8 * s}, 8)"
 
 
-def _perm_hash_col(p: int):
-    """Spark twin of ``_perm_expr_sql`` — ONE definition of the K
-    portable MinHash permutations, shared by ``source_overlap_minhash``
-    and the health-report fold's signature leg."""
-    g, s = p // _SLICES_PER_MD5, p % _SLICES_PER_MD5
-    return F.substring(
-        F.md5(F.concat(F.lit(f"{g}:"), F.col("gram"))), 1 + 8 * s, 8
-    )
+def _agree_sql() -> str:
+    """Integer count of the signature components the self-join sides
+    ``a`` and ``b`` agree on — the one agreement text both engines
+    run."""
+    terms = (f"CAST(a.h{p} = b.h{p} AS INT)" for p in range(_OVERLAP_PERMS))
+    return "(" + " + ".join(terms) + ")"
+
+
+def _signature_mins(of) -> list:
+    """The K signature-component MIN aggregates, ``of(p)`` giving the
+    SQL text each component minimises — one ``F.expr`` per component
+    instead of a py4j call per Column operation (NOTES rule 61)."""
+    return [F.expr(f"min({of(p)}) AS h{p}") for p in range(_OVERLAP_PERMS)]
 
 
 _OVERLAP_MINHASH_ORACLE = (
@@ -481,18 +482,12 @@ sig AS (
   FROM tri GROUP BY source
 )
 SELECT a.source AS src_a, b.source AS src_b,
-       CAST(("""
-    + " + ".join(
-        f"CASE WHEN a.h{p} = b.h{p} THEN 1 ELSE 0 END"
-        for p in range(_OVERLAP_PERMS)
-    )
-    + f""") AS BIGINT) AS n_agree,
-       round(("""
-    + " + ".join(
-        f"CASE WHEN a.h{p} = b.h{p} THEN 1 ELSE 0 END"
-        for p in range(_OVERLAP_PERMS)
-    )
-    + f""") / {_OVERLAP_PERMS}.0, 9) AS est_jaccard
+       CAST("""
+    + _agree_sql()
+    + """ AS BIGINT) AS n_agree,
+       round("""
+    + _agree_sql()
+    + f""" / {_OVERLAP_PERMS}.0, 9) AS est_jaccard
 FROM sig a JOIN sig b ON a.source < b.source
 """
 )
@@ -523,27 +518,20 @@ def source_overlap_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     best-effort). md5 family start-to-finish, fully oracle-verified.
     """
     sg = _source_gram_stream(spark, sf_dir)
-    mins = [F.min(_perm_hash_col(p)).alias(f"h{p}") for p in range(_OVERLAP_PERMS)]
-    sig = stage_cache(sg.groupBy("source").agg(*mins))
+    sig = stage_cache(sg.groupBy("source").agg(*_signature_mins(_perm_expr_sql)))
     a, b = sig.alias("a"), F.broadcast(sig).alias("b")
-    n_agree = sum(
-        (F.col(f"a.h{p}") == F.col(f"b.h{p}")).cast("int")
-        for p in range(_OVERLAP_PERMS)
-    )
     return (
         a.join(b, F.col("a.source") < F.col("b.source"))
-        .select(
-            F.col("a.source").alias("src_a"),
-            F.col("b.source").alias("src_b"),
-            n_agree.cast("long").alias("n_agree"),
+        .selectExpr(
+            "a.source AS src_a",
+            "b.source AS src_b",
+            f"CAST({_agree_sql()} AS BIGINT) AS n_agree",
         )
-        .select(
+        .selectExpr(
             "src_a",
             "src_b",
             "n_agree",
-            F.round(F.col("n_agree") / float(_OVERLAP_PERMS), 9).alias(
-                "est_jaccard"
-            ),
+            f"round(n_agree / {_OVERLAP_PERMS}.0D, 9) AS est_jaccard",
         )
     )
 
@@ -727,11 +715,7 @@ def health_batch_state(
         F.min(F.when(p12, F.col("doc_id"))).alias("min_id_p12"),
         F.min("doc_id").alias("min_id_all"),
     )
-    sig = (
-        _gram_stream_of(docs)
-        .groupBy("source")
-        .agg(*[F.min(_perm_hash_col(p)).alias(f"h{p}") for p in range(_OVERLAP_PERMS)])
-    )
+    sig = _gram_stream_of(docs).groupBy("source").agg(*_signature_mins(_perm_expr_sql))
     return psic, gate, dup, sig
 
 
@@ -766,7 +750,7 @@ def merge_health_states(
         a[3]
         .unionByName(b[3])
         .groupBy("source")
-        .agg(*[F.min(f"h{p}").alias(f"h{p}") for p in range(_OVERLAP_PERMS)])
+        .agg(*_signature_mins(lambda p: f"h{p}"))
     )
     return psic, gate, dup, sig
 
@@ -776,9 +760,11 @@ def health_report_from_state(
 ) -> DataFrame:
     """Finish the folded state into the per-source admission report —
     identical columns and semantics to the one-shot oracle. Everything
-    here is state-sized: the PSI finish is sources x 10, the funnel
-    finish groups the dup ledger once (index-grain, keyed), and the
-    overlap finish is the |sources|^2 signature self-join."""
+    here is state-sized: the PSI finish is the join-free per-source
+    pivot of ``psi_from_counts``, the funnel finish groups the dup
+    ledger once (index-grain, keyed), and the overlap finish is the
+    |sources|^2 ordered-pair signature self-join reduced to each
+    source's worst partner."""
     psi = psi_from_counts(psic)
     # dup ledger finish: the global first-seen doc per text keeps its
     # slot; every other locally-passing copy is an exact_dup
@@ -793,23 +779,20 @@ def health_report_from_state(
         "n_docs"
     )
     # overlap finish: pairwise component agreement on the merged
-    # signatures, worst partner per source, both directions
+    # signatures, worst partner per source. Jaccard is symmetric, so
+    # the ordered-pair self-join grouped by its left side covers both
+    # directions of every unordered pair in one pass
     s = stage_cache(sig)
     a, b = s.alias("a"), F.broadcast(s).alias("b")
-    n_agree = sum(
-        (F.col(f"a.h{p}") == F.col(f"b.h{p}")).cast("int")
-        for p in range(_OVERLAP_PERMS)
-    )
-    pairs = a.join(b, F.col("a.source") < F.col("b.source")).select(
-        F.col("a.source").alias("src_a"),
-        F.col("b.source").alias("src_b"),
-        F.round(n_agree / float(_OVERLAP_PERMS), 9).alias("est_jaccard"),
-    )
     mj = (
-        pairs.select(F.col("src_a").alias("source"), "est_jaccard")
-        .unionByName(pairs.select(F.col("src_b").alias("source"), "est_jaccard"))
-        .groupBy("source")
-        .agg(F.round(F.max("est_jaccard"), 9).alias("max_est_jaccard"))
+        a.join(b, F.col("a.source") != F.col("b.source"))
+        .groupBy(F.col("a.source").alias("source"))
+        .agg(
+            F.expr(
+                f"round(max(round({_agree_sql()} / {_OVERLAP_PERMS}.0D, 9)), 9)"
+                " AS max_est_jaccard"
+            )
+        )
     )
     return (
         psi.join(F.broadcast(per_source), "source")
@@ -858,8 +841,15 @@ def health_report_fold(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: per-batch work is one narrow corpus scan (gates +
     PSI bins, no explode) plus the gram explode for the signature leg;
     folded state is sources x 10 + sources x 2 + the index-grain dup
-    ledger + sources x 64. The finish is state-sized; with ledger and
-    report bucketed by their keys at rest the merge is shuffle-free.
+    ledger + sources x 64. The finish is state-sized: the PSI leg is
+    join-free (a per-source pivot with whole-frame window marginals),
+    the overlap leg is one broadcast signature self-join on
+    ``a.source != b.source`` grouped by ``a.source``, and the
+    per-source legs meet in three broadcast joins. Both K-wide column
+    families (signature mins, component agreement) are built as SQL
+    text, so building the report costs ~1.4k py4j calls instead of
+    ~10.8k (NOTES rule 61). With ledger and report bucketed by their
+    keys at rest the merge is shuffle-free.
     """
     docs = stage_cache(
         parallelize_if_narrow(

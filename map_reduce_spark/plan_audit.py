@@ -95,9 +95,9 @@ ACCEPTED_1PART: dict[str, str] = {
     "distinct_linear_counting": "two scalar sketch-summary aggregates (1-row output)",
     "dsir_weights": "scalar corpus-total token counts (1-row frame, broadcast)",
     "select_pretraining_data": "inherits dsir_frame's scalar corpus-total 1-row frame",
-    "drift_psi": "scalar corpus-total doc count (1-row frame, broadcast onto the source x 10-bin grid)",
-    "corpus_health_report": "inherits drift_psi's scalar corpus-total 1-row frame (composed leg)",
-    "health_report_fold": "inherits psi_from_counts' scalar corpus-total 1-row frame (PSI finish leg)",
+    "drift_psi": "whole-frame window (bin marginals + corpus total) over the per-source frame (one row per source)",
+    "corpus_health_report": "inherits drift_psi's whole-frame window over the per-source PSI frame (composed leg)",
+    "health_report_fold": "inherits psi_from_counts' whole-frame window over the per-source PSI frame (PSI finish leg)",
     "ann_recall_eval": "Spark-injected runtime bloom_filter_agg over the 20-row probe-panel join key (a scalar sketch the optimizer adds to prune the corpus scan — the pushdown working FOR us, not a collapsed data path)",
     "ann_maintenance_decision": "inherits ann_recall_eval's miss leg via the shared _recall_parts: the same runtime bloom_filter_agg scalar sketch over the fixed probe panel",
 }
@@ -157,12 +157,11 @@ ACCEPTED_BNLJ: dict[str, str] = {
     "distinct_linear_counting": "broadcast 1-row exact-stats frame",
     "dsir_weights": "broadcast 1-row corpus-total frame (hashed-feature smoothing)",
     "select_pretraining_data": "inherits dsir_frame's broadcast 1-row corpus-total frame",
-    "drift_psi": "broadcast 10-row bin spine + 1-row corpus-total frame",
     "source_overlap": "broadcast per-source set-size frame (one row per SOURCE) onto the pair grid",
     "source_overlap_minhash": "broadcast per-source signature frame (one K-column row per SOURCE) self-paired on source<source",
     "curation_funnel": "broadcast 4-row stage spine onto the per-source grid",
-    "corpus_health_report": "inherits its composed legs' broadcast constant-size frames (bin/stage spines, per-source set sizes, 1-row totals)",
-    "health_report_fold": "broadcast per-source merged-signature frame self-paired on source<source + the PSI finish's bin spine / 1-row total",
+    "corpus_health_report": "inherits its composed legs' broadcast constant-size frames (the funnel's stage spine, per-source set sizes)",
+    "health_report_fold": "broadcast per-source merged-signature frame self-paired on source!=source (one K-column row per SOURCE)",
     "ann_recall_eval": "broadcast FIXED 20-row probe panel (the exact ground-truth leg an eval pays by construction)",
     "ann_maintenance_decision": "same broadcast fixed-panel cross join, inherited from the shared _recall_parts miss leg",
 }

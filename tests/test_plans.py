@@ -504,3 +504,21 @@ def test_centroid_retrain_joins_are_metadata_broadcasts(spark, sf_dir):
     assert plan.count("BroadcastHashJoin") >= 3
     assert plan.count("SortMergeJoin") <= 1
     assert "CartesianProduct" not in plan and "BroadcastNestedLoopJoin" not in plan
+
+
+def test_health_fold_psi_finish_is_join_free(spark, sf_dir):
+    """The PSI finish is one per-source pivot plus whole-frame window
+    marginals — no bin spine, grid cross join or marginal joins — and
+    the composed health fold stays within its exchange budget (25
+    before the join-free finish and the symmetric overlap finish)."""
+    import re
+
+    from map_reduce_spark.operators.monitoring import psi_from_counts
+
+    counts = spark.createDataFrame(
+        [("s0", 0, 3), ("s0", 4, 2), ("s1", 9, 5)], "source string, bin int, c long"
+    )
+    optimized = psi_from_counts(counts)._jdf.queryExecution().optimizedPlan().toString()
+    assert "Join" not in optimized
+    plan = plan_of(spark, sf_dir, "health_report_fold")
+    assert len(re.findall(r"\bExchange\b", plan)) <= 18
