@@ -184,33 +184,6 @@ BANDS = 8  # LSH bands
 ROWS_PER_BAND = NUM_PERM // BANDS  # 4 -> candidate threshold j ~ (1/8)^(1/4) ~ 0.6
 
 
-def minhash_signatures(docs: DataFrame, n_perm: int = NUM_PERM) -> DataFrame:
-    """(doc_id, sig: array<long>) — minhash over word-3-gram shingles.
-
-    Permutation ``p`` is simulated as ``xxhash64(p, shingle)`` (a seeded
-    hash family via the extra column); the signature component is the
-    min over the shingle set.
-
-    Shape: explode shingles to rows, compute the n_perm hashes as plain
-    columns, take n_perm MIN aggregates grouped by doc. Everything stays
-    inside whole-stage codegen, and the shuffle moves only partial mins
-    (n_perm longs per doc per map partition) — ~40× faster than the
-    equivalent nested higher-order-function expression, which Spark
-    evaluates interpreted.
-    """
-    sh = parallelize_if_narrow(docs, "doc_id").select(
-        "doc_id", F.explode(_shingles()).alias("t")
-    )
-    mins = [F.min(F.xxhash64(F.lit(p), F.col("t"))).alias(f"h{p}") for p in range(n_perm)]
-    return (
-        sh.groupBy("doc_id")
-        .agg(*mins)
-        .select(
-            "doc_id", F.array(*[F.col(f"h{p}") for p in range(n_perm)]).alias("sig")
-        )
-    )
-
-
 @register("dedup_minhash_lsh", oracle=None)
 def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MinHash-LSH near-dup pairs, verified by exact Jaccard >= 0.5.
@@ -277,31 +250,11 @@ def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     # verify. Tracked: released by session.release_caches().
     cand = stage_cache(cand)
 
-    # Exact verify only on candidates. Shingle sets are re-derived for
-    # candidate doc_ids ONLY, straight from the documents table: the
-    # broadcast semi-join prunes BEFORE the explode, so shingle sets
-    # are never built for non-candidate documents and the verify path
-    # shuffles O(candidates), not O(corpus).
-    cand_ids = (
-        cand.select(F.col("doc_a").alias("doc_id"))
-        .union(cand.select(F.col("doc_b").alias("doc_id")))
-        .distinct()
-    )
-    cand_sets = (
-        docs.join(F.broadcast(cand_ids), "doc_id", "left_semi")
-        .select("doc_id", F.explode(_shingles()).alias("t"))
-        .groupBy("doc_id")
-        .agg(F.collect_set("t").alias("s"))
-    )
-    av = cand_sets.select(F.col("doc_id").alias("doc_a"), F.col("s").alias("sa"))
-    bv = cand_sets.select(F.col("doc_id").alias("doc_b"), F.col("s").alias("sb"))
-    jac = F.size(F.array_intersect("sa", "sb")) / F.size(F.array_union("sa", "sb"))
-    return (
-        cand.join(av, "doc_a")
-        .join(bv, "doc_b")
-        .filter(jac >= 0.5)
-        .select("doc_a", "doc_b", F.round(jac, 6).alias("jac"))
-    )
+    # Exact verify only on candidates (``_verify_jaccard``): shingle
+    # sets are re-derived for candidate doc_ids ONLY, straight from the
+    # documents table — the broadcast semi-join prunes BEFORE the
+    # explode, so the verify path shuffles O(candidates), not O(corpus).
+    return _verify_jaccard(docs, cand, 0.5).select("doc_a", "doc_b", "jac")
 
 
 # --- duplicate-cluster resolution (connected components) --------------

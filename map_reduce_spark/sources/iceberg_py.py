@@ -1243,15 +1243,16 @@ def _resolve_spec(
     schema_fields: list[dict],
 ) -> list[dict]:
     """The table's default partition-spec fields (metadata JSON shape:
-    source-id/field-id/name/transform). A new table takes
-    ``partition_by``; an existing table's stored spec is authoritative
-    and a conflicting ``partition_by`` is refused loudly — partition
-    SPEC EVOLUTION is a separate feature this writer does not claim."""
+    source-id/field-id/name/transform). A new table (``meta`` None)
+    takes ``partition_by``; an existing table's stored spec — empty for
+    an unpartitioned one — is authoritative and a conflicting
+    ``partition_by`` is refused loudly: partition SPEC EVOLUTION is
+    ``evolve_iceberg_partition_spec``'s job, not an append's."""
     from map_reduce_spark.sources.iceberg_transforms import parse_transform
 
     by_name = {f["name"]: f for f in schema_fields}
-    stored = _default_spec_fields(meta)
-    if stored:
+    if meta is not None:
+        stored = _default_spec_fields(meta) or []
         if partition_by is not None:
             by_id = {f["id"]: f["name"] for f in schema_fields}
             want = [
@@ -1373,6 +1374,104 @@ def _txn_ledger(meta: dict | None, app_id: str) -> int:
     return best
 
 
+def _publish_snapshot(
+    table: str,
+    base: tuple[dict, int],
+    carried: list[dict],
+    descs: list[dict],
+    content: int,
+    summary: dict,
+    changes: dict | None = None,
+    scratch: list[str] | None = None,
+):
+    """The one snapshot writer every commit goes through: ONE
+    put-if-absent attempt at ``v{version + 1}.metadata.json`` on top of
+    the planned ``base = (meta, version)``.
+
+    In order: (1) a manifest of ``content`` (0 data, 1 deletes) holding
+    ``descs`` — entries carry the footer bounds and, for data manifests
+    of a partitioned table, the partition tuple, and its manifest-list
+    row carries the per-spec-field value summaries (no manifest when
+    ``descs`` is empty); (2) the manifest list: the ``carried`` rows
+    plus that new row; (3) the new metadata, ``dict(meta, **changes)``
+    with the snapshot appended — every key the caller does not change
+    (uuid, location, sort orders, properties, snapshot-log, spec
+    history) carries over; (4) the publish. The schema and default spec
+    are read AFTER ``changes``, so an append's evolved schema is the one
+    its bounds resolve against.
+
+    Returns the new snapshot id, or ``lakecommit.LOST`` after removing
+    this attempt's manifests and the caller's ``scratch`` files."""
+    meta, version = base
+    snap_id = version + 1
+    new_meta = dict(meta, **(changes or {}))
+    schema_id = new_meta.get("current-schema-id", 0)
+    schema = next(s for s in new_meta["schemas"] if s.get("schema-id") == schema_id)
+    spec_fields = _default_spec_fields(new_meta) or []
+    carry_partition = content == 0 and bool(spec_fields)
+    value_types = (
+        _spec_value_types(spec_fields, schema["fields"]) if carry_partition else []
+    )
+    av = make_generic_avro()
+    mdir = os.path.join(table, "metadata")
+    token = lakecommit.token()
+    scratch = list(scratch or [])
+    rows = list(carried)
+    entries = _build_manifest_entries(
+        descs, {f["name"]: f for f in schema["fields"]}, snap_id, carry_partition
+    )
+    if entries:
+        manifest = os.path.join(mdir, f"manifest-{snap_id}-{token}.avro")
+        av.write_file(manifest, _entry_schema_for_spec(value_types), entries)
+        scratch.append(manifest)
+        rows.append(
+            {
+                "manifest_path": manifest,
+                "manifest_length": os.path.getsize(manifest),
+                # the entries and summaries were built under the DEFAULT
+                # spec — record THAT id, not 0, or a post-evolution
+                # reader prunes these summaries under spec 0's field
+                # order/transforms (silent manifest drops)
+                "partition_spec_id": new_meta.get("default-spec-id", 0),
+                "content": content,
+                "added_snapshot_id": snap_id,
+                "partitions": _partition_summaries(entries, value_types)
+                if carry_partition
+                else None,
+            }
+        )
+    mlist = os.path.join(mdir, f"snap-{snap_id}-{token}.avro")
+    av.write_file(mlist, _MANIFEST_LIST_SCHEMA, rows)
+    scratch.append(mlist)
+    new_meta["last-sequence-number"] = snap_id
+    new_meta["current-snapshot-id"] = snap_id
+    new_meta["snapshots"] = (meta.get("snapshots") or []) + [
+        {
+            "snapshot-id": snap_id,
+            "sequence-number": snap_id,
+            "timestamp-ms": 0,
+            "manifest-list": mlist,
+            "schema-id": schema_id,
+            "summary": summary,
+        }
+    ]
+    if _try_publish_metadata(table, snap_id, new_meta):
+        return snap_id
+    lakecommit.discard(scratch)
+    return lakecommit.LOST
+
+
+def _current_manifests(table: str, meta: dict) -> list[dict]:
+    """The manifest-list rows of the table's current snapshot ([] for
+    a table without one)."""
+    if not meta.get("snapshots"):
+        return []
+    cur = _pick_snapshot(meta, None)
+    return make_generic_avro().read_file(
+        _make_localizer(table, meta)(cur["manifest-list"])
+    )[1]
+
+
 def _commit_snapshot(
     table: str,
     entry_descs: list[dict],
@@ -1382,145 +1481,73 @@ def _commit_snapshot(
     partition_by: list[tuple[str, str]] | None = None,
     txn: tuple[str, int] | None = None,
 ) -> int | None:
-    """The optimistic commit loop: build the new snapshot's manifest +
-    manifest list + metadata against the CURRENT table state, publish
-    put-if-absent, and on losing the version slot re-derive everything
-    from the winner's state and retry. Appends and delete-file commits
-    never conflict semantically (both only ADD a manifest), so a blind
-    retry is always safe — exactly Iceberg's own fast-append path.
+    """The optimistic loop for commits that only ADD a manifest —
+    appends, stream batches, positional/equality delete files: each
+    attempt re-plans against the CURRENT table state, carries every
+    current manifest and publishes through ``_publish_snapshot``; a
+    lost version slot retries from the winner's state. Adds never
+    conflict semantically, so a blind retry is always safe — exactly
+    Iceberg's own fast-append path (the staged data files keep their
+    collision-free names and re-wrap in the next attempt's manifest).
 
-    Manifest entries carry the spec's ``partition`` tuple plus
-    ``lower_bounds``/``upper_bounds`` serialized from the staged
-    files' parquet footers; the manifest-list row carries per-spec-
-    field value summaries — the three metadata layers the reader's
-    pruning consumes."""
-    av = make_generic_avro()
-    mdir = os.path.join(table, "metadata")
-    os.makedirs(mdir, exist_ok=True)
+    What stays here: the ``txn = (app id, epoch)`` ledger replay check
+    (a replay orphans the staged files and commits nothing, returning
+    None), schema evolution for appends (``dtypes``; ``schemas``,
+    ``current-schema-id`` and ``last-column-id`` go in as changes), the
+    spec check against ``partition_by``, and table creation — the only
+    place the metadata skeleton (uuid, location, spec list, sort
+    orders) is built."""
+    os.makedirs(os.path.join(table, "metadata"), exist_ok=True)
+    summary = {"operation": operation}
+    if txn is not None:
+        summary.update({"mr-app-id": txn[0], "mr-epoch": str(txn[1])})
 
     def attempt():
         meta, version = _load_meta_versioned(table)
-        snap_id = version + 1
         if txn is not None and _txn_ledger(meta, txn[0]) >= txn[1]:
             # post-commit replay (possibly our own appId's previous
             # incarnation winning a race mid-loop): orphan this
             # attempt's staged data files, commit nothing
             lakecommit.discard(d["file_path"] for d in entry_descs)
             return None
+        changes = {}
         if dtypes is not None:
-            schemas, cur_schema_id, last_col = _evolve_iceberg_schemas(meta, dtypes)
-        elif meta is not None:
-            schemas = meta.get("schemas") or []
-            cur_schema_id = meta.get("current-schema-id", 0)
-            last_col = meta.get("last-column-id", 0)
-        else:
+            schemas, cur_id, last_col = _evolve_iceberg_schemas(meta, dtypes)
+            changes = {
+                "schemas": schemas,
+                "current-schema-id": cur_id,
+                "last-column-id": last_col,
+            }
+            fields = next(s for s in schemas if s.get("schema-id") == cur_id)["fields"]
+            spec_fields = _resolve_spec(meta, partition_by, fields)
+            if meta is None:
+                meta = {
+                    "format-version": 2,
+                    "table-uuid": hashlib.md5(
+                        os.path.abspath(table).encode()
+                    ).hexdigest(),
+                    # stored paths share this prefix; the localizer
+                    # re-anchors it under the current root after a
+                    # rename/clone, so later commits never rewrite it
+                    "location": table,
+                    "last-updated-ms": 0,
+                    "default-spec-id": 0,
+                    "partition-specs": [{"spec-id": 0, "fields": spec_fields}],
+                    "last-partition-id": 999 + len(spec_fields),
+                    "default-sort-order-id": 0,
+                    "sort-orders": [{"order-id": 0, "fields": []}],
+                }
+        elif meta is None:
             raise ValueError("cannot commit deletes to a table with no metadata")
-        cur_schema = next(
-            s for s in schemas if s.get("schema-id") == cur_schema_id
+        return _publish_snapshot(
+            table,
+            (meta, version),
+            _current_manifests(table, meta),
+            entry_descs,
+            manifest_content,
+            summary,
+            changes,
         )
-        spec_fields = _resolve_spec(meta, partition_by, cur_schema["fields"])
-        default_sid = meta.get("default-spec-id", 0) if meta else 0
-        by_name = {f["name"]: f for f in cur_schema["fields"]}
-        spec_value_types = _spec_value_types(spec_fields, cur_schema["fields"])
-        token = lakecommit.token()
-        carry_partition = manifest_content == 0 and bool(spec_fields)
-        entries = _build_manifest_entries(
-            entry_descs, by_name, snap_id, carry_partition
-        )
-        manifest = os.path.join(mdir, f"manifest-{snap_id}-{token}.avro")
-        av.write_file(
-            manifest,
-            _entry_schema_for_spec(spec_value_types if carry_partition else []),
-            entries,
-        )
-        summaries = (
-            _partition_summaries(entries, spec_value_types)
-            if carry_partition
-            else None
-        )
-        prev_manifests = []
-        if meta is not None and (meta.get("snapshots") or []):
-            cur = _pick_snapshot(meta, None)
-            _local = _make_localizer(table, meta)
-            _, prev_manifests = av.read_file(_local(cur["manifest-list"]))
-        mlist = os.path.join(mdir, f"snap-{snap_id}-{token}.avro")
-        av.write_file(
-            mlist,
-            _MANIFEST_LIST_SCHEMA,
-            prev_manifests
-            + [
-                {
-                    "manifest_path": manifest,
-                    "manifest_length": os.path.getsize(manifest),
-                    "partition_spec_id": default_sid,
-                    "content": manifest_content,
-                    "added_snapshot_id": snap_id,
-                    "partitions": summaries,
-                }
-            ],
-        )
-        # preserve the table's full spec HISTORY (partition evolution:
-        # old manifests keep reading/pruning under THEIR spec ids)
-        if meta is not None and meta.get("partition-specs"):
-            specs_list = meta["partition-specs"]
-            last_part_id = meta.get(
-                "last-partition-id", 999 + sum(len(s["fields"]) for s in specs_list)
-            )
-        else:
-            specs_list = [{"spec-id": 0, "fields": spec_fields}]
-            last_part_id = 999 + len(spec_fields)
-        snapshots = (meta.get("snapshots") if meta else None) or []
-        new_meta = {
-            "format-version": 2,
-            "table-uuid": hashlib.md5(os.path.abspath(table).encode()).hexdigest(),
-            # an existing table KEEPS its recorded location: stored
-            # paths share its prefix, which is what the localizer
-            # re-anchors under the current root after a rename/clone
-            "location": meta.get("location", table) if meta else table,
-            "last-sequence-number": snap_id,
-            "last-updated-ms": 0,
-            "last-column-id": last_col,
-            "current-schema-id": cur_schema_id,
-            "schemas": schemas,
-            "default-spec-id": default_sid,
-            "partition-specs": specs_list,
-            "last-partition-id": last_part_id,
-            "default-sort-order-id": 0,
-            "sort-orders": [{"order-id": 0, "fields": []}],
-            "current-snapshot-id": snap_id,
-            "snapshots": snapshots
-            + [
-                {
-                    "snapshot-id": snap_id,
-                    "sequence-number": snap_id,
-                    "timestamp-ms": 0,
-                    "manifest-list": mlist,
-                    "schema-id": cur_schema_id,
-                    "summary": {"operation": operation}
-                    if txn is None
-                    else {
-                        "operation": operation,
-                        "mr-app-id": txn[0],
-                        "mr-epoch": str(txn[1]),
-                    },
-                }
-            ],
-        }
-        # carry the snapshot-log forward — it records rollback events
-        # (target + abandoned head) that the stream source's
-        # append-only guard needs across later commits
-        if meta is not None and meta.get("snapshot-log"):
-            new_meta["snapshot-log"] = meta["snapshot-log"]
-        # ... and table properties (name mapping lives there)
-        if meta is not None and meta.get("properties"):
-            new_meta["properties"] = meta["properties"]
-        if _try_publish_metadata(table, snap_id, new_meta):
-            return snap_id
-        # lost the race: drop this attempt's manifest pair and rebuild
-        # against the winner's state (staged data files keep their
-        # collision-free names and simply re-wrap in the next manifest)
-        lakecommit.discard((manifest, mlist))
-        return lakecommit.LOST
 
     return lakecommit.retry_commit(f"iceberg {operation} on {table!r}", attempt)
 
@@ -3000,13 +3027,14 @@ def _try_commit_rewrite(
     operation: str = "overwrite",
     base: tuple[dict, int] | None = None,
 ) -> int | None:
-    """ONE optimistic attempt at a rewrite commit: the new snapshot's
-    manifest list re-wraps every current manifest with its victim
-    entries filtered out (a manifest left victim-free is carried
-    as-is; one left empty is dropped), plus a fresh manifest adding
-    ``new_descs``. Returns the committed snapshot id, or None on
-    losing the version race — the CALLER re-derives victims and the
-    rewrite against the winner's state (delta_py.try_commit
+    """ONE optimistic copy-on-write attempt (merge, update, delete):
+    every current manifest is carried with its victim entries filtered
+    out (a manifest left victim-free is carried as-is; one left with
+    nothing live is dropped), and ``_publish_snapshot`` adds a data
+    manifest of ``new_descs``. Returns the committed snapshot id, or
+    None on losing the version race (the filtered manifests are
+    removed with the attempt's own) — the CALLER re-derives victims
+    and the rewrite against the winner's state (delta_py.try_commit
     discipline; a blind retry here could resurrect rows).
 
     Filtered manifests keep their original ``added_snapshot_id`` and
@@ -3023,105 +3051,35 @@ def _try_commit_rewrite(
     meta, version = base if base is not None else _load_meta_versioned(table)
     if meta is None:
         raise ValueError("rewrite commit on a table with no metadata")
-    snap_id = version + 1
-    schemas = meta.get("schemas") or []
-    cur_schema_id = meta.get("current-schema-id", 0)
-    cur_schema = next(s for s in schemas if s.get("schema-id") == cur_schema_id)
-    spec_fields = _resolve_spec(meta, None, cur_schema["fields"])
-    by_name = {f["name"]: f for f in cur_schema["fields"]}
-    spec_value_types = _spec_value_types(spec_fields, cur_schema["fields"])
     _local = _make_localizer(table, meta)
     token = lakecommit.token()
     rows = []
-    scratch: list[str] = []  # this attempt's manifest files, removed on loss
-    if meta.get("snapshots"):
-        cur = _pick_snapshot(meta, None)
-        _, manifests = av.read_file(_local(cur["manifest-list"]))
-        for m in manifests:
-            mschema, entries = av.read_file(_local(m["manifest_path"]))
-            keep = [
-                e
-                for e in entries
-                if e.get("status") == 2
-                or (e["data_file"].get("content") or 0) != 0
-                or os.path.abspath(_local(e["data_file"]["file_path"]))
-                not in victim_locals
-            ]
-            if len(keep) == len(entries):
-                rows.append(m)
-                continue
-            if not any(
-                e.get("status") != 2 for e in keep
-            ):  # nothing live survives
-                continue
-            fpath = os.path.join(
-                mdir, f"manifest-{snap_id}-{token}-f{len(rows)}.avro"
-            )
-            av.write_file(fpath, mschema, keep)
-            scratch.append(fpath)
-            rows.append(
-                dict(
-                    m,
-                    manifest_path=fpath,
-                    manifest_length=os.path.getsize(fpath),
-                )
-            )
-    carry_partition = bool(spec_fields)
-    entries = _build_manifest_entries(new_descs, by_name, snap_id, carry_partition)
-    if entries:  # a pure delete (every victim row dropped) adds nothing
-        manifest = os.path.join(mdir, f"manifest-{snap_id}-{token}.avro")
-        av.write_file(
-            manifest,
-            _entry_schema_for_spec(spec_value_types if carry_partition else []),
-            entries,
-        )
-        scratch.append(manifest)
+    scratch: list[str] = []  # this attempt's filtered manifests
+    for m in _current_manifests(table, meta):
+        mschema, entries = av.read_file(_local(m["manifest_path"]))
+        keep = [
+            e
+            for e in entries
+            if e.get("status") == 2
+            or (e["data_file"].get("content") or 0) != 0
+            or os.path.abspath(_local(e["data_file"]["file_path"])) not in victim_locals
+        ]
+        if len(keep) == len(entries):
+            rows.append(m)
+            continue
+        if not any(e.get("status") != 2 for e in keep):  # nothing live survives
+            continue
+        fpath = os.path.join(mdir, f"manifest-{version + 1}-{token}-f{len(rows)}.avro")
+        av.write_file(fpath, mschema, keep)
+        scratch.append(fpath)
         rows.append(
-            {
-                "manifest_path": manifest,
-                "manifest_length": os.path.getsize(manifest),
-                # the entries and summaries above were built under the
-                # table's DEFAULT spec — record THAT id, not 0, or a
-                # post-evolution reader prunes these summaries under
-                # spec 0's field order/transforms (silent manifest
-                # drops when the specs disagree)
-                "partition_spec_id": meta.get("default-spec-id", 0),
-                "content": 0,
-                "added_snapshot_id": snap_id,
-                "partitions": _partition_summaries(entries, spec_value_types)
-                if carry_partition
-                else None,
-            }
+            dict(m, manifest_path=fpath, manifest_length=os.path.getsize(fpath))
         )
-    mlist = os.path.join(mdir, f"snap-{snap_id}-{token}.avro")
-    av.write_file(mlist, _MANIFEST_LIST_SCHEMA, rows)
-    scratch.append(mlist)
-    new_meta = dict(
-        meta,
-        **{
-            "last-sequence-number": snap_id,
-            "current-snapshot-id": snap_id,
-            "snapshots": (meta.get("snapshots") or [])
-            + [
-                {
-                    "snapshot-id": snap_id,
-                    "sequence-number": snap_id,
-                    "timestamp-ms": 0,
-                    "manifest-list": mlist,
-                    "schema-id": cur_schema_id,
-                    "summary": {"operation": operation},
-                }
-            ],
-        },
+    out = _publish_snapshot(
+        table, (meta, version), rows, new_descs, 0, {"operation": operation},
+        scratch=scratch,
     )
-    # KEEP the recorded location: surviving entries' stored paths share
-    # its prefix, which is exactly what the localizer re-anchors under
-    # the table's current root (a clone/rename). Overriding it with the
-    # current root would orphan every pre-rewrite path.
-    if _try_publish_metadata(table, snap_id, new_meta):
-        return snap_id
-    lakecommit.discard(scratch)
-    return None
+    return None if out is lakecommit.LOST else out
 
 
 def _rewrite_attempt(
@@ -3648,33 +3606,35 @@ def compact_iceberg_files(
     files so every downstream rewrite is safe again.
 
     The read side is the ordinary MOR-resolving reader, so resolution
-    correctness is the already-certified path; the commit publishes a
-    manifest list containing ONLY the new data manifest (old data AND
-    delete manifests fall away atomically). Content-idempotent: the
-    table state before and after hashes identically — compaction moves
-    bytes, never rows.
+    correctness is the already-certified path. The commit is a rewrite
+    through the shared ``_publish_snapshot`` that carries NO manifest:
+    the new manifest list holds only the new data manifest, so old
+    data AND delete manifests fall away atomically; a lost race removes
+    the staged files and re-plans from the winner's state.
+    Content-idempotent: the table state before and after hashes
+    identically — compaction moves bytes, never rows.
 
     ``order_by`` turns compaction into a SORTED (clustering) rewrite:
     the resolved rows range-partition and sort on those columns, so
     each output file covers a narrow disjoint value range and the
     manifests' footer bounds become maximally selective — compaction
     that BUYS min/max pruning (the Iceberg twin of Delta's OPTIMIZE
-    ZORDER for the 1-D case). The sort order is recorded in metadata
-    ``sort-orders``."""
+    ZORDER for the 1-D case). The order goes in as a metadata change —
+    appended to ``sort-orders`` and made the default — and, like every
+    key a commit does not change, survives later commits."""
 
     def attempt():
         meta, version = _load_meta_versioned(table)
         if meta is None:
             raise ValueError("compact on a table with no metadata")
         snap = _pick_snapshot(meta, None)
-        snap_id = version + 1
+        ice_schema = _current_schema(meta, snap)
         resolved = read_iceberg_py(spark, table)
         if order_by:
             resolved = resolved.repartitionByRange(
                 out_files, *order_by
             ).sortWithinPartitions(*order_by)
-        sid = meta.get("default-spec-id", 0)
-        partition_by = _default_partition_by(meta, _current_schema(meta, snap))
+        partition_by = _default_partition_by(meta, ice_schema)
         if not order_by and not partition_by:
             # unpartitioned, unsorted: out_files IS the layout contract
             resolved = resolved.repartition(out_files)
@@ -3691,46 +3651,9 @@ def compact_iceberg_files(
             distribute=bool(partition_by) and not order_by,
             partition_by=partition_by,
         )
-        # commit: a manifest list holding ONLY the new manifest — every
-        # old data file and delete file leaves the live set atomically
-        av = make_generic_avro()
-        mdir = os.path.join(table, "metadata")
-        schemas = meta.get("schemas") or []
-        cur_schema_id = meta.get("current-schema-id", 0)
-        cur_schema = next(
-            s for s in schemas if s.get("schema-id") == cur_schema_id
-        )
-        spec_fields = _default_spec_fields(meta) or []
-        by_name = {f["name"]: f for f in cur_schema["fields"]}
-        spec_value_types = _spec_value_types(spec_fields, cur_schema["fields"])
-        carry = bool(spec_fields)
-        entries = _build_manifest_entries(descs, by_name, snap_id, carry)
-        token = lakecommit.token()
-        manifest = os.path.join(mdir, f"manifest-{snap_id}-{token}.avro")
-        av.write_file(
-            manifest,
-            _entry_schema_for_spec(spec_value_types if carry else []),
-            entries,
-        )
-        mlist = os.path.join(mdir, f"snap-{snap_id}-{token}.avro")
-        av.write_file(
-            mlist,
-            _MANIFEST_LIST_SCHEMA,
-            [
-                {
-                    "manifest_path": manifest,
-                    "manifest_length": os.path.getsize(manifest),
-                    "partition_spec_id": sid,
-                    "content": 0,
-                    "added_snapshot_id": snap_id,
-                    "partitions": _partition_summaries(entries, spec_value_types)
-                    if carry
-                    else None,
-                }
-            ],
-        )
         sort_meta = {}
         if order_by:
+            ids = {f["name"]: f["id"] for f in ice_schema["fields"]}
             prev_orders = meta.get("sort-orders") or []
             order_id = max((o.get("order-id", 0) for o in prev_orders), default=0) + 1
             sort_meta = {
@@ -3741,7 +3664,7 @@ def compact_iceberg_files(
                         "fields": [
                             {
                                 "transform": "identity",
-                                "source-id": by_name[c]["id"],
+                                "source-id": ids[c],
                                 "direction": "asc",
                                 "null-order": "nulls-first",
                             }
@@ -3751,29 +3674,12 @@ def compact_iceberg_files(
                 ],
                 "default-sort-order-id": order_id,
             }
-        new_meta = dict(
-            meta,
-            **sort_meta,
-            **{
-                "last-sequence-number": snap_id,
-                "current-snapshot-id": snap_id,
-                "snapshots": (meta.get("snapshots") or [])
-                + [
-                    {
-                        "snapshot-id": snap_id,
-                        "sequence-number": snap_id,
-                        "timestamp-ms": 0,
-                        "manifest-list": mlist,
-                        "schema-id": cur_schema_id,
-                        "summary": {"operation": "replace"},
-                    }
-                ],
-            },
+        # carry NO manifest: every old data file and delete file leaves
+        # the live set atomically
+        return _publish_snapshot(
+            table, (meta, version), [], descs, 0, {"operation": "replace"},
+            sort_meta, scratch=[d["file_path"] for d in descs],
         )
-        if _try_publish_metadata(table, snap_id, new_meta):
-            return snap_id
-        lakecommit.discard([manifest, mlist] + [d["file_path"] for d in descs])
-        return lakecommit.LOST
 
     return lakecommit.retry_commit(f"iceberg compact on {table!r}", attempt)
 

@@ -23,6 +23,9 @@ OUT_DIR = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__)
 
 
 def main() -> int:
+    if len(sys.argv) < 3:
+        print(__doc__.split("\n\n")[1], file=sys.stderr)
+        return 2
     suffix, names = sys.argv[1], sys.argv[2:]
     from map_reduce_spark.registry import all_queries
     from map_reduce_spark.session import get_spark, release_caches

@@ -101,3 +101,37 @@ def test_sorted_rewrite_buys_pruning(spark, tmp_path):
     assert meta2["default-sort-order-id"] == 1
     so = [o for o in meta2["sort-orders"] if o["order-id"] == 1][0]
     assert [f["transform"] for f in so["fields"]] == ["identity"]
+    # a later append keeps the recorded order as the table default
+    I.append_iceberg_snapshot(d.limit(5), tbl)
+    meta3 = I.load_table_metadata(tbl)
+    assert meta3["default-sort-order-id"] == 1
+    assert [o for o in meta3["sort-orders"] if o["order-id"] == 1] == [so]
+
+
+def test_every_commit_kind_keeps_table_uuid(spark, tmp_path):
+    """Each commit derives its metadata from the state it planned
+    against: no commit kind re-mints the table's identity, also on a
+    clone whose root differs from the path the uuid was minted from."""
+    src, tbl = str(tmp_path / "src"), str(tmp_path / "clone")
+    I.append_iceberg_snapshot(_mk(spark).repartition(4), src)
+    uuid = I.load_table_metadata(src)["table-uuid"]
+    I.clone_iceberg_table(src, tbl)
+    commits = [
+        lambda: I.append_iceberg_snapshot(
+            _mk(spark, 10).withColumn("id", F.col("id") + 1000), tbl
+        ),
+        lambda: I.commit_positional_deletes(spark, tbl, F.col("id") % 10 == 0),
+        lambda: I.compact_iceberg_files(spark, tbl, out_files=2),
+        lambda: I.delete_iceberg_where(spark, tbl, F.col("id") < 5),
+        lambda: I.merge_iceberg_upsert(
+            spark, tbl, _mk(spark, 3).withColumn("id", F.col("id") + 51), "id"
+        ),
+    ]
+    versions = []
+    for commit in commits:
+        commit()
+        meta, version = I._load_meta_versioned(tbl)
+        assert meta["table-uuid"] == uuid
+        versions.append(version)
+    assert versions == list(range(2, 2 + len(commits)))  # each one committed
+    assert I.read_iceberg_py(spark, tbl).count() == 100 + 10 - 11 - 4
