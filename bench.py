@@ -7,27 +7,29 @@ round-9 per-query maps outgrew):
   {"metric": "...", "value": <total sec>, "unit": "sec", "sf": ...,
    "calib_sec": ..., "calib_shuffle_sec": ..., ...}
 
-The full per-query maps ({"queries": {q: sec}, "queries_norm":
-{q: sec/calib_shuffle_sec}, "cold": {...}}) are written to
-BENCH_DETAIL.json AND to a per-run stamped file
-(BENCH_DETAIL_cpus<N>_sf<sf>.json, so a second run at a different
-core count cannot clobber the first run's detail), printed once as a
-single detail line, and — because that line exceeds a 2000-char
-line-oriented capture — re-emitted as short standalone
-{"metric": "per_query_chunk", "i": k, "n": K, "queries": {...}}
-JSON lines immediately before the final summary line (round-11
-VERDICT item 1; warm values identical to detail["queries"]).
+Immediately before it comes the warm per-query map in positional form,
+{"metric": "per_query_warm", "roster": <8 hex of sha1(",".join(HEADLINE))>,
+"cpus": ..., "sf": ..., "v": [warm sec per HEADLINE entry, 2 decimals]};
+the two lines together stay under the driver's 2000-char tail.
 
-Each query is materialized through the noop sink (full execution, no
-driver-side collection cost), after a small JVM warm-up.
+The full per-query maps ({"queries": {q: sec}, "queries_norm":
+{q: sec/calib_shuffle_sec}, "cold": {...}, "records": {q: best warm
+run record}}) are written to BENCH_DETAIL.json AND to a per-run
+stamped file (BENCH_DETAIL_cpus<N>_sf<sf>.json, so a second run at a
+different core count cannot clobber the first run's detail), and
+printed once as a single detail line.
+
+Every query runs through ``map_reduce_spark.runlog.time_roster``: one
+cold pass, then three warm passes, min per query (noop sink: full
+execution, no driver-side collection cost).
 """
 
 from __future__ import annotations
 
+import hashlib
 import json
 import os
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
@@ -256,50 +258,27 @@ def _proc_stat() -> tuple[int, int] | None:
 
 
 def main() -> None:
-    from map_reduce_spark.registry import queries
-    from map_reduce_spark.session import _cpus, get_spark, release_caches
+    from map_reduce_spark.runlog import time_roster
+    from map_reduce_spark.session import _cpus, get_spark
 
     load_start = _host_load()  # contention reading BEFORE Spark ramps up
     stat_start = _proc_stat()
     spark = get_spark("bench")
-    qs = queries()
 
     calib = _calibrate(spark)  # also serves as JVM/codegen first warm-up
     calib_shuffle = _calibrate_shuffle(spark)
 
-    # pass 1 (cold): JVM JIT + codegen warm-up — recorded separately;
-    # pass 2 (warm): steady-state throughput, the headline number.
-    cold: dict[str, float] = {}
-    for name in HEADLINE:
-        t0 = time.perf_counter()
-        qs[name](spark, SF_DIR).write.format("noop").mode("overwrite").save()
-        cold[name] = round(time.perf_counter() - t0, 3)
-        # each call stage_cache()s its own frames; release them outside
-        # the timer so cached frames never accumulate across the 1 cold
-        # + 3 measured passes over the headline set (GC pressure from
-        # that buildup hit the first query of each pass hardest — the
-        # round-3 mr_pipeline outlier). The tracked release replaces the
-        # blanket clearCache() (r4 ADVICE: library callers get the same
-        # hook instead of having to nuke the whole catalog cache).
-        release_caches()
-
-    # three measured passes, min per query — damps scheduler/GC jitter
-    # (run-to-run VM noise of up to ~40% observed; min-of-3 keeps the
-    # headline close to steady-state throughput). Per-pass totals are
-    # recorded so INTRA-run host drift (a co-tenant arriving mid-run)
-    # is visible in the artifact, not just inferable.
-    timings: dict[str, float] = {}
-    pass_totals: list[float] = []
-    for _ in range(3):
-        pass_total = 0.0
-        for name in HEADLINE:
-            t0 = time.perf_counter()
-            qs[name](spark, SF_DIR).write.format("noop").mode("overwrite").save()
-            dt = round(time.perf_counter() - t0, 3)
-            pass_total += dt
-            timings[name] = min(timings.get(name, dt), dt)
-            release_caches()
-        pass_totals.append(round(pass_total, 3))
+    # pass 1 (cold): JVM JIT + codegen warm-up, recorded separately;
+    # passes 2-4 (warm): min per query, the headline number — min-of-3
+    # damps scheduler/GC jitter (run-to-run VM noise of up to ~40%
+    # observed). Per-pass totals make INTRA-run host drift (a
+    # co-tenant arriving mid-run) visible in the artifact. Each run
+    # releases its stage caches outside the timer, so cached frames
+    # never accumulate across passes (the round-3 mr_pipeline outlier).
+    roster = time_roster(spark, HEADLINE, SF_DIR, warm=3)
+    runs = roster["queries"]
+    cold = {n: r["cold"]["total_s"] for n, r in runs.items()}
+    timings = {n: r["best"]["total_s"] for n, r in runs.items()}
 
     stat_end = _proc_stat()
     steal_pct = None
@@ -323,6 +302,13 @@ def main() -> None:
     queries_norm = (
         {n: round(t / norm_base, 3) for n, t in timings.items()} if norm_base else {}
     )
+    # Per-run stamped detail file (round-11 VERDICT item 1): the driver
+    # benches at TWO core counts per round, and a single BENCH_DETAIL
+    # .json was overwritten by the second (low-core) run, losing the
+    # main run's per-query map. The stamped name keeps every
+    # configuration's detail on disk; the legacy name stays for
+    # existing tooling.
+    stamped = f"BENCH_DETAIL_cpus{_cpus()}_sf{sf}.json"
     summary = {
         "metric": "headline_queries_total_sec",
         "value": round(sum(timings.values()), 3),
@@ -332,7 +318,7 @@ def main() -> None:
         ),
         "n_queries": len(timings),
         "cold_total_sec": round(sum(cold.values()), 3),
-        "pass_totals_sec": pass_totals,
+        "pass_totals_sec": roster["pass_totals_s"][1:],
         "calib_sec": calib,
         "calib_shuffle_sec": calib_shuffle,
         "load_avg_start": load_start,
@@ -340,17 +326,15 @@ def main() -> None:
         "steal_pct": steal_pct,
         "host_cpus": os.cpu_count(),
         "sf": sf_val,
-        "queries_detail": "BENCH_DETAIL.json",
+        "queries_detail": stamped,
     }
-    # Per-run stamped detail file (round-11 VERDICT item 1): the driver
-    # benches at TWO core counts per round, and a single BENCH_DETAIL
-    # .json was overwritten by the second (low-core) run, losing the
-    # main run's per-query map. The stamped name keeps every
-    # configuration's detail on disk; the legacy name stays for
-    # existing tooling.
-    stamped = f"BENCH_DETAIL_cpus{_cpus()}_sf{sf}.json"
-    summary["queries_detail"] = stamped
-    detail = dict(summary, queries=timings, queries_norm=queries_norm, cold=cold)
+    detail = dict(
+        summary,
+        queries=timings,
+        queries_norm=queries_norm,
+        cold=cold,
+        records={n: r["best"] for n, r in runs.items()},
+    )
     here = os.path.dirname(os.path.abspath(__file__))
     for fname in ("BENCH_DETAIL.json", stamped):
         try:
@@ -359,29 +343,17 @@ def main() -> None:
         except OSError:
             pass  # read-only checkout: the stdout lines still carry it
     print(json.dumps(detail))
-    # Per-query map in tail-capturable form (round-11 VERDICT item 1):
-    # the single detail line above is ~8 KB and invisible to the
-    # driver's 2000-char line capture, so the warm per-query map is
-    # re-emitted as SHORT standalone JSON lines any line-oriented
-    # reader can parse. Values identical to detail["queries"].
-    chunk_limit = 700
-    chunks: list[dict[str, float]] = []
-    cur: dict[str, float] = {}
-    for k, v in timings.items():
-        cur[k] = v
-        # a lone oversized entry stays as its own chunk: popping it
-        # would flush an empty {} chunk
-        if len(json.dumps(cur)) > chunk_limit and len(cur) > 1:
-            cur.popitem()
-            chunks.append(cur)
-            cur = {k: v}
-    if cur:
-        chunks.append(cur)
-    for i, c in enumerate(chunks):
-        print(json.dumps({
-            "metric": "per_query_chunk", "i": i, "n": len(chunks),
-            "cpus": cpus, "sf": sf_val, "queries": c,
-        }))
+    # The warm map in tail-capturable form (round-12 VERDICT item 1):
+    # the detail line above is ~10 KB, invisible to the driver's
+    # 2000-char tail, so the values go out once more in HEADLINE order,
+    # keyed by a roster hash instead of 92 names.
+    print(json.dumps({
+        "metric": "per_query_warm",
+        "roster": hashlib.sha1(",".join(HEADLINE).encode()).hexdigest()[:8],
+        "cpus": _cpus(),
+        "sf": sf_val,
+        "v": [round(timings[n], 2) for n in HEADLINE],
+    }, separators=(",", ":")))
     print(json.dumps(summary))
     spark.stop()
 

@@ -1496,7 +1496,9 @@ def _commit_snapshot(
     ``current-schema-id`` and ``last-column-id`` go in as changes), the
     spec check against ``partition_by``, and table creation — the only
     place the metadata skeleton (uuid, location, spec list, sort
-    orders) is built."""
+    orders) is built. A commit with nothing staged, no ``txn`` and no
+    schema change on an existing table writes nothing and returns the
+    current snapshot id (so does a delete that matched no row)."""
     os.makedirs(os.path.join(table, "metadata"), exist_ok=True)
     summary = {"operation": operation}
     if txn is not None:
@@ -1539,6 +1541,15 @@ def _commit_snapshot(
                 }
         elif meta is None:
             raise ValueError("cannot commit deletes to a table with no metadata")
+        if (
+            txn is None
+            and not entry_descs
+            and meta.get("snapshots")
+            and all(meta.get(k) == v for k, v in changes.items())
+        ):
+            # nothing staged, no epoch to record, no schema change: the
+            # current snapshot already is this commit's result
+            return meta["current-snapshot-id"]
         return _publish_snapshot(
             table,
             (meta, version),
@@ -1631,8 +1642,6 @@ def commit_positional_deletes(
         .sortWithinPartitions("file_path", "pos")
     )
     descs = _stage_parquet_files(hits, table, "delete", content=1)
-    if not descs:
-        return snap["snapshot-id"]
     return _commit_snapshot(
         table, descs, manifest_content=1, operation="delete", dtypes=None
     )
@@ -2699,8 +2708,6 @@ def commit_equality_deletes(
     descs = _stage_parquet_files(
         delete_df.select(*equality_cols).distinct(), table, "eqdelete", content=2
     )
-    if not descs:
-        return snap["snapshot-id"]
     for d in descs:
         d["equality_ids"] = ids
     return _commit_snapshot(

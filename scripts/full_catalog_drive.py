@@ -14,16 +14,11 @@ Prints one JSON line: {"sf", "tz", "oracled_ok", "rows_only_ok",
 from __future__ import annotations
 
 import json
+import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
-
-import duckdb  # noqa: E402
-
-TABLES = (
-    "region nation customer supplier part orders lineitem events documents embeddings"
-).split()
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
 def main() -> int:
@@ -41,39 +36,10 @@ def main() -> int:
         .getOrCreate()
     )
     import __spark_entry__ as entry
-    from map_reduce_spark.session import release_caches
-    from tests.oracle import assert_frames_match
+    from replay import replay
 
-    con = duckdb.connect()
-    for t in TABLES:
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf_dir}/{t}.parquet')"
-        )
-    qs, oracles = entry.queries(), entry.oracle_sql()
     t_start = time.time()
-    oracled_ok = rows_only_ok = 0
-    failed: list[list[str]] = []
-    for i, (name, fn) in enumerate(qs.items()):
-        t0 = time.time()
-        try:
-            sdf = fn(spark, sf_dir)
-            if name in oracles:
-                assert_frames_match(sdf, con.execute(oracles[name]).df(), name)
-                oracled_ok += 1
-                tag = "OK"
-            else:
-                assert sdf.count() >= 0
-                rows_only_ok += 1
-                tag = "rows-only"
-            print(
-                f"  [{i + 1:3d}/{len(qs)}] {name:36s} {tag:9s} {time.time() - t0:5.1f}s",
-                file=sys.stderr,
-            )
-        except Exception as e:  # noqa: BLE001 - report-and-continue harness
-            failed.append([name, str(e)[:300]])
-            print(f"  [{i + 1:3d}/{len(qs)}] {name:36s} FAIL {e}", file=sys.stderr)
-        finally:
-            release_caches()
+    oracled_ok, rows_only_ok, failed = replay(spark, list(entry.queries()), sf_dir)
     print(
         json.dumps(
             {

@@ -96,11 +96,10 @@ def main() -> None:
     )
     import __spark_entry__ as E
 
+    from map_reduce_spark.io import TABLES
+
     con = duckdb.connect()
-    for t in (
-        "region nation customer supplier part orders lineitem "
-        "events documents embeddings"
-    ).split():
+    for t in TABLES:
         con.execute(
             f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf}/{t}.parquet')"
         )

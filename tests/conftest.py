@@ -10,10 +10,9 @@ import pytest
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from map_reduce_spark.io import TABLES  # noqa: E402
+
 SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
-TABLES = (
-    "region nation customer supplier part orders lineitem events documents embeddings"
-).split()
 
 
 @pytest.fixture(scope="session")

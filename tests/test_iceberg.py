@@ -93,6 +93,26 @@ def test_snapshots_and_travel(spark, tmp_path):
         I.read_iceberg_py(spark, tbl, snapshot_id=99)
 
 
+def test_empty_append_writes_nothing(spark, tmp_path):
+    """A zero-row append to an existing table publishes nothing and
+    returns the current snapshot; creation from an empty frame, an
+    empty append that adds a column, and an empty stream batch (its
+    epoch must land in the ledger) still commit."""
+    tbl = str(tmp_path / "t")
+    mdir = os.path.join(tbl, "metadata")
+    assert I.append_iceberg_snapshot(_mk(spark, 0), tbl) == 1
+    assert I.append_iceberg_snapshot(_mk(spark, 20), tbl) == 2
+    before = sorted(os.listdir(mdir))
+    assert I.append_iceberg_snapshot(_mk(spark, 0), tbl) == 2
+    assert I.append_iceberg_snapshot(_mk(spark, 0).select("k"), tbl) == 2
+    assert sorted(os.listdir(mdir)) == before
+    wider = _mk(spark, 0).withColumn("w", F.lit(1))
+    assert I.append_iceberg_snapshot(wider, tbl) == 3
+    assert I.append_iceberg_stream_batch(wider, tbl, "app", 0) == 4
+    assert I._txn_ledger(I.load_table_metadata(tbl), "app") == 0
+    assert I.read_iceberg_py(spark, tbl).count() == 20
+
+
 def test_version_hint_fallback(spark, tmp_path):
     tbl = str(tmp_path / "t")
     I.append_iceberg_snapshot(_mk(spark, 30), tbl)
