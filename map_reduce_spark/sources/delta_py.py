@@ -498,98 +498,105 @@ def _ckpt_arrow_types() -> dict:
     }
 
 
-def _ckpt_add_row(a: dict) -> dict:
+def _ckpt_rows(snap: DeltaSnapshot) -> dict[str, list[dict]]:
+    """The reconciled action rows both checkpoint forms carry, by
+    action column (protocol, metaData, live adds, remove tombstones,
+    txn versions)."""
     return {
-        "path": a["path"],
-        "partitionValues": list((a.get("partitionValues") or {}).items()),
-        "size": a.get("size", 0),
-        "modificationTime": a.get("modificationTime", 0),
-        "dataChange": bool(a.get("dataChange", True)),
-        "stats": a.get("stats"),
-        # merge-on-read state MUST survive checkpointing — a
-        # checkpoint that dropped the DV would resurrect rows
-        "deletionVector": a.get("deletionVector"),
+        "protocol": [
+            {
+                "minReaderVersion": snap.protocol.get("minReaderVersion", 1),
+                "minWriterVersion": snap.protocol.get("minWriterVersion", 2),
+                "readerFeatures": snap.protocol.get("readerFeatures"),
+                "writerFeatures": snap.protocol.get("writerFeatures"),
+            }
+        ],
+        "metaData": [
+            {
+                "id": snap.metadata["id"],
+                "format": {"provider": "parquet"},
+                "schemaString": snap.metadata["schemaString"],
+                "partitionColumns": snap.partition_columns,
+                "configuration": list(
+                    (snap.metadata.get("configuration") or {}).items()
+                ),
+            }
+        ],
+        "add": [
+            {
+                "path": a["path"],
+                "partitionValues": list((a.get("partitionValues") or {}).items()),
+                "size": a.get("size", 0),
+                "modificationTime": a.get("modificationTime", 0),
+                "dataChange": bool(a.get("dataChange", True)),
+                "stats": a.get("stats"),
+                # merge-on-read state MUST survive checkpointing — a
+                # checkpoint that dropped the DV would resurrect rows
+                "deletionVector": a.get("deletionVector"),
+            }
+            for _, a in sorted(snap.adds.items())
+        ],
+        "remove": [
+            {
+                "path": r["path"],
+                "deletionTimestamp": r.get("deletionTimestamp", 0),
+                "dataChange": bool(r.get("dataChange", True)),
+            }
+            for _, r in sorted(snap.removes.items())
+        ],
+        "txn": [{"appId": app, "version": v} for app, v in sorted(snap.txns.items())],
     }
+
+
+def _lane_table(lanes: list[tuple[str, list]]):
+    """(checkpoint parquet table, row count): one row per action — each
+    ``(column, rows)`` lane fills its own consecutive slice of the rows,
+    in order, and is null elsewhere."""
+    import pyarrow as pa
+
+    t = _ckpt_arrow_types()
+    n = sum(len(rows) for _, rows in lanes)
+    cols, off = {}, 0
+    for name, rows in lanes:
+        pad = [None] * (n - off - len(rows))
+        cols[name] = pa.array([None] * off + rows + pad, type=t[name])
+        off += len(rows)
+    return pa.table(cols), n
+
+
+def _write_ckpt_file(tbl, path: str) -> None:
+    """Write a checkpoint or sidecar parquet durably under its final
+    name: a per-call temp file, fsynced and renamed, directory fsynced
+    — so the ``_last_checkpoint`` pointer published after it never
+    names bytes that did not reach disk."""
+    import pyarrow.parquet as pq
+
+    tmp = f"{path}.tmp{lakecommit.token()}"
+    pq.write_table(tbl, tmp)
+    lakecommit.sync_replace(tmp, path)
+
+
+def _publish_last_checkpoint(table: str, pointer: dict) -> None:
+    ptr = os.path.join(_log_dir(table), _LAST_CHECKPOINT)
+    tmp = f"{ptr}.tmp{lakecommit.token()}"
+    with open(tmp, "w", encoding="utf-8") as fh:
+        fh.write(json.dumps(pointer))
+    lakecommit.sync_replace(tmp, ptr)
 
 
 def write_checkpoint(table: str, snap: DeltaSnapshot) -> None:
     """Spec-layout single-file checkpoint: one row per reconciled
-    action (protocol, metaData, live adds, remove tombstones), plus the
-    ``_last_checkpoint`` pointer. Written via pyarrow; read back by
-    ``_read_checkpoint``. Crash-safe: the pointer is os.replace'd last,
-    and a torn checkpoint parquet without a pointer is never preferred
-    over pure-JSON replay... the pointer is advisory here — snapshot()
-    lists checkpoint files directly, so publish the parquet atomically
-    too (write + rename)."""
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    t = _ckpt_arrow_types()
-    add_t, rem_t, proto_t, txn_t, meta_t = (
-        t["add"], t["remove"], t["protocol"], t["txn"], t["metaData"],
+    action (protocol, metaData, live adds, remove tombstones, txn),
+    plus the ``_last_checkpoint`` pointer. Written via pyarrow; read
+    back by ``_read_checkpoint``. Crash-safe: snapshot() lists
+    checkpoint files directly, so the parquet publishes durably
+    (``_write_ckpt_file``) before the pointer is replaced."""
+    rows = _ckpt_rows(snap)
+    tbl, n = _lane_table(
+        [(k, rows[k]) for k in ("protocol", "metaData", "add", "remove", "txn")]
     )
-    _add_row = _ckpt_add_row
-
-    rows_proto, rows_meta, rows_add, rows_rem = [], [], [], []
-    rows_proto.append(
-        {
-            "minReaderVersion": snap.protocol.get("minReaderVersion", 1),
-            "minWriterVersion": snap.protocol.get("minWriterVersion", 2),
-            "readerFeatures": snap.protocol.get("readerFeatures"),
-            "writerFeatures": snap.protocol.get("writerFeatures"),
-        }
-    )
-    rows_meta.append(
-        {
-            "id": snap.metadata["id"],
-            "format": {"provider": "parquet"},
-            "schemaString": snap.metadata["schemaString"],
-            "partitionColumns": snap.partition_columns,
-            "configuration": list(
-                (snap.metadata.get("configuration") or {}).items()
-            ),
-        }
-    )
-    rows_add = [_add_row(a) for _, a in sorted(snap.adds.items())]
-    rows_rem = [
-        {
-            "path": r["path"],
-            "deletionTimestamp": r.get("deletionTimestamp", 0),
-            "dataChange": bool(r.get("dataChange", True)),
-        }
-        for _, r in sorted(snap.removes.items())
-    ]
-    rows_txn = [
-        {"appId": app, "version": v} for app, v in sorted(snap.txns.items())
-    ]
-    n = 2 + len(rows_add) + len(rows_rem) + len(rows_txn)
-    pad = [None] * n
-
-    def _lane(offset, rows):
-        return pad[:offset] + rows + pad[offset + len(rows):]
-
-    tbl = pa.table(
-        {
-            "protocol": pa.array(_lane(0, [rows_proto[0]]), type=proto_t),
-            "metaData": pa.array(_lane(1, [rows_meta[0]]), type=meta_t),
-            "add": pa.array(_lane(2, rows_add), type=add_t),
-            "remove": pa.array(_lane(2 + len(rows_add), rows_rem), type=rem_t),
-            "txn": pa.array(
-                _lane(2 + len(rows_add) + len(rows_rem), rows_txn), type=txn_t
-            ),
-        }
-    )
-    final = _checkpoint_path(table, snap.version)
-    tmp = final + f".tmp{os.getpid()}"
-    pq.write_table(tbl, tmp)
-    os.replace(tmp, final)
-    ptr = os.path.join(_log_dir(table), _LAST_CHECKPOINT)
-    ptr_tmp = ptr + f".tmp{os.getpid()}"
-    with open(ptr_tmp, "w", encoding="utf-8") as fh:
-        fh.write(json.dumps({"version": snap.version, "size": n}))
-        fh.flush()
-        os.fsync(fh.fileno())
-    os.replace(ptr_tmp, ptr)
+    _write_ckpt_file(tbl, _checkpoint_path(table, snap.version))
+    _publish_last_checkpoint(table, {"version": snap.version, "size": n})
 
 
 def write_checkpoint_v2(
@@ -607,45 +614,23 @@ def write_checkpoint_v2(
     (and by any spec reader)."""
     import uuid as _uuid
 
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    t = _ckpt_arrow_types()
+    rows = _ckpt_rows(snap)
     d = _log_dir(table)
     sc_dir = os.path.join(d, "_sidecars")
     os.makedirs(sc_dir, exist_ok=True)
-
-    rows_add = [_ckpt_add_row(a) for _, a in sorted(snap.adds.items())]
-    rows_rem = [
-        {
-            "path": r["path"],
-            "deletionTimestamp": r.get("deletionTimestamp", 0),
-            "dataChange": bool(r.get("dataChange", True)),
-        }
-        for _, r in sorted(snap.removes.items())
-    ]
     # shard file actions into sidecars (adds first, then removes —
     # reconciliation is order-independent across DISTINCT paths, which
     # the active-set/tombstone split guarantees)
-    lanes = [({"add": a}) for a in rows_add] + [({"remove": r}) for r in rows_rem]
+    actions = [("add", a) for a in rows["add"]] + [("remove", r) for r in rows["remove"]]
     sidecars = []
-    for i in range(0, max(len(lanes), 1), sidecar_actions):
-        shard = lanes[i : i + sidecar_actions]
-        adds = [x.get("add") for x in shard]
-        rems = [x.get("remove") for x in shard]
+    for i in range(0, max(len(actions), 1), sidecar_actions):
+        shard = actions[i : i + sidecar_actions]
+        tbl, _ = _lane_table(
+            [(k, [r for kk, r in shard if kk == k]) for k in ("add", "remove")]
+        )
         name = f"{_uuid.uuid4()}.parquet"
         sc_path = os.path.join(sc_dir, name)
-        tmp = sc_path + f".tmp{os.getpid()}"
-        pq.write_table(
-            pa.table(
-                {
-                    "add": pa.array(adds, type=t["add"]),
-                    "remove": pa.array(rems, type=t["remove"]),
-                }
-            ),
-            tmp,
-        )
-        os.replace(tmp, sc_path)
+        _write_ckpt_file(tbl, sc_path)
         sidecars.append(
             {
                 "path": name,
@@ -653,65 +638,28 @@ def write_checkpoint_v2(
                 "modificationTime": 0,
             }
         )
-
-    rows_txn = [
-        {"appId": app, "version": v} for app, v in sorted(snap.txns.items())
-    ]
-    n = 3 + len(rows_txn) + len(sidecars)
-    pad = [None] * n
-
-    def _lane(offset, rows):
-        return pad[:offset] + rows + pad[offset + len(rows):]
-
-    proto_row = {
-        "minReaderVersion": snap.protocol.get("minReaderVersion", 1),
-        "minWriterVersion": snap.protocol.get("minWriterVersion", 2),
-        "readerFeatures": snap.protocol.get("readerFeatures"),
-        "writerFeatures": snap.protocol.get("writerFeatures"),
-    }
-    meta_row = {
-        "id": snap.metadata["id"],
-        "format": {"provider": "parquet"},
-        "schemaString": snap.metadata["schemaString"],
-        "partitionColumns": snap.partition_columns,
-        "configuration": list((snap.metadata.get("configuration") or {}).items()),
-    }
-    ckpt_meta_row = {"version": snap.version, "tags": []}
-    off_txn = 3
-    off_sc = 3 + len(rows_txn)
-    manifest_tbl = pa.table(
-        {
-            "protocol": pa.array(_lane(0, [proto_row]), type=t["protocol"]),
-            "metaData": pa.array(_lane(1, [meta_row]), type=t["metaData"]),
-            "checkpointMetadata": pa.array(
-                _lane(2, [ckpt_meta_row]), type=t["checkpointMetadata"]
-            ),
-            "txn": pa.array(_lane(off_txn, rows_txn), type=t["txn"]),
-            "sidecar": pa.array(_lane(off_sc, sidecars), type=t["sidecar"]),
-        }
+    tbl, n = _lane_table(
+        [
+            ("protocol", rows["protocol"]),
+            ("metaData", rows["metaData"]),
+            ("checkpointMetadata", [{"version": snap.version, "tags": []}]),
+            ("txn", rows["txn"]),
+            ("sidecar", sidecars),
+        ]
     )
     final = os.path.join(
         d, f"{snap.version:020d}.checkpoint.{_uuid.uuid4()}.parquet"
     )
-    tmp = final + f".tmp{os.getpid()}"
-    pq.write_table(manifest_tbl, tmp)
-    os.replace(tmp, final)
-    ptr = os.path.join(d, _LAST_CHECKPOINT)
-    ptr_tmp = ptr + f".tmp{os.getpid()}"
-    with open(ptr_tmp, "w", encoding="utf-8") as fh:
-        fh.write(
-            json.dumps(
-                {
-                    "version": snap.version,
-                    "size": n + len(lanes),
-                    "sizeInBytes": os.path.getsize(final),
-                    "v2Checkpoint": {"path": os.path.basename(final)},
-                }
-            )
-        )
-        fh.flush()
-        os.fsync(fh.fileno())
-    os.replace(ptr_tmp, ptr)
+    _write_ckpt_file(tbl, final)
+    _publish_last_checkpoint(
+        table,
+        {
+            "version": snap.version,
+            "size": n + len(actions),
+            "sizeInBytes": os.path.getsize(final),
+            "v2Checkpoint": {"path": os.path.basename(final)},
+        },
+    )
     return final
 
 
@@ -1422,6 +1370,10 @@ def clean_delta_log(table: str, retain_last: int = 0) -> dict:
         (``retain_last`` trailing commits survive so the CDF /
         incremental change readers stay servable over that tail — the
         version-count analog of ``delta.logRetentionDuration``);
+      - ``_change_data`` files named only by those expired commits
+        (checkpoints carry no cdc actions, so no reader reaches them
+        any more; removed AFTER their commits, so a crash in between
+        leaves orphans for ``vacuum_delta``, never a dangling commit);
       - checkpoint files strictly below B, in every form (classic
         single-file, complete or torn multipart sets, v2 uuid
         manifests) — superseded seeds;
@@ -1449,6 +1401,8 @@ def clean_delta_log(table: str, retain_last: int = 0) -> dict:
     d = _log_dir(table)
     json_floor = b - max(retain_last, 0)
     surviving_manifests: list[str] = []
+    expired_cdc: set[str] = set()
+    kept_cdc: set[str] = set()
     for f in sorted(os.listdir(d)):
         p = os.path.join(d, f)
         m_v2 = _V2_CKPT_RE.match(f)
@@ -1469,9 +1423,17 @@ def clean_delta_log(table: str, retain_last: int = 0) -> dict:
                 os.remove(p)
                 out["checkpoints_removed"] += 1
         elif f.endswith(".json") and f[:20].isdigit():
+            cdc = {a["cdc"]["path"] for a in _read_commit(table, int(f[:20])) if "cdc" in a}
             if int(f[:20]) <= json_floor:
                 os.remove(p)
                 out["json_removed"] += 1
+                expired_cdc |= cdc
+            else:
+                kept_cdc |= cdc
+    lakecommit.discard(
+        os.path.join(table, urllib.parse.unquote(rel))
+        for rel in sorted(expired_cdc - kept_cdc)
+    )
     sc_dir = os.path.join(d, "_sidecars")
     if os.path.isdir(sc_dir):
         live: set[str] = set()
@@ -2915,6 +2877,162 @@ def streaming_delta_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --------------------------------------------------------------------
 
 
+def make_change_planner(table_abs: str):
+    """Closure factory for Delta's one change-range planner: the batch
+    readers ``read_delta_changes`` / ``read_delta_changes_cdf`` and the
+    ``stream_delta_cdf`` source all plan their ranges here. The
+    closure is stdlib-only and pickles by value into the stream's
+    plan-time worker (NOTES rule 39).
+
+    ``plan(lo, hi)`` lists the commits in (lo, hi] and returns
+    ``(files, rewrites)``. ``files`` is ``[(version, kind, local
+    path)]``: a commit carrying ``cdc`` actions contributes its change
+    files ALONE (kind 'cdc' — its add/remove actions describe the
+    rewrite, not the change), any other commit its data-changing adds
+    (kind 'insert'); dataChange=false commits (OPTIMIZE) contribute
+    nothing. ``rewrites`` lists the versions with data-changing
+    removes. A range with expired commits (``clean_delta_log``)
+    raises RuntimeError — skipping them would hand the consumer a
+    hole in the feed — and a rewrite without cdc files raises
+    NotImplementedError: its per-row changes are unrecoverable.
+
+    ``plan.latest()`` is the newest commit version (-1 for no log)."""
+    import json as _json
+    import os as _os
+    import urllib.parse as _up
+
+    d = _os.path.join(table_abs, "_delta_log")
+
+    def _versions() -> list:
+        try:
+            names = _os.listdir(d)
+        except FileNotFoundError:
+            return []
+        return sorted(
+            int(f[:20])
+            for f in names
+            if f.endswith(".json") and f[:20].isdigit() and len(f) == 25
+        )
+
+    def latest() -> int:
+        vs = _versions()
+        return vs[-1] if vs else -1
+
+    def plan(lo: int, hi: int) -> tuple:
+        have = [v for v in _versions() if lo < v <= hi]
+        if have != list(range(lo + 1, hi + 1)):
+            raise RuntimeError(
+                f"change range ({lo}, {hi}] has expired commits "
+                f"(present: {have}) — history below a cleaned log is "
+                "unrecoverable; re-read the snapshot (a stream restarts "
+                "from a snapshot read + fresh checkpoint)"
+            )
+        files, rewrites = [], []
+        for v in have:
+            with open(_os.path.join(d, f"{v:020d}.json"), encoding="utf-8") as fh:
+                acts = [_json.loads(line) for line in fh if line.strip()]
+            cdc = [a["cdc"]["path"] for a in acts if "cdc" in a]
+            if any("remove" in a and a["remove"].get("dataChange", True) for a in acts):
+                if not cdc:
+                    raise NotImplementedError(
+                        f"version {v} rewrites data without cdc files: "
+                        "enable delta.enableChangeDataFeed before the "
+                        "rewrite (or re-read the snapshot)"
+                    )
+                rewrites.append(v)
+            if cdc:
+                files.extend((v, "cdc", p) for p in cdc)
+            else:
+                files.extend(
+                    (v, "insert", a["add"]["path"])
+                    for a in acts
+                    if "add" in a and a["add"].get("dataChange", True)
+                )
+        files = [(v, k, _os.path.join(table_abs, _up.unquote(p))) for v, k, p in files]
+        return files, rewrites
+
+    plan.latest = latest
+    return plan
+
+
+def _read_change_range(
+    spark: SparkSession,
+    table: str,
+    since_version: int,
+    to_version: int | None,
+    append_only: bool,
+) -> DataFrame:
+    """The change rows of (since_version, to_version] as planned by
+    ``make_change_planner``: its 'cdc' files and its 'insert' files
+    each land in ONE multi-file scan under PHYSICAL names, projected
+    back to logical names (column-mapping tables; cdc files follow the
+    table's mapping, same as its data files). With ``append_only`` a
+    range holding any data-changing rewrite refuses and the frame is
+    the table schema alone; otherwise each row also carries
+    ``_change_type`` and ``_commit_version`` (a broadcast file→version
+    join on ``_metadata.file_path``, so planning stays O(1) in the
+    commit count)."""
+    plan = make_change_planner(os.path.abspath(table))
+    latest = plan.latest()
+    if latest < 0:
+        raise FileNotFoundError(f"no Delta log at {table!r}")
+    hi = latest if to_version is None else to_version
+    files, rewrites = plan(since_version, hi)
+    if append_only and rewrites:
+        raise NotImplementedError(
+            f"version {rewrites[0]} rewrites data (dataChange=true remove): "
+            "this exact change feed covers append-only ranges; read "
+            "read_delta_changes_cdf or re-read the snapshot"
+        )
+    snap = snapshot(table, hi)  # protocol gate + schema as of range end
+    mapping = snap.column_mapping()
+    phys = snap.physical_schema()
+    ct = StructField("_change_type", StringType(), True)
+    extra = ["_change_type"] if append_only else ["_change_type", "_commit_version"]
+    frames = []
+    for kind, root, fields in (
+        ("cdc", os.path.join(table, "_change_data"), phys.fields + [ct]),
+        ("insert", table, phys.fields),
+    ):
+        pairs = [(p, v) for v, k, p in files if k == kind]
+        if not pairs:
+            continue
+        reader = spark.read.schema(StructType(fields))
+        if snap.partition_columns:
+            reader = reader.option("basePath", root)
+        df = reader.parquet(*[p for p, _ in pairs])
+        if not append_only:
+            vmap = spark.createDataFrame(
+                [(os.path.abspath(p), v) for p, v in pairs],
+                "__cdf_fp string, _commit_version long",
+            )
+            df = (
+                df.withColumn("__cdf_fp", _strip_scheme(F.col("_metadata.file_path")))
+                .join(F.broadcast(vmap), "__cdf_fp")
+                .drop("__cdf_fp")
+            )
+        if kind == "insert":
+            df = df.withColumn("_change_type", F.lit("insert"))
+        if mapping:
+            df = df.select([F.col(p).alias(n) for n, p in mapping.items()] + extra)
+        frames.append(df)
+    cols = [f.name for f in snap.schema.fields] + ([] if append_only else extra)
+    if not frames:
+        frames = [
+            spark.createDataFrame(
+                [],
+                StructType(
+                    snap.schema.fields
+                    + [ct, StructField("_commit_version", LongType(), True)]
+                ),
+            )
+        ]
+    out = frames[0]
+    for f in frames[1:]:
+        out = out.unionByName(f)
+    return out.select(*cols)
+
+
 def read_delta_changes(
     spark: SparkSession,
     table: str,
@@ -2927,49 +3045,14 @@ def read_delta_changes(
 
     Semantics are exact because the reader REFUSES ranges containing a
     data-changing rewrite (a remove with dataChange=true means rows
-    moved files and per-row diffing would need delta-core's CDF writer
-    feature, deliberately out of scope); OPTIMIZE commits
-    (dataChange=false throughout) are transparently skipped — that is
-    the point of the flag: compaction moves bytes, so an incremental
-    consumer pays ZERO re-read for it. Cost is O(changed files), never
-    O(table): the log slice names exactly the files to scan, and the
-    scan itself is native parquet.
-    """
-    js, _ = _list_log(table)
-    if not js:
-        raise FileNotFoundError(f"no Delta log at {table!r}")
-    hi = js[-1] if to_version is None else to_version
-    have = [v for v in js if since_version < v <= hi]
-    if have != list(range(since_version + 1, hi + 1)):
-        # log-retention cleanup (clean_delta_log) may have expired
-        # commits inside the range — silently skipping them would hand
-        # the consumer a hole in the feed
-        raise RuntimeError(
-            f"change range ({since_version}, {hi}] has expired commits "
-            f"(present: {have}) — history below a cleaned log is "
-            "unrecoverable; re-read the snapshot"
-        )
-    snap = snapshot(table, hi)  # protocol gate + schema as of the range end
-    new_files: list[str] = []
-    for v in have:
-        for a in _read_commit(table, v):
-            if "remove" in a and a["remove"].get("dataChange", True):
-                raise NotImplementedError(
-                    f"version {v} rewrites data (dataChange=true remove): "
-                    "this exact change feed covers append-only ranges; "
-                    "re-read the snapshot or enable a CDF-writing engine"
-                )
-            if "add" in a and a["add"].get("dataChange", True):
-                new_files.append(
-                    os.path.join(table, urllib.parse.unquote(a["add"]["path"]))
-                )
-    schema = snap.schema
-    if not new_files:
-        return spark.createDataFrame([], schema)
-    reader = spark.read.schema(schema)
-    if snap.partition_columns:
-        reader = reader.option("basePath", table)
-    return reader.parquet(*new_files)
+    moved files; ``read_delta_changes_cdf`` serves those ranges from
+    cdc files); OPTIMIZE commits (dataChange=false throughout) are
+    transparently skipped — that is the point of the flag: compaction
+    moves bytes, so an incremental consumer pays ZERO re-read for it.
+    Cost is O(changed files), never O(table): the range planner
+    (``make_change_planner``) names exactly the files to scan, and the
+    scan itself is native parquet."""
+    return _read_change_range(spark, table, since_version, to_version, True)
 
 
 def _cdf_enabled(snap: DeltaSnapshot) -> bool:
@@ -3046,127 +3129,14 @@ def read_delta_changes_cdf(
     """Row-level CHANGE DATA FEED over (since_version, to_version]:
     the table schema plus ``_change_type`` ('insert', 'delete',
     'update_preimage', 'update_postimage') and ``_commit_version``.
-
-    Per the Delta CDF contract: a commit carrying ``cdc`` actions is
-    read from its ``_change_data`` files ALONE (its add/remove actions
-    describe the rewrite, not the change — rewritten-but-unchanged
-    rows must not appear); a commit with data-changing adds and no cdc
-    is an append (adds read as 'insert'); dataChange=false commits
-    (OPTIMIZE) contribute nothing; a data-changing REWRITE without cdc
-    refuses loudly — the writer wasn't CDF-enabled for it and per-row
-    changes are unrecoverable. Cost is O(changed rows) in cdc files +
-    O(appended files), never O(table) — and planner cost is O(1) in
-    the COMMIT count: the range's cdc files and appended files land in
-    ONE multi-file scan each, with per-row ``_commit_version``
-    attached by a broadcast file→version join on
-    ``_metadata.file_path``, so a CDC consumer catching up over a
-    long retention window plans two scans, never one union leg per
-    commit. Column-mapping tables scan under PHYSICAL names and
-    project back to logical after the join (cdc files follow the
-    table's mapping, same as its data files)."""
-    js, _ = _list_log(table)
-    if not js:
-        raise FileNotFoundError(f"no Delta log at {table!r}")
-    hi = js[-1] if to_version is None else to_version
-    have = [v for v in js if since_version < v <= hi]
-    if have != list(range(since_version + 1, hi + 1)):
-        raise RuntimeError(
-            f"CDF range ({since_version}, {hi}] has expired commits "
-            f"(present: {have}) — change history below a cleaned log "
-            "is unrecoverable; re-read the snapshot"
-        )
-    snap = snapshot(table, hi)  # protocol gate + schema as of range end
-    schema = snap.schema
-    mapping = snap.column_mapping()
-    phys = snap.physical_schema()
-    with_ct = StructType(
-        schema.fields + [StructField("_change_type", StringType(), True)]
-    )
-    cdc_files: list[tuple[str, int]] = []  # (abs path, commit version)
-    add_files: list[tuple[str, int]] = []
-    for v in have:
-        acts = _read_commit(table, v)
-        cdc = [
-            os.path.join(table, urllib.parse.unquote(a["cdc"]["path"]))
-            for a in acts
-            if "cdc" in a
-        ]
-        if cdc:
-            cdc_files.extend((p, v) for p in cdc)
-            continue
-        adds = [
-            a["add"] for a in acts if "add" in a and a["add"].get("dataChange", True)
-        ]
-        removes = [
-            a for a in acts if "remove" in a and a["remove"].get("dataChange", True)
-        ]
-        if removes:
-            raise NotImplementedError(
-                f"version {v} rewrites data without cdc files: enable "
-                "delta.enableChangeDataFeed before the rewrite (or "
-                "re-read the snapshot)"
-            )
-        add_files.extend(
-            (os.path.join(table, urllib.parse.unquote(a["path"])), v) for a in adds
-        )
-
-    def _with_version(df: DataFrame, pairs: list[tuple[str, int]]) -> DataFrame:
-        vmap = F.broadcast(
-            spark.createDataFrame(
-                [(os.path.abspath(p), v) for p, v in pairs],
-                "__cdf_fp string, _commit_version long",
-            )
-        )
-        return (
-            df.withColumn("__cdf_fp", _strip_scheme(F.col("_metadata.file_path")))
-            .join(vmap, "__cdf_fp")
-            .drop("__cdf_fp")
-        )
-
-    def _to_logical(df: DataFrame) -> DataFrame:
-        if not mapping:
-            return df
-        return df.select(
-            [F.col(p).alias(n) for n, p in mapping.items()]
-            + [F.col("_change_type"), F.col("_commit_version")]
-        )
-
-    frames = []
-    if cdc_files:
-        reader = spark.read.schema(
-            StructType(phys.fields + [StructField("_change_type", StringType(), True)])
-        )
-        if snap.partition_columns:
-            reader = reader.option("basePath", os.path.join(table, "_change_data"))
-        frames.append(
-            _to_logical(
-                _with_version(reader.parquet(*[p for p, _ in cdc_files]), cdc_files)
-            )
-        )
-    if add_files:
-        reader = spark.read.schema(phys)
-        if snap.partition_columns:
-            reader = reader.option("basePath", table)
-        frames.append(
-            _to_logical(
-                _with_version(
-                    reader.parquet(*[p for p, _ in add_files]), add_files
-                ).withColumn("_change_type", F.lit("insert"))
-            )
-        )
-    if not frames:
-        return spark.createDataFrame(
-            [],
-            StructType(
-                with_ct.fields + [StructField("_commit_version", LongType(), True)]
-            ),
-        )
-    out = frames[0]
-    for f in frames[1:]:
-        out = out.unionByName(f)
-    return out.select(
-        *[f.name for f in schema.fields], "_change_type", "_commit_version"
-    )
+    Commits classify per the Delta CDF contract in
+    ``make_change_planner``: cdc files alone for a rewrite commit
+    (rewritten-but-unchanged rows never appear), adds as 'insert' for
+    an append, nothing for OPTIMIZE, and a loud refusal for a rewrite
+    written without cdc files. Cost is O(changed rows) in cdc files +
+    O(appended files), never O(table), and the plan is two scans
+    whatever the commit count (``_read_change_range``)."""
+    return _read_change_range(spark, table, since_version, to_version, False)
 
 
 def stream_delta_cdf(spark: SparkSession, table: str) -> DataFrame:
@@ -3181,9 +3151,10 @@ def stream_delta_cdf(spark: SparkSession, table: str) -> DataFrame:
     pre-enablement rewrites).
 
     Spark-4 Python DataSource; NOTES rule 39 discipline: the planner
-    and reader are self-contained closures over the table path —
-    commits parse with stdlib json in the plan-time worker, data reads
-    are executor-side pyarrow RecordBatches. Partitioned tables refuse
+    (``make_change_planner``, shared with the batch readers) and the
+    reader are self-contained closures over the table path — commits
+    parse with stdlib json in the plan-time worker, data reads are
+    executor-side pyarrow RecordBatches. Partitioned tables refuse
     (their change rows would need hive-path reconstruction in the
     worker); the batch reader serves those."""
     snap0 = snapshot(table)
@@ -3206,86 +3177,17 @@ def stream_delta_cdf(spark: SparkSession, table: str) -> DataFrame:
         InputPartition,
     )
 
-    def _commits(lo: int, hi: int) -> list:
-        """[(version, kind, local file path)] for commits in (lo, hi] —
-        kind is 'cdc' or 'insert'. Stdlib-only: runs in the plan-time
-        worker."""
-        import json as _json
-        import os as _os
-        import urllib.parse as _up
-
-        out = []
-        d = _os.path.join(table_abs, "_delta_log")
-        names = sorted(
-            f
-            for f in _os.listdir(d)
-            if f.endswith(".json") and f[:20].isdigit() and len(f) == 25
-        )
-        have = [v for v in (int(f[:20]) for f in names) if lo < v <= hi]
-        if have != list(range(lo + 1, hi + 1)):
-            # a cleaned log (clean_delta_log) must not silently shrink
-            # the stream: a fresh stream below the retained tail, or a
-            # resuming stream whose offset predates the cleaned floor,
-            # refuses instead of dropping the expired commits
-            raise RuntimeError(
-                f"delta cdf stream: offset range ({lo}, {hi}] has "
-                f"expired commits (present: {have}) — restart the "
-                "stream from a snapshot read + fresh checkpoint"
-            )
-        for f in names:
-            v = int(f[:20])
-            if not (lo < v <= hi):
-                continue
-            acts = []
-            with open(_os.path.join(d, f), encoding="utf-8") as fh:
-                for line in fh:
-                    if line.strip():
-                        acts.append(_json.loads(line))
-            cdc = [a["cdc"] for a in acts if "cdc" in a]
-            if cdc:
-                for c in cdc:
-                    out.append(
-                        (v, "cdc", _os.path.join(table_abs, _up.unquote(c["path"])))
-                    )
-                continue
-            removes = [
-                a for a in acts
-                if "remove" in a and a["remove"].get("dataChange", True)
-            ]
-            if removes:
-                raise ValueError(
-                    f"delta cdf stream: version {v} rewrites data without "
-                    "cdc files — enable delta.enableChangeDataFeed before "
-                    "rewriting, or consume past it with a batch read"
-                )
-            for a in acts:
-                if "add" in a and a["add"].get("dataChange", True):
-                    out.append(
-                        (v, "insert",
-                         _os.path.join(table_abs, _up.unquote(a["add"]["path"])))
-                    )
-        return out
+    planner = make_change_planner(table_abs)  # closure: pickles by value
 
     class _DeltaCdfReader(DataSourceStreamReader):
         def initialOffset(self):
             return {"v": -1}
 
         def latestOffset(self):
-            import os as _os
-
-            d = _os.path.join(table_abs, "_delta_log")
-            try:
-                vs = [
-                    int(f[:20])
-                    for f in _os.listdir(d)
-                    if f.endswith(".json") and f[:20].isdigit() and len(f) == 25
-                ]
-            except FileNotFoundError:
-                return {"v": -1}
-            return {"v": max(vs)} if vs else {"v": -1}
+            return {"v": planner.latest()}
 
         def partitions(self, start, end):
-            parts = _commits(start["v"], end["v"])
+            parts, _ = planner(start["v"], end["v"])
             return [InputPartition(p) for p in parts] or [InputPartition(None)]
 
         def read(self, partition):

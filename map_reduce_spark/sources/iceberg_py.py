@@ -2030,61 +2030,35 @@ def read_iceberg_changes(
 ) -> DataFrame:
     """Incremental snapshot-diff read (Iceberg's incremental-append
     scan): the rows added by snapshots in (from_snapshot, to_snapshot].
-    Manifest entries carry the snapshot id that ADDED them, so the
-    selection is pure metadata — entries with an id inside the range —
-    and the scan reads O(changed files), never the table.
+    The range is planned by ``make_appends_planner`` — the stream
+    source's planner — from manifest entries, which carry the snapshot
+    id that ADDED them, so the selection is pure metadata and the scan
+    reads O(changed files), never the table. The planner's guards
+    apply unchanged: a rewrite or compaction in range, an expired end
+    snapshot, or an endpoint inside a rolled-back interval refuses
+    with ValueError.
 
-    Delete manifests: positional deletes committed INSIDE the range
-    are netted out of the range's own adds (the consumer sees only the
+    Delete files: positional deletes committed INSIDE the range are
+    netted out of the range's own adds (the consumer sees only the
     rows that survived the range), the merge-on-read anti-join
     restricted to the in-range file set. A range delete that targets
-    PRE-range data still gates loudly — an append-only feed cannot
-    express retracting rows the consumer already ingested; that needs
-    a CDF-capable engine (the same exactness-over-guessing rule as
-    ``delta_py.read_delta_changes``)."""
-    av = make_generic_avro()
+    PRE-range data refuses with NotImplementedError — an append-only
+    feed cannot express retracting rows the consumer already ingested
+    (``read_iceberg_changelog`` expresses COW rewrites); so do
+    equality deletes in range."""
     meta = load_table_metadata(table)
     snap = _pick_snapshot(meta, to_snapshot)
-    hi = snap["snapshot-id"]
-    _local = _make_localizer(table, meta)
-
-    _, manifests = av.read_file(_local(snap["manifest-list"]))
-    stored_to_local: dict[str, str] = {}
-    delete_files: list[str] = []
-    delete_rows = 0
-    for m in manifests:
-        if m.get("added_snapshot_id", 0) <= from_snapshot:
-            continue  # manifest predates the range: skip WITHOUT reading it
-        is_delete_manifest = m.get("content", 0) == 1
-        _, entries = av.read_file(_local(m["manifest_path"]))
-        for e in entries:
-            # spec: a null entry snapshot_id inherits the manifest's
-            # added_snapshot_id, and manifest merges re-record in-range
-            # adds as status EXISTING (0) — both still belong to the
-            # diff; only DELETED (2) entries are out
-            sid = e.get("snapshot_id")
-            if sid is None:
-                sid = m.get("added_snapshot_id", 0)
-            if e.get("status") not in (0, 1) or not (from_snapshot < sid <= hi):
-                continue
-            df_ = e["data_file"]
-            content = df_.get("content")
-            if content is None:
-                content = 1 if is_delete_manifest else 0
-            if content == 0:
-                stored_to_local[df_["file_path"]] = os.path.abspath(
-                    _local(df_["file_path"])
-                )
-            elif content == 1:
-                delete_files.append(os.path.abspath(_local(df_["file_path"])))
-                delete_rows += int(df_.get("record_count") or 0)
-            else:
-                raise NotImplementedError(
-                    "iceberg_py: equality deletes in an incremental range "
-                    "are not supported"
-                )
+    files = make_appends_planner(os.path.abspath(table))(
+        from_snapshot, snap["snapshot-id"]
+    )
+    stored_to_local = {s: p for p, (c, s, _) in files.items() if c == 0}
+    delete_files = sorted(p for p, (c, _, _) in files.items() if c == 1)
+    if any(c == 2 for c, _, _ in files.values()):
+        raise NotImplementedError(
+            "iceberg_py: equality deletes in an incremental range "
+            "are not supported"
+        )
     range_schema = _schema_for_snapshot(meta, snap)
-    schema = StructType.fromDDL(_iceberg_schema_to_ddl(range_schema))
     if not stored_to_local:
         if delete_files:
             raise NotImplementedError(
@@ -2092,9 +2066,11 @@ def read_iceberg_changes(
                 "files — an append-only change feed cannot express "
                 "retractions; re-read the snapshot or use a CDF engine"
             )
-        return spark.createDataFrame([], schema)
+        return spark.createDataFrame(
+            [], StructType.fromDDL(_iceberg_schema_to_ddl(range_schema))
+        )
     df = _mapped_parquet_scan(
-        spark, meta, range_schema, sorted(set(stored_to_local.values()))
+        spark, meta, range_schema, sorted(stored_to_local.values())
     )
     if delete_files:
         # deletes are only nettable when they target the range's own
@@ -2121,7 +2097,7 @@ def read_iceberg_changes(
             df,
             {
                 "delete_files": delete_files,
-                "delete_rows": delete_rows,
+                "delete_rows": sum(files[p][2] for p in delete_files),
                 "stored_to_local": stored_to_local,
             },
         )
@@ -4281,36 +4257,60 @@ def iceberg_rewrite_sorted(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def make_appends_planner(table_abs: str):
-    """Closure factory for the stream source's range planner (module-
-    level factory so tests can probe planning directly; the returned
-    CLOSURE pickles by value into the plan-time worker — NOTES rule
-    39). ``plan(lo, hi)`` returns the local data-file paths ADDED by
-    the append snapshots in (lo, hi], with the append-only and
-    replayability guards:
+    """Closure factory for Iceberg's one snapshot-range planner: the
+    batch ``read_iceberg_changes`` and the ``stream_iceberg_appends``
+    source both plan their ranges here (module-level factory so tests
+    can probe planning directly; the returned CLOSURE pickles by value
+    into the plan-time worker — NOTES rule 39).
 
-    - any non-append snapshot in range is refused (its rewritten rows
-      would surface as fresh adds — duplicates),
-    - planning reads the END-offset snapshot's immutable manifest
-      list, never the current one, so a checkpoint REPLAY of an old
-      range sees the same files even after a later compaction dropped
-      them from the live set; an EXPIRED end snapshot refuses with a
-      reset-the-checkpoint message."""
+    ``plan(lo, hi)`` returns ``{local path: (content, stored path,
+    record count)}`` for every file ADDED by the snapshots in (lo, hi]
+    — content 0 data, 1 positional deletes, 2 equality deletes;
+    iterating it yields the paths. Its guards:
+
+    - a range offset inside an interval abandoned by
+      ``rollback_iceberg`` is refused (rows read from it are no longer
+      table state),
+    - planning reads the END snapshot's immutable manifest list, never
+      the current one, so a checkpoint REPLAY of an old range sees the
+      same files even after a later compaction dropped them from the
+      live set; an EXPIRED end snapshot refuses with a
+      reset-the-checkpoint message,
+    - every snapshot in range must be an append, or a delete that
+      added only delete manifests (merge-on-read deletes, which the
+      batch reader nets against the range's adds); any other
+      operation is refused — a rewrite or compaction would surface its
+      rewritten rows as fresh adds (duplicates).
+
+    ``plan.latest()`` is the current snapshot id (0 for no table)."""
+    import json as _json
+    import os as _os
+
     av = make_generic_avro()
+    mdir = _os.path.join(table_abs, "metadata")
 
-    def plan(lo: int, hi: int) -> list:
-        import json as _json
-        import os as _os
-
-        if hi <= lo:
-            return []
-        mdir = _os.path.join(table_abs, "metadata")
-        versions = [
-            int(f[1:].split(".")[0])
-            for f in _os.listdir(mdir)
-            if f.startswith("v") and f.endswith(".metadata.json")
-        ]
+    def _meta():
+        try:
+            versions = [
+                int(f[1:].split(".")[0])
+                for f in _os.listdir(mdir)
+                if f.startswith("v") and f.endswith(".metadata.json")
+            ]
+        except FileNotFoundError:
+            return None
+        if not versions:
+            return None
         with open(_os.path.join(mdir, f"v{max(versions)}.metadata.json")) as fh:
-            m = _json.load(fh)
+            return _json.load(fh)
+
+    def latest() -> int:
+        m = _meta()
+        return int((m or {}).get("current-snapshot-id") or 0)
+
+    def plan(lo: int, hi: int) -> dict:
+        if hi <= lo:
+            return {}
+        m = _meta() or {}
         loc = m.get("location", "")
         if loc.startswith("file:"):
             loc = loc[len("file:"):]
@@ -4325,70 +4325,76 @@ def make_appends_planner(table_abs: str):
         # rollback guard: rollback_iceberg logs each rollback as
         # (target t, abandoned head h) — every snapshot id in (t, h]
         # is OFF the current lineage (ids are never reused, so a later
-        # re-append cannot re-validate them). A consumer whose
-        # committed offset sits in that interval has emitted rows the
-        # table no longer holds; an end offset in it would emit them.
+        # re-append cannot re-validate them). A consumer whose start
+        # offset sits in that interval has read rows the table no
+        # longer holds; an end offset in it would read them.
         for ev in m.get("snapshot-log") or []:
             h = ev.get("rolled-back-from")
             if h is None:
                 continue
             t = ev["snapshot-id"]
-            for off, word in ((lo, "committed"), (hi, "end")):
+            for off, word in ((lo, "start"), (hi, "end")):
                 if t < off <= h:
                     raise ValueError(
-                        "iceberg stream source: table was rolled back "
-                        f"from snapshot {h} to {t}, and this stream's "
+                        "iceberg change range: table was rolled back "
+                        f"from snapshot {h} to {t}, and the range's "
                         f"{word} offset {off} lies in the abandoned "
-                        "range — emitted rows are no longer table "
-                        "state; reset the checkpoint"
+                        "range — rows read from it are no longer table "
+                        "state; reset the checkpoint or re-read the "
+                        "snapshot"
                     )
-        for s in m.get("snapshots") or []:
-            sid_ = s["snapshot-id"]
-            if lo < sid_ <= hi and (
-                (s.get("summary") or {}).get("operation", "append") != "append"
-            ):
-                raise ValueError(
-                    "iceberg stream source: snapshot "
-                    f"{sid_} is a {s['summary']['operation']!r} — the "
-                    "append-only feed refuses ranges containing "
-                    "rewrites; consume past them with a batch read"
-                )
-        snap = next(
-            (s for s in m.get("snapshots") or [] if s["snapshot-id"] == hi),
-            None,
-        )
+        snaps = m.get("snapshots") or []
+        snap = next((s for s in snaps if s["snapshot-id"] == hi), None)
         if snap is None:
             raise ValueError(
-                f"iceberg stream source: offset snapshot {hi} no longer "
-                "in table history (expired?) — the replayed range "
-                "cannot be reconstructed exactly; reset the checkpoint"
+                f"iceberg change range: end snapshot {hi} no longer "
+                "in table history (expired?) — the range cannot be "
+                "reconstructed exactly; reset the checkpoint"
             )
         _, manifests = av.read_file(local(snap["manifest-list"]))
-        files = []
+        added: dict[int, set] = {}  # snapshot id -> contents of its manifests
         for mf in manifests:
-            added = mf.get("added_snapshot_id") or 0
-            if not (lo < added <= hi):
+            sid = mf.get("added_snapshot_id") or 0
+            added.setdefault(sid, set()).add(mf.get("content", 0))
+        for s in snaps:
+            sid = s["snapshot-id"]
+            op = (s.get("summary") or {}).get("operation", "append")
+            if not lo < sid <= hi or op == "append":
                 continue
-            if mf.get("content", 0) == 1:
+            if op != "delete" or added.get(sid) != {1}:
                 raise ValueError(
-                    "iceberg stream source: snapshot range contains "
-                    "DELETE manifests — the append-only feed refuses "
-                    "rather than emitting wrong increments"
+                    f"iceberg change range: snapshot {sid} is a {op!r} "
+                    "that rewrites data files — the append-only feed "
+                    "refuses ranges containing rewrites; re-read the "
+                    "snapshot or use read_iceberg_changelog"
                 )
+        files = {}
+        for mf in manifests:
+            sid0 = mf.get("added_snapshot_id") or 0
+            if not lo < sid0 <= hi:
+                continue
             _, entries = av.read_file(local(mf["manifest_path"]))
             for e in entries:
+                # spec: a null entry snapshot_id inherits the
+                # manifest's added_snapshot_id, and manifest merges
+                # re-record in-range adds as status EXISTING (0) —
+                # both still belong to the range; only DELETED (2)
+                # entries are out
                 if e.get("status") == 2:
                     continue
                 df_ = e["data_file"]
-                if (df_.get("content") or 0) != 0:
-                    raise ValueError(
-                        "iceberg stream source: delete files in range"
+                content = df_.get("content")
+                if content is None:
+                    content = mf.get("content", 0)
+                if lo < (e.get("snapshot_id") or sid0) <= hi:
+                    files[local(df_["file_path"])] = (
+                        content,
+                        df_["file_path"],
+                        int(df_.get("record_count") or 0),
                     )
-                sid = e.get("snapshot_id") or added
-                if lo < sid <= hi:
-                    files.append(local(df_["file_path"]))
         return files
 
+    plan.latest = latest
     return plan
 
 
@@ -4401,12 +4407,13 @@ def stream_iceberg_appends(spark: SparkSession, table: str) -> DataFrame:
     as ``read_iceberg_changes``, deployed as an unbounded stream.
 
     Spark-4 Python DataSource with a full ``DataSourceStreamReader``:
-    planning (latestOffset/partitions) walks ONLY manifest metadata in
+    planning (latestOffset/partitions) is ``make_appends_planner``'s,
+    shared with the batch reader, and walks ONLY manifest metadata in
     the plan-time worker; each data file becomes one InputPartition,
     and ``read`` yields pyarrow RecordBatches executor-side (Arrow
-    transfer, no row-at-a-time Python). Ranges containing delete
-    manifests or rewrites raise loudly — this is the append-only feed,
-    exactly the ``read_delta_changes`` contract.
+    transfer, no row-at-a-time Python). Ranges containing delete files
+    or rewrites raise loudly — this is the append-only feed, exactly
+    the ``read_delta_changes`` contract.
 
     NOTES rule 39 discipline: every helper the reader touches is a
     captured CLOSURE (the avro codec namespace pickles by value;
@@ -4433,29 +4440,16 @@ def stream_iceberg_appends(spark: SparkSession, table: str) -> DataFrame:
             return {"v": 0}
 
         def latestOffset(self):
-            import json as _json
-            import os as _os
-
-            mdir = _os.path.join(table_abs, "metadata")
-            try:
-                versions = [
-                    int(f[1:].split(".")[0])
-                    for f in _os.listdir(mdir)
-                    if f.startswith("v") and f.endswith(".metadata.json")
-                ]
-            except FileNotFoundError:
-                return {"v": 0}
-            if not versions:
-                return {"v": 0}
-            with open(
-                _os.path.join(mdir, f"v{max(versions)}.metadata.json")
-            ) as fh:
-                m = _json.load(fh)
-            cur = m.get("current-snapshot-id") or 0
-            return {"v": int(cur)}
+            return {"v": planner.latest()}
 
         def partitions(self, start, end):
             files = planner(start["v"], end["v"])
+            if any(content for content, _, _ in files.values()):
+                raise ValueError(
+                    "iceberg stream source: snapshot range contains "
+                    "delete files — the append-only feed refuses rather "
+                    "than emitting wrong increments"
+                )
             return [InputPartition(f) for f in files] or [InputPartition(None)]
 
         def read(self, partition):

@@ -86,12 +86,24 @@ def publish_if_absent(path: str, payload: str) -> bool:
         return False
     finally:
         os.remove(tmp)
-    fd = os.open(d, os.O_RDONLY)
+    _fsync(d)  # persist the link itself
+    return True
+
+
+def _fsync(path: str) -> None:
+    fd = os.open(path, os.O_RDONLY)
     try:
-        os.fsync(fd)  # persist the link itself
+        os.fsync(fd)
     finally:
         os.close(fd)
-    return True
+
+
+def sync_replace(tmp: str, path: str) -> None:
+    """Durably move the fully written ``tmp`` onto ``path`` (overwrite
+    allowed): fsync the file, ``os.replace`` it, fsync the directory."""
+    _fsync(tmp)
+    os.replace(tmp, path)
+    _fsync(os.path.dirname(path))
 
 
 def retry_commit(what: str, attempt: Callable[[], T]) -> T:

@@ -25,18 +25,10 @@ def main() -> int:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     tz = sys.argv[2] if len(sys.argv) > 2 else "UTC"
 
-    from pyspark.sql import SparkSession
+    from replay import replay, vanilla_session
 
-    spark = (
-        SparkSession.builder.master("local[16]")
-        .config("spark.sql.shuffle.partitions", "32")
-        .config("spark.driver.memory", "24g")
-        .config("spark.sql.session.timeZone", tz)
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-    )
+    spark = vanilla_session(tz, shuffle_partitions=32)
     import __spark_entry__ as entry
-    from replay import replay
 
     t_start = time.time()
     oracled_ok, rows_only_ok, failed = replay(spark, list(entry.queries()), sf_dir)

@@ -12,7 +12,8 @@ Usage: python scripts/parity_at_scale.py [SF_DIR] [--include-heavy]
 Default SF_DIR is the 10x slice from scripts/synth_sf1.py.
 --include-heavy keeps the expensive-but-feasible oracles (portable
 minhash/simhash, BPE chain, the coarse-cell family) — budget ~10 min
-and give the JVM memory (this script asks for 24g driver heap).
+and give the JVM memory (the driver heap is half the host's physical
+RAM, at most 24g; cores come from the engine's CPU count).
 --include-composed additionally replays the composed pipelines
 (prepare/select_pretraining_data), the components family, the capped
 ngram twin, the ~1M-row resampling outputs, and the SAMPLED-KEY
@@ -79,21 +80,14 @@ HEAVY = [
 
 def main() -> None:
     import duckdb
-    from pyspark.sql import SparkSession
+    from replay import vanilla_session
 
     args = [a for a in sys.argv[1:] if not a.startswith("--")]
     include_heavy = "--include-heavy" in sys.argv
     include_composed = "--include-composed" in sys.argv
     sf = args[0] if args else "/root/repo/.sf1synth"
 
-    spark = (
-        SparkSession.builder.master("local[16]")
-        .config("spark.sql.shuffle.partitions", "64")
-        .config("spark.driver.memory", "24g")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-    )
+    spark = vanilla_session("UTC", shuffle_partitions=64)
     import __spark_entry__ as E
 
     from map_reduce_spark.io import TABLES

@@ -25,6 +25,26 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 WINDOW = 50
 
 
+def vanilla_session(tz: str, shuffle_partitions: int):
+    """A driver-style VANILLA session (none of the engine's own conf)
+    sized from the host: one task slot per core the engine would use
+    (``session._cpus``) and a driver heap of half the physical RAM,
+    at most 24g."""
+    from pyspark.sql import SparkSession
+
+    from map_reduce_spark.session import _cpus
+
+    ram_gb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // 2**30
+    return (
+        SparkSession.builder.master(f"local[{_cpus()}]")
+        .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
+        .config("spark.driver.memory", f"{max(1, min(24, ram_gb // 2))}g")
+        .config("spark.sql.session.timeZone", tz)
+        .config("spark.ui.enabled", "false")
+        .getOrCreate()
+    )
+
+
 def replay(spark, names, sf_dir: str) -> tuple[int, int, list[list[str]]]:
     """Run each of ``names`` (None or empty: the driver window) over
     ``sf_dir``; returns ``(oracled_ok, rows_only_ok, failed)`` with

@@ -67,6 +67,43 @@ def test_time_travel_and_checkpoint_equivalence(spark, tbl):
     assert seeded.metadata["schemaString"] == pure.metadata["schemaString"]
 
 
+@pytest.mark.parametrize("writer", ["write_checkpoint", "write_checkpoint_v2"])
+def test_checkpoint_durable_before_pointer(spark, tbl, monkeypatch, writer):
+    """Every checkpoint file (and sidecar) and its directory are
+    fsynced before ``_last_checkpoint`` is replaced — the pointer must
+    never name bytes that did not reach disk."""
+    D.write_delta_py(_mk(spark, 30), tbl, mode="overwrite", checkpoint_interval=0)
+    events = []
+    real_fsync, real_replace = os.fsync, os.replace
+
+    def fsync(fd):
+        st = os.fstat(fd)
+        events.append(("fsync", (st.st_dev, st.st_ino)))
+        return real_fsync(fd)
+
+    def replace(src, dst):
+        events.append(("replace", os.path.basename(dst)))
+        return real_replace(src, dst)
+
+    monkeypatch.setattr(os, "fsync", fsync)
+    monkeypatch.setattr(os, "replace", replace)
+    getattr(D, writer)(tbl, D.snapshot(tbl))
+    monkeypatch.undo()
+    log = os.path.join(tbl, "_delta_log")
+    ckpts = [
+        os.path.join(root, f)
+        for root, _, fs in os.walk(log)
+        for f in fs
+        if f.endswith(".parquet")
+    ]
+    assert ckpts
+    ptr = events.index(("replace", "_last_checkpoint"))
+    synced = {key for kind, key in events[:ptr] if kind == "fsync"}
+    for p in ckpts + [log]:
+        st = os.stat(p)
+        assert (st.st_dev, st.st_ino) in synced, p
+
+
 def test_uncommitted_files_invisible(spark, tbl):
     """The crash window: data files that reached the table directory
     without their commit JSON must never be read."""

@@ -298,6 +298,38 @@ def test_changes_feed_resolves_renamed_files(spark, tmp_path):
     assert (1, 10) in vals and (3, 30) in vals  # neither era NULLed
 
 
+def test_changes_feed_refuses_cow_delete_range(spark, tmp_path):
+    """A copy-on-write delete rewrites its victim file: the rewritten
+    but unchanged rows must not surface as fresh inserts."""
+    tbl = str(tmp_path / "t")
+    I.append_iceberg_snapshot(_mk(spark, 25).coalesce(1), tbl)  # snap 1
+    I.delete_iceberg_where(spark, tbl, F.col("k") < 5)  # snap 2: 20 rows rewritten
+    with pytest.raises(ValueError, match="append-only feed refuses"):
+        I.read_iceberg_changes(spark, tbl, from_snapshot=1)
+
+
+def test_changes_feed_refuses_compaction_range(spark, tmp_path):
+    """A compaction ('replace') re-adds every live row in new files: a
+    range holding it must refuse, not re-serve the whole table."""
+    tbl = str(tmp_path / "t")
+    I.append_iceberg_snapshot(_mk(spark, 100), tbl)  # snap 1
+    I.append_iceberg_snapshot(_mk(spark, 50, base=100), tbl)  # snap 2
+    I.compact_iceberg_files(spark, tbl, out_files=1)  # snap 3
+    with pytest.raises(ValueError, match="append-only feed refuses"):
+        I.read_iceberg_changes(spark, tbl, from_snapshot=2)
+
+
+def test_changes_feed_refuses_rolled_back_end(spark, tmp_path):
+    """An end snapshot abandoned by a rollback holds rows that are no
+    longer table state: the batch feed refuses it like the stream."""
+    tbl = str(tmp_path / "t")
+    I.append_iceberg_snapshot(_mk(spark, 20), tbl)  # snap 1
+    I.append_iceberg_snapshot(_mk(spark, 10, base=20), tbl)  # snap 2
+    I.rollback_iceberg(tbl, 1)
+    with pytest.raises(ValueError, match="rolled back"):
+        I.read_iceberg_changes(spark, tbl, from_snapshot=1, to_snapshot=2)
+
+
 def test_migrate_and_stream_gate_on_renamed_tables(spark, tmp_path):
     """Handing field-id-less files to by-NAME consumers must refuse on
     a renamed table; a compaction (rewrites under current names)

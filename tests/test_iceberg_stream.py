@@ -226,3 +226,53 @@ def test_source_refuses_offsets_in_rolled_back_range(spark, tmp_path):
         v for f in files for v in _pq.read_table(f).column("id").to_pylist()
     )
     assert got == list(range(20, 30))  # snap 2's rows are NOT re-emitted
+
+
+def test_change_planners_run_without_the_package(spark, tmp_path):
+    """NOTES rule 39: both change-range planners are closures that
+    pickle BY VALUE — unpickled in a fresh interpreter whose cwd is the
+    temp dir and whose sys.path lacks the repo, each plans a two-commit
+    range of a table without importing ``map_reduce_spark``."""
+    import json
+    import subprocess
+    import sys
+    import tempfile
+
+    from pyspark import cloudpickle
+
+    import map_reduce_spark.sources.delta_py as D
+
+    dtbl, itbl = str(tmp_path / "d"), str(tmp_path / "i")
+    d = _batch(spark, 0, 20)
+    D.write_delta_py(d.filter("id < 10"), dtbl, mode="overwrite")  # v0
+    D.write_delta_py(d.filter("id >= 10"), dtbl)  # v1
+    I.append_iceberg_snapshot(d.filter("id < 10"), itbl)  # snap 1
+    I.append_iceberg_snapshot(d.filter("id >= 10"), itbl)  # snap 2
+    calls = [
+        (D.make_change_planner(os.path.abspath(dtbl)), -1, 1),
+        (I.make_appends_planner(os.path.abspath(itbl)), 0, 2),
+    ]
+    child = (
+        "import importlib.util, json, sys\n"
+        "from pyspark import cloudpickle\n"
+        "assert importlib.util.find_spec('map_reduce_spark') is None\n"
+        "out = []\n"
+        "for plan, lo, hi in cloudpickle.loads(sys.stdin.buffer.read()):\n"
+        "    out.append([repr(plan(lo, hi)), plan.latest()])\n"
+        "print(json.dumps(out))\n"
+    )
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    res = subprocess.run(
+        [sys.executable, "-c", child],
+        input=cloudpickle.dumps(calls),
+        capture_output=True,
+        cwd=tempfile.gettempdir(),
+        env=env,
+        timeout=120,
+    )
+    assert res.returncode == 0, res.stderr.decode()
+    got = json.loads(res.stdout)
+    assert got == [[repr(p(lo, hi)), p.latest()] for p, lo, hi in calls]
+    (dfiles, _), ifiles = calls[0][0](-1, 1), calls[1][0](0, 2)
+    assert {v for v, _, _ in dfiles} == {0, 1} and got[0][1] == 1
+    assert len(ifiles) >= 2 and got[1][1] == 2

@@ -316,6 +316,26 @@ def test_clean_delta_log_sweeps_superseded_v2_sidecars(spark, tmp_path):
     assert got == {0, 1, 2, 5, 6}
 
 
+def test_clean_delta_log_removes_expired_cdc_files(spark, tmp_path):
+    """cdc files named only by expired commits go with them: no reader
+    reaches them any more, and a later vacuum must find nothing to
+    sweep on the cleaned table."""
+    import os
+
+    tbl = str(tmp_path / "t")
+    D.write_delta_py(_rows(spark, range(4)), tbl, mode="overwrite",
+                     checkpoint_interval=0)  # v0
+    D.set_delta_table_property(tbl, "delta.enableChangeDataFeed", "true")  # v1
+    D.delete_where(spark, tbl, F.col("id") == 1, checkpoint_interval=0)  # v2 +cdc
+    cdc_dir = os.path.join(tbl, "_change_data")
+    assert os.listdir(cdc_dir)
+    D.write_delta_py(_rows(spark, [9]), tbl, checkpoint_interval=1)  # v3 +ckpt
+    D.clean_delta_log(tbl, retain_last=0)  # expires json 0..3
+    assert not [f for _, _, fs in os.walk(cdc_dir) for f in fs if f.endswith(".parquet")]
+    assert D.vacuum_delta(tbl) == 0
+    assert {r.id for r in D.read_delta_py(spark, tbl).collect()} == {0, 2, 3, 9}
+
+
 def test_change_readers_refuse_expired_range(spark, tmp_path):
     """After clean_delta_log, a change range that dips below the
     retained tail must REFUSE (silently skipping expired commits would
