@@ -9,7 +9,8 @@ library (all JVM-side Column expressions, no UDFs).
   phash2-mod-R routing, worker.ex:144);
 - text: ``shingles`` (word n-grams);
 - vectors: ``ivec`` / ``idot`` (scaled-integer embedding math),
-  ``lsh_bucket_expr`` (sign-random-projection bucketing).
+  ``lsh_bucket_expr`` (sign-random-projection bucketing: float planes
+  project in DOUBLE, integer planes in exact LONG arithmetic).
 """
 
 from pyspark.sql import functions as F

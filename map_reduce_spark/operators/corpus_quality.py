@@ -1414,73 +1414,23 @@ def fuzzy_contaminated_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     reproduced by the DuckDB oracle.
     """
     from map_reduce_spark.operators.dedup import (
-        BANDS,
-        NUM_PERM,
-        ROWS_PER_BAND,
-        _shingles,
+        _collision_pairs,
+        _verify_jaccard,
+        minhash_bands,
     )
 
     docs = load_table(spark, sf_dir, "documents")
-    sh = parallelize_if_narrow(docs, "doc_id").select(
-        "doc_id", F.explode(_shingles()).alias("t")
-    )
-
-    def perm_hash(p: int):
-        return F.substring(F.md5(F.concat(F.lit(f"{p}:"), F.col("t"))), 1, 8)
-
-    mins = [F.min(perm_hash(p)).alias(f"h{p}") for p in range(NUM_PERM)]
-    per_doc = sh.groupBy("doc_id").agg(*mins)
-    band_structs = [
-        F.struct(
-            F.lit(b).alias("band"),
-            F.md5(
-                F.concat_ws(
-                    ",",
-                    *[F.col(f"h{b * ROWS_PER_BAND + r}") for r in range(ROWS_PER_BAND)],
-                )
-            ).alias("bucket"),
-        )
-        for b in range(BANDS)
-    ]
-    bands = per_doc.select(
-        "doc_id", F.explode(F.array(*band_structs)).alias("bb")
-    ).select("doc_id", "bb.band", "bb.bucket")
+    bands = minhash_bands(docs, "md5")
     is_bench = F.col("doc_id") % FUZZY_BENCH_MOD == 0
-    bench_bands = bands.filter(is_bench).select(
-        F.col("doc_id").alias("bench_id"), "band", "bucket"
-    )
     cand = stage_cache(  # stage barrier: candidates are eval-suite bounded
-        bands.filter(~is_bench)
-        .join(bench_bands, ["band", "bucket"])  # size-adaptive: see docstring
-        .select(F.col("doc_id").alias("train_id"), "bench_id")
-        .distinct()
+        _collision_pairs(bands.filter(~is_bench), bands.filter(is_bench))
     )
-    # Shingle sets for docs that can appear in a candidate pair only:
-    # each side semi-joins its own id column of the (cached, bounded)
-    # candidate frame BEFORE the shingle arrays are built, so the
-    # verify stage prices O(candidates) instead of two full-corpus
-    # shingle passes (guide §2.3; the _verify_jaccard shape). AQE owns
-    # the semi-join strategy — no forced broadcast (r4 ADVICE).
-    def side_sets(id_col: str, out: str) -> DataFrame:
-        pruned = docs.join(
-            cand.select(F.col(id_col).alias("doc_id")).distinct(),
-            "doc_id",
-            "left_semi",
-        )
-        return pruned.select(
-            F.col("doc_id").alias(id_col), _shingles().alias(out)
-        )
-
-    a = cand.join(side_sets("train_id", "sa"), "train_id").join(
-        side_sets("bench_id", "sb"), "bench_id"
-    )
-    inter = F.size(F.array_intersect("sa", "sb"))
-    union = F.size(F.array_distinct(F.concat("sa", "sb")))
-    jac = inter.cast("double") / union
-    return (
-        a.withColumn("jac_x", jac)
-        .filter(F.col("jac_x") >= FUZZY_CONTAM_TAU)
-        .select("train_id", "bench_id", F.round("jac_x", 6).alias("jac"))
+    # the colliding ids are corpus-proportional here: AQE owns the
+    # semi-join strategy, no forced broadcast (r4 ADVICE)
+    return _verify_jaccard(
+        docs, cand, FUZZY_CONTAM_TAU, broadcast_ids=False
+    ).select(
+        F.col("doc_a").alias("train_id"), F.col("doc_b").alias("bench_id"), "jac"
     )
 
 

@@ -184,77 +184,124 @@ BANDS = 8  # LSH bands
 ROWS_PER_BAND = NUM_PERM // BANDS  # 4 -> candidate threshold j ~ (1/8)^(1/4) ~ 0.6
 
 
-@register("dedup_minhash_lsh", oracle=None)
-def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """MinHash-LSH near-dup pairs, verified by exact Jaccard >= 0.5.
+# Hash families for ``minhash_bands``, as SQL text over the shingle
+# ``t`` and a band's signature columns: (per-permutation component,
+# band bucket). xxhash64 is the fast engine hash; md5 is the
+# engine-portable family ``PORTABLE_BANDS_CTES`` replays in DuckDB —
+# 8 lowercase hex chars, whose lexicographic MIN is the numeric min,
+# so no base conversion is needed (conv() dominated the runtime).
+_FAMILIES = {
+    "xxhash64": ("xxhash64({p}, t)", "xxhash64({hs})"),
+    "md5": ("substring(md5(concat('{p}:', t)), 1, 8)", "md5(concat_ws(',', {hs}))"),
+}
 
-    Pipeline: shingle → 32-perm minhash → 8 bands × 4 rows → band-bucket
-    equi-join for candidates → exact verify on the candidate set only.
-    Engine-specific hashing (xxhash64) makes this rows-only for the
-    driver; tests/test_llm_ops.py checks recall against brute-force
-    all-pairs Jaccard ground truth.
-    """
-    docs = load_table(spark, sf_dir, "documents")
 
-    # One keyed repartition up front: it parallelizes the narrow scan
-    # AND satisfies the groupBy's distribution, so the grouped
-    # aggregation (32 minhash mins) needs no further shuffle.
+def minhash_bands(docs: DataFrame, family: str) -> DataFrame:
+    """(doc_id, band, bucket): the MinHash band table of ``docs`` under
+    the hash ``family`` (a ``_FAMILIES`` key) — shingle, 32 per-
+    permutation mins, 8 bands x 4 rows, one bucket hash per band.
+
+    One keyed repartition up front parallelizes the narrow scan AND
+    satisfies the groupBy's distribution, so the 32-min aggregation
+    needs no further shuffle. Signatures only: the aggregation state is
+    32 values per doc, never the shingle set, and callers re-derive
+    shingle sets for candidate docs only. Each signature column and the
+    band array are SQL text, one ``F.expr`` apiece (NOTES rule 61)."""
+    perm, bucket = _FAMILIES[family]
     sh = parallelize_if_narrow(docs, "doc_id").select(
         "doc_id", F.explode(_shingles()).alias("t")
     )
-    mins = [
-        F.min(F.xxhash64(F.lit(p), F.col("t"))).alias(f"h{p}")
-        for p in range(NUM_PERM)
-    ]
-    # the explode preserves the doc_id partitioning, so this groupBy
-    # aggregates in place — no second shuffle. Signatures ONLY: the
-    # aggregation state is 32 longs per doc, never the shingle set, so
-    # the corpus-wide shuffle stays tiny at any scale.
-    per_doc = sh.groupBy("doc_id").agg(*mins)
-
-    # band key straight from the signature columns — no arrays at all
-    band_structs = [
-        F.struct(
-            F.lit(b).alias("band"),
-            F.xxhash64(
-                *[F.col(f"h{b * ROWS_PER_BAND + r}") for r in range(ROWS_PER_BAND)]
-            ).alias("bucket"),
+    per_doc = sh.groupBy("doc_id").agg(
+        *[F.expr(f"min({perm.format(p=p)}) AS h{p}") for p in range(NUM_PERM)]
+    )
+    bands = ", ".join(
+        f"named_struct('band', {b}, 'bucket', "
+        + bucket.format(
+            hs=", ".join(f"h{b * ROWS_PER_BAND + r}" for r in range(ROWS_PER_BAND))
         )
+        + ")"
         for b in range(BANDS)
-    ]
-    bands = per_doc.select(
-        "doc_id", F.explode(F.array(*band_structs)).alias("bb")
-    ).select("doc_id", "bb.band", "bb.bucket")
+    )
+    return per_doc.select("doc_id", F.expr(f"inline(array({bands}))"))
 
-    cand = (
-        bands.alias("x")
-        .join(
-            bands.alias("y"),
-            (F.col("x.band") == F.col("y.band"))
-            & (F.col("x.bucket") == F.col("y.bucket"))
-            & (F.col("x.doc_id") < F.col("y.doc_id")),
-        )
-        .select(
-            F.col("x.doc_id").alias("doc_a"), F.col("y.doc_id").alias("doc_b")
-        )
+
+def _collision_pairs(a: DataFrame, b: DataFrame | None = None) -> DataFrame:
+    """Distinct (band, bucket) collision pairs as (doc_a, doc_b) — the
+    candidate join of every banded LSH operator. Within one band table
+    (``b`` is None) each pair appears once, doc_a < doc_b; across two,
+    doc_a comes from ``a`` and doc_b from ``b``."""
+    x, y = a.alias("x"), (a if b is None else b).alias("y")
+    on = (F.col("x.band") == F.col("y.band")) & (
+        F.col("x.bucket") == F.col("y.bucket")
+    )
+    if b is None:
+        on = on & (F.col("x.doc_id") < F.col("y.doc_id"))
+    return (
+        x.join(y, on)
+        .select(F.col("x.doc_id").alias("doc_a"), F.col("y.doc_id").alias("doc_b"))
         .distinct()
     )
 
-    # Materialization barrier: the candidate-pair set is tiny by
-    # construction (band collisions only) and is consumed three times
-    # below (output rows, doc_a ids, doc_b ids). Persisting it runs the
-    # corpus explode + signature pipeline ONCE; without the barrier
-    # Spark re-executes that whole subtree per consumer (~4× the work).
-    # At cluster scale this is the standard two-stage LSH shape: a
-    # checkpoint of candidate pairs between candidate generation and
-    # verify. Tracked: released by session.release_caches().
-    cand = stage_cache(cand)
 
-    # Exact verify only on candidates (``_verify_jaccard``): shingle
-    # sets are re-derived for candidate doc_ids ONLY, straight from the
-    # documents table — the broadcast semi-join prunes BEFORE the
-    # explode, so the verify path shuffles O(candidates), not O(corpus).
+def _verify_jaccard(
+    docs: DataFrame, cand: DataFrame, tau: float, broadcast_ids: bool = True
+) -> DataFrame:
+    """Exact-Jaccard verify over candidate pairs only (columns doc_a,
+    doc_b + any carried columns): keep pairs with jac >= tau as
+    ``jac``. Each side semi-joins its own distinct candidate ids
+    BEFORE its shingle sets are built, so the verify prices
+    O(candidates), never a corpus-wide shingle pass. (This per-side
+    shape beat one shared explode + collect_set over the union of both
+    id columns on every caller: fewer jobs, no shingle shuffle.)
+
+    ``broadcast_ids`` hints the colliding-id semi-joins. Keep it True
+    only when the candidate set is bounded by construction (one
+    batch's collisions); the cross-epoch ledger a compaction verifies
+    and the corpus-proportional bench slice of fuzzy decontamination
+    are not, so those pass False and let AQE pick by measured size
+    (NOTES rule 28)."""
+
+    def side(col: str, out: str) -> DataFrame:
+        ids = cand.select(F.col(col).alias("doc_id")).distinct()
+        if broadcast_ids:
+            ids = F.broadcast(ids)
+        return docs.join(ids, "doc_id", "left_semi").select(
+            F.col("doc_id").alias(col), _shingles().alias(out)
+        )
+
+    jac = F.size(F.array_intersect("sa", "sb")) / F.size(F.array_union("sa", "sb"))
+    return (
+        cand.join(side("doc_a", "sa"), "doc_a")
+        .join(side("doc_b", "sb"), "doc_b")
+        .filter(jac >= tau)
+        .withColumn("jac", F.round(jac, 6))
+        .drop("sa", "sb")
+    )
+
+
+def _minhash_lsh(spark: SparkSession, sf_dir: str, family: str) -> DataFrame:
+    """The MinHash-LSH near-dup pipeline under one hash family:
+    band table -> band-bucket collision join -> exact Jaccard >= 0.5
+    on the candidates only.
+
+    The candidate set is tiny by construction and feeds three
+    consumers inside the verify (output rows, doc_a ids, doc_b ids);
+    the stage barrier runs the corpus explode + signature pipeline
+    ONCE instead of once per consumer — the standard two-stage LSH
+    shape (released by session.release_caches())."""
+    docs = load_table(spark, sf_dir, "documents")
+    cand = stage_cache(_collision_pairs(minhash_bands(docs, family)))
     return _verify_jaccard(docs, cand, 0.5).select("doc_a", "doc_b", "jac")
+
+
+@register("dedup_minhash_lsh", oracle=None)
+def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """MinHash-LSH near-dup pairs, verified by exact Jaccard >= 0.5,
+    on the xxhash64 family — the fast production variant. Engine-
+    specific hashing makes this rows-only for the driver;
+    tests/test_llm_ops.py checks recall against brute-force all-pairs
+    Jaccard ground truth."""
+    return _minhash_lsh(spark, sf_dir, "xxhash64")
 
 
 # --- duplicate-cluster resolution (connected components) --------------
@@ -559,10 +606,7 @@ COSINE_TOPK = 50
 
 # --- portable-hash MinHash-LSH (fully oracle-verified variant) --------
 
-# CTE block ending in `pairs` (the verified near-dup pairs) — shared by
-# the standalone portable-LSH oracle and the end-to-end pipeline oracle
-# (map_reduce_spark.pipelines), so both verify the identical band math.
-# CTE block ending in `bands` (the portable band table) — the prefix
+# CTE block ending in `bands` (the md5-family band table) — the prefix
 # shared by the standalone portable-LSH oracle, the pipeline oracle,
 # and the incremental-dedup oracle.
 PORTABLE_BANDS_CTES = f"""sh AS (
@@ -581,6 +625,9 @@ bands AS (
   FROM mins GROUP BY doc_id, p // 4
 )"""
 
+# CTE block ending in `pairs` (the verified near-dup pairs) — shared by
+# the standalone portable-LSH oracle and the end-to-end pipeline oracle
+# (map_reduce_spark.pipelines), so both verify the identical band math.
 PORTABLE_PAIRS_CTES = f"""{PORTABLE_BANDS_CTES},
 cand AS (
   SELECT DISTINCT x.doc_id AS doc_a, y.doc_id AS doc_b
@@ -606,105 +653,13 @@ SELECT doc_a, doc_b, jac FROM pairs
 """
 
 
-def _portable_bands(docs: DataFrame) -> DataFrame:
-    """(doc_id, band, bucket) via the engine-portable md5 hash family —
-    the Spark twin of ``PORTABLE_BANDS_CTES``. Signatures only (32
-    short hex strings per doc); shingle sets are re-derived by callers
-    for candidate docs only."""
-    sh = parallelize_if_narrow(docs, "doc_id").select(
-        "doc_id", F.explode(_shingles()).alias("t")
-    )
-
-    def perm_hash(p: int):
-        # 8 lowercase hex chars; lexicographic MIN == numeric min, so no
-        # base conversion needed (conv() dominated the runtime)
-        return F.substring(F.md5(F.concat(F.lit(f"{p}:"), F.col("t"))), 1, 8)
-
-    mins = [F.min(perm_hash(p)).alias(f"h{p}") for p in range(NUM_PERM)]
-    per_doc = sh.groupBy("doc_id").agg(*mins)
-
-    band_structs = [
-        F.struct(
-            F.lit(b).alias("band"),
-            F.md5(
-                F.concat_ws(
-                    ",",
-                    *[F.col(f"h{b * ROWS_PER_BAND + r}") for r in range(ROWS_PER_BAND)],
-                )
-            ).alias("bucket"),
-        )
-        for b in range(BANDS)
-    ]
-    return per_doc.select(
-        "doc_id", F.explode(F.array(*band_structs)).alias("bb")
-    ).select("doc_id", "bb.band", "bb.bucket")
-
-
-def _verify_jaccard(
-    docs: DataFrame, cand: DataFrame, tau: float, broadcast_ids: bool = True
-) -> DataFrame:
-    """Exact-Jaccard verify over candidate pairs only: re-shingle just
-    the docs that appear in ``cand`` (columns doc_a, doc_b + any
-    carried columns), keep pairs with jac >= tau as ``jac``.
-
-    ``broadcast_ids`` hints the colliding-id semi-join. Keep it True
-    only when the candidate set is bounded by construction (one
-    batch's collisions in the incremental path); the accumulated
-    cross-epoch ledger a compaction verifies is collision-proportional
-    and unbounded, so that path passes False and lets AQE pick by
-    measured size (NOTES rule 28)."""
-    cand_ids = (
-        cand.select(F.col("doc_a").alias("doc_id"))
-        .union(cand.select(F.col("doc_b").alias("doc_id")))
-        .distinct()
-    )
-    if broadcast_ids:
-        cand_ids = F.broadcast(cand_ids)
-    cand_sets = (
-        docs.join(cand_ids, "doc_id", "left_semi")
-        .select("doc_id", F.explode(_shingles()).alias("t"))
-        .groupBy("doc_id")
-        .agg(F.collect_set("t").alias("s"))
-    )
-    av = cand_sets.select(F.col("doc_id").alias("doc_a"), F.col("s").alias("sa"))
-    bv = cand_sets.select(F.col("doc_id").alias("doc_b"), F.col("s").alias("sb"))
-    jac = F.size(F.array_intersect("sa", "sb")) / F.size(F.array_union("sa", "sb"))
-    return (
-        cand.join(av, "doc_a")
-        .join(bv, "doc_b")
-        .filter(jac >= tau)
-        .withColumn("jac", F.round(jac, 6))
-        .drop("sa", "sb")
-    )
-
-
 @register("dedup_minhash_lsh_portable", oracle=_PORTABLE_LSH_ORACLE)
 def dedup_minhash_lsh_portable(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """MinHash-LSH with an engine-portable hash family (md5-derived
-    32-bit values), so the ENTIRE pipeline — signatures, band buckets,
-    candidate set, verified pairs — is reproduced exactly by the DuckDB
-    oracle. ``dedup_minhash_lsh`` (xxhash64) is the faster production
-    variant; this one is the correctness witness for the band math.
-    """
-    docs = load_table(spark, sf_dir, "documents")
-    bands = _portable_bands(docs)
-
-    cand = (
-        bands.alias("x")
-        .join(
-            bands.alias("y"),
-            (F.col("x.band") == F.col("y.band"))
-            & (F.col("x.bucket") == F.col("y.bucket"))
-            & (F.col("x.doc_id") < F.col("y.doc_id")),
-        )
-        .select(F.col("x.doc_id").alias("doc_a"), F.col("y.doc_id").alias("doc_b"))
-        .distinct()
-    )
-
-    # same two-stage shape as dedup_minhash_lsh: cache the tiny
-    # candidate set (stage barrier), re-shingle candidates only
-    cand = stage_cache(cand)
-    return _verify_jaccard(docs, cand, 0.5).select("doc_a", "doc_b", "jac")
+    """``dedup_minhash_lsh`` on the engine-portable md5 family (8-hex
+    per-permutation values), so the ENTIRE pipeline — signatures, band
+    buckets, candidate set, verified pairs — is reproduced exactly by
+    the DuckDB oracle: the correctness witness for the band math."""
+    return _minhash_lsh(spark, sf_dir, "md5")
 
 
 # --- incremental dedup: new batch vs stored corpus index --------------
@@ -760,7 +715,7 @@ def dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     scopes, and verdicts are all reproduced by the DuckDB oracle.
     """
     docs = load_table(spark, sf_dir, "documents")
-    bands = stage_cache(_portable_bands(docs))  # one signature pass, two consumers
+    bands = stage_cache(minhash_bands(docs, "md5"))  # one signature pass, two consumers
     is_new = F.col("doc_id") % _INCREMENTAL_MOD == 0
     return incremental_dedup_frames(bands.filter(is_new), bands.filter(~is_new), docs)
 
@@ -775,7 +730,7 @@ def incremental_dedup_frames(
     table into a STORED signature index.
 
     ``new_bands`` is today's batch's (doc_id, band, bucket) table
-    (``_portable_bands`` over the batch docs), ``index_bands`` the
+    (``minhash_bands(batch_docs, "md5")``), ``index_bands`` the
     stored corpus index — typically a parquet read of signatures
     persisted by a previous run (tests/test_round6_ops.py drives that
     write-then-fold path end-to-end). ``text_store`` is the corpus text
@@ -783,32 +738,11 @@ def incremental_dedup_frames(
     inside the exact-Jaccard verify — so the incremental cost stays
     O(batch + collisions) however large the stored index grows.
     """
-    batch_pairs = (
-        new_bands.alias("x")
-        .join(
-            new_bands.alias("y"),
-            (F.col("x.band") == F.col("y.band"))
-            & (F.col("x.bucket") == F.col("y.bucket"))
-            & (F.col("x.doc_id") < F.col("y.doc_id")),
-        )
-        .select(
-            F.col("x.doc_id").alias("doc_a"),
-            F.col("y.doc_id").alias("doc_b"),
-            F.lit("batch").alias("scope"),
-        )
-        .distinct()
+    cand = stage_cache(
+        _collision_pairs(new_bands)
+        .withColumn("scope", F.lit("batch"))
+        .union(_collision_pairs(new_bands, index_bands).withColumn("scope", F.lit("index")))
     )
-    index_pairs = (
-        new_bands.alias("x")
-        .join(index_bands.alias("y"), ["band", "bucket"])
-        .select(
-            F.col("x.doc_id").alias("doc_a"),
-            F.col("y.doc_id").alias("doc_b"),
-            F.lit("index").alias("scope"),
-        )
-        .distinct()
-    )
-    cand = stage_cache(batch_pairs.union(index_pairs))
     return _verify_jaccard(text_store, cand, tau).select(
         F.col("doc_a").alias("doc_id"),
         F.col("doc_b").alias("dup_of"),
@@ -1037,21 +971,9 @@ def dedup_simhash_portable(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     bands = fp.select(
-        "doc_id",
-        "fp",
-        F.explode(F.array(*[F.lit(b) for b in range(4)])).alias("b"),
-    ).withColumn("bv", F.expr("substring(fp, b * 4 + 1, 4)"))
-    cand = (
-        bands.alias("x")
-        .join(
-            bands.alias("y"),
-            (F.col("x.b") == F.col("y.b"))
-            & (F.col("x.bv") == F.col("y.bv"))
-            & (F.col("x.doc_id") < F.col("y.doc_id")),
-        )
-        .select(F.col("x.doc_id").alias("doc_a"), F.col("y.doc_id").alias("doc_b"))
-        .distinct()
-    )
+        "doc_id", "fp", F.explode(F.array(*[F.lit(b) for b in range(4)])).alias("band")
+    ).withColumn("bucket", F.expr("substring(fp, band * 4 + 1, 4)"))
+    cand = _collision_pairs(bands)
 
     fa = fp.select(F.col("doc_id").alias("doc_a"), F.col("fp").alias("fpa"))
     fb = fp.select(F.col("doc_id").alias("doc_b"), F.col("fp").alias("fpb"))
@@ -1181,40 +1103,6 @@ WHERE b.doc_id NOT IN (SELECT doc_b FROM pairs)
 """
 
 
-def _collision_pairs(a: DataFrame, b: DataFrame | None = None) -> DataFrame:
-    """Distinct band-bucket collision pairs as (doc_lo, doc_hi) —
-    within one band table (``b`` is None) or across two. Orientation is
-    normalized to least/greatest so the accumulated candidate ledger is
-    invariant to which side of a fold a doc arrived on (NOTES rule 34:
-    nothing trigger- or fold-order-dependent enters certified state).
-    """
-    if b is None:
-        return (
-            a.alias("x")
-            .join(
-                a.alias("y"),
-                (F.col("x.band") == F.col("y.band"))
-                & (F.col("x.bucket") == F.col("y.bucket"))
-                & (F.col("x.doc_id") < F.col("y.doc_id")),
-            )
-            .select(
-                F.col("x.doc_id").alias("doc_lo"),
-                F.col("y.doc_id").alias("doc_hi"),
-            )
-            .distinct()
-        )
-    return (
-        a.alias("x")
-        .join(b.alias("y"), ["band", "bucket"])
-        .filter(F.col("x.doc_id") != F.col("y.doc_id"))
-        .select(
-            F.least("x.doc_id", "y.doc_id").alias("doc_lo"),
-            F.greatest("x.doc_id", "y.doc_id").alias("doc_hi"),
-        )
-        .distinct()
-    )
-
-
 def dedup_batch_state(
     batch_docs: DataFrame, cache=None
 ) -> tuple[DataFrame, DataFrame]:
@@ -1229,7 +1117,7 @@ def dedup_batch_state(
     collision self-join, and the merge's cross-batch probe), so without
     the barrier it recomputes once per consumer per micro-batch. Same
     contract as ``health_batch_state``: the caller owns the release."""
-    bands = _portable_bands(batch_docs)
+    bands = minhash_bands(batch_docs, "md5")
     if cache is not None:
         bands = cache(bands)
     return bands, _collision_pairs(bands)
@@ -1245,9 +1133,11 @@ def merge_dedup_states(
     Associative and commutative: band tables fold by DISJOINT union
     (each doc's signatures appear in exactly one batch), and the
     candidate ledger decomposes pairwise — a cross pair (a, b) is
-    produced exactly once, by whichever fold first has both sides, in
-    the normalized (doc_lo, doc_hi) orientation either way. So any
-    fold order reproduces the one-shot band table and candidate set.
+    produced exactly once, by whichever fold first has both sides, and
+    is normalized here to doc_a < doc_b whichever side of the fold
+    each doc arrived on (NOTES rule 34: nothing fold-order-dependent
+    enters certified state). So any fold order reproduces the one-shot
+    band table and candidate set.
 
     ``deltas_only=True`` returns only the NEW state (the batch bands
     and the batch's new pairs) for append-leg storage: because both
@@ -1256,7 +1146,15 @@ def merge_dedup_states(
     index (streaming/jobs.py run_streaming_dedup_fold)."""
     bands_s, cand_s = stored
     bands_b, cand_b = batch
-    new_pairs = cand_b.unionByName(_collision_pairs(bands_b, bands_s))
+    cross = _collision_pairs(bands_b, bands_s).filter(
+        F.col("doc_a") != F.col("doc_b")
+    )
+    new_pairs = cand_b.unionByName(
+        cross.select(
+            F.least("doc_a", "doc_b").alias("doc_a"),
+            F.greatest("doc_a", "doc_b").alias("doc_b"),
+        )
+    )
     if deltas_only:
         return bands_b, new_pairs
     return bands_s.unionByName(bands_b), cand_s.unionByName(new_pairs)
@@ -1275,16 +1173,13 @@ def dedup_compact_finish(
     index of canonical survivors — what the next round of
     ``incremental_dedup_frames`` folds against, now free of dup
     signatures."""
-    pairs = cand.select(
-        F.col("doc_lo").alias("doc_a"), F.col("doc_hi").alias("doc_b")
-    )
     # no broadcast hints anywhere on this path: both the colliding-id
     # set inside the verify (broadcast_ids=False) and the kill list are
     # dup-rate-proportional, not bounded by construction (NOTES rule
     # 28) — let AQE pick; the anti-join co-partitions with the index on
     # doc_id either way
     killed = (
-        _verify_jaccard(text_store, pairs, tau, broadcast_ids=False)
+        _verify_jaccard(text_store, cand, tau, broadcast_ids=False)
         .select("doc_b")
         .distinct()
     )
@@ -1308,7 +1203,7 @@ def dedup_index_compact(spark: SparkSession, sf_dir: str) -> DataFrame:
     stream deployment's append legs) accumulated them as batches
     arrived — so compaction itself is only verify + kill + emit. The
     candidate ledger is SPLIT-INVARIANT (any batch partitioning
-    accumulates the identical (doc_lo, doc_hi) set — proven in
+    accumulates the identical (doc_a, doc_b) set — proven in
     tests/test_round7_ops.py through parquet in arbitrary fold order),
     so the test-scale stand-in derives it in one shot from the band
     table rather than replaying an ingest history inside the query;
@@ -1325,5 +1220,5 @@ def dedup_index_compact(spark: SparkSession, sf_dir: str) -> DataFrame:
     28). Nothing rescans the corpus, nothing is quadratic.
     """
     docs = load_table(spark, sf_dir, "documents")
-    bands = stage_cache(_portable_bands(docs))  # shared: one signature pass
+    bands = stage_cache(minhash_bands(docs, "md5"))  # shared: one signature pass
     return dedup_compact_finish(bands, _collision_pairs(bands), docs)

@@ -91,8 +91,13 @@ def _planes(dim: int = 64, n_planes: int = N_PLANES) -> list[list[float]]:
     return rng.standard_normal((n_planes, dim)).round(4).tolist()
 
 
-def lsh_bucket_expr(vec_col, planes: list[list[float]]):
+def lsh_bucket_expr(vec_col, planes: list[list[float]] | list[list[int]]):
     """Bucket id = bits of sign(dot(v, plane_p)) for each plane.
+
+    Float planes project in DOUBLE (``D`` literals); integer planes
+    (the md5-derived ``_portable_planes``) project in exact LONG
+    arithmetic (``L`` literals) — pass them the scaled-integer vector
+    so no floating-point sign boundary exists.
 
     Built as ONE SQL expression string: the 8x64 plane components are
     inline array literals parsed in a single JVM call. Building each
@@ -109,37 +114,61 @@ def lsh_bucket_expr(vec_col, planes: list[list[float]]):
             "lsh_bucket_expr takes a column NAME; alias your vector "
             "expression to a column and pass its name"
         )
-    name = vec_col
+    ints = isinstance(planes[0][0], int)
+    lit, zero = ("L", "0L") if ints else ("D", "0.0D")
     terms = []
     for p, plane in enumerate(planes):
-        arr = ",".join(f"{float(x)!r}D" for x in plane)
+        arr = ",".join(f"{(int if ints else float)(x)!r}{lit}" for x in plane)
         terms.append(
-            f"(CASE WHEN aggregate(zip_with({name}, array({arr}),"
-            f" (x, y) -> CAST(x AS DOUBLE) * y), 0.0D, (acc, v) -> acc + v)"
+            f"(CASE WHEN aggregate(zip_with({vec_col}, array({arr}),"
+            f" (x, y) -> x * y), {zero}, (acc, v) -> acc + v)"
             f" >= 0 THEN {1 << p} ELSE 0 END)"
         )
     return F.expr(" + ".join(terms))
 
 
-def _hamming_probes(center, radius: int, n_planes: int = N_PLANES):
-    """All bucket ids within Hamming distance ``radius`` of ``center``
-    (a Column), as a flat list of Column expressions."""
+def _hamming_probes(center: str, radius: int, n_planes: int) -> str:
+    """SQL array of every bucket id within Hamming distance ``radius``
+    of the int column ``center``."""
     from itertools import combinations
 
     masks = [0]
     for r in range(1, radius + 1):
         for bits in combinations(range(n_planes), r):
             masks.append(sum(1 << b for b in bits))
-    return [center.bitwiseXOR(F.lit(m)) for m in masks]
+    return "array(" + ", ".join(f"{center} ^ {m}" for m in masks) + ")"
+
+
+def _dot_sql(a: str, b: str) -> str:
+    """Exact integer dot product of two BIGINT array columns (the SQL
+    text of ``dedup._idot``)."""
+    return f"aggregate(zip_with({a}, {b}, (x, y) -> x * y), 0L, (acc, v) -> acc + v)"
+
+
+# ``dedup._ivec`` as SQL text: scaled-integer components of the embedding
+_IVEC_SPARK_SQL = (
+    "transform(embedding, x -> CAST(round(CAST(x AS DOUBLE) * 10000000, 0) AS BIGINT))"
+)
 
 
 def ann_lsh_topk_frame(
-    e: DataFrame, query_id: int = 0, k: int = 10, probe_radius: int = 1
+    e: DataFrame,
+    planes: list[list[float]] | list[list[int]],
+    query_id: int = 0,
+    k: int = 10,
+    probe_radius: int = 1,
 ) -> DataFrame:
     """Approximate top-k neighbors of ``query_id`` over an embeddings
     frame: search the query's LSH bucket plus every bucket within
     ``probe_radius`` bit flips (sign-random-projection, 8 planes ->
     256 buckets; radius 1 = 9 probes ~ 3.5% of the corpus).
+
+    ``planes`` picks the hash family: float planes (``_planes``)
+    bucket the raw embedding, integer planes (``_portable_planes``)
+    bucket the scaled-integer vector in exact arithmetic. Ranking is
+    the exact scaled-integer cosine, ordered on its UNROUNDED value
+    (as the oracle does) and rounded only in the projection; norms
+    are computed for probe candidates only.
 
     Multi-probe rationale: a genuinely-near neighbor (small angle)
     agrees with the query on most plane signs, so its bucket differs in
@@ -150,45 +179,42 @@ def ann_lsh_topk_frame(
     without scanning most of the corpus. The driver's testdata has NO
     near pairs (best-neighbor cosine p90 ~0.43 at sf0.01), so recall is
     asserted on planted near-duplicates in tests/test_llm_ops.py
-    (recall@10 >= 0.8), and the registered query stays rows-only.
+    (recall@10 >= 0.8).
 
-    At scale the bucket column becomes a partition key (write
-    partitioned-by-bucket => partition pruning turns the scan into the
-    probed fraction).
+    Scale shape: planes are LITERALS in the plan (computed once
+    driver-side), bucketing is a narrow projection, the probe join
+    broadcasts the probe bucket ids, and top-k plans
+    TakeOrderedAndProject. At scale the bucket column becomes a
+    partition key (write partitioned-by-bucket => partition pruning
+    turns the scan into the probed fraction).
     """
-    planes = _planes()
-    b = e.select(
-        "vec_id",
-        "embedding",
-        lsh_bucket_expr("embedding", planes).alias("bucket"),
+    src = "q" if isinstance(planes[0][0], int) else "embedding"
+    b = e.selectExpr("vec_id", "embedding", f"{_IVEC_SPARK_SQL} AS q").select(
+        "vec_id", "q", lsh_bucket_expr(src, planes).alias("bucket")
     )
-    probes = F.array(*_hamming_probes(F.col("qbucket"), probe_radius))
-    qb = (
-        b.filter(F.col("vec_id") == query_id)
-        .select(F.col("embedding").alias("qvec"), F.col("bucket").alias("qbucket"))
-        .select("qvec", F.explode(probes).alias("probe"))
+    nrm = f"sqrt(CAST({_dot_sql('q', 'q')} AS DOUBLE))"
+    qb = b.filter(F.col("vec_id") == query_id).selectExpr(
+        "q AS qq",
+        f"{nrm} AS qnrm",
+        f"explode({_hamming_probes('bucket', probe_radius, len(planes))}) AS probe",
     )
-    nv = b.join(
-        F.broadcast(qb), F.col("bucket") == F.col("probe")
-    ).filter(F.col("vec_id") != query_id)
-    iq = _ivec(F.col("qvec"))
-    iv = _ivec(F.col("embedding"))
-    cos = _idot(iv, iq).cast("double") / (
-        F.sqrt(_idot(iv, iv).cast("double")) * F.sqrt(_idot(iq, iq).cast("double"))
-    )
+    cos = f"CAST({_dot_sql('q', 'qq')} AS DOUBLE) / ({nrm} * qnrm) AS cos_x"
     return (
-        nv.select("vec_id", "bucket", F.round(cos, 6).alias("cos"))
-        .orderBy(F.col("cos").desc(), F.col("vec_id"))
+        b.join(F.broadcast(qb), F.col("bucket") == F.col("probe"))
+        .filter(F.col("vec_id") != query_id)
+        .selectExpr("vec_id", "bucket", cos)
+        .orderBy(F.desc("cos_x"), "vec_id")
         .limit(k)
+        .select("vec_id", "bucket", F.round("cos_x", 6).alias("cos"))
     )
 
 
 @register("ann_lsh_topk", oracle=None)
 def ann_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Registered wrapper: multi-probe ANN top-10 for vec_id=0 over the
-    embeddings table (see ``ann_lsh_topk_frame`` for the semantics and
-    the recall discussion)."""
-    return ann_lsh_topk_frame(load_table(spark, sf_dir, "embeddings"))
+    """Multi-probe ANN top-10 for vec_id=0 on float hyperplanes (see
+    ``ann_lsh_topk_frame`` for the semantics and the recall
+    discussion)."""
+    return ann_lsh_topk_frame(load_table(spark, sf_dir, "embeddings"), _planes())
 
 
 # --- portable-hash ANN (fully oracle-verified twin) -------------------
@@ -256,60 +282,12 @@ FROM scored ORDER BY cos_x DESC, vec_id LIMIT 10
 
 @register("ann_lsh_topk_portable", oracle=_PORTABLE_ANN_ORACLE)
 def ann_lsh_topk_portable(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Multi-probe LSH ANN with an engine-portable hash family — the
-    fully DuckDB-oracled twin of ``ann_lsh_topk`` (same band/probe
-    MATH, md5-derived integer hyperplanes instead of float randoms),
-    mirroring what dedup_minhash_lsh_portable does for MinHash.
-
-    Every stage is hash-verified: sign-projection bucket assignment
-    (integer dot against md5-derived planes — no FP sign boundary),
-    the 9-probe Hamming-1 ball, candidate pruning, and the exact
-    scaled-integer cosine ranking.
-
-    Scale shape is identical to the xxhash64 variant: planes are
-    LITERALS in the plan (computed once driver-side, ~free to
-    broadcast), bucketing is a narrow projection, the probe join
-    broadcasts 9 bucket ids, and top-k plans TakeOrderedAndProject.
-    """
-    planes = _portable_planes()
-    e = load_table(spark, sf_dir, "embeddings")
-    iv = e.select("vec_id", _ivec("embedding").alias("q"))
-
-    # one SQL string, one JVM parse — not 512 F.lit py4j round-trips
-    # (plan-build overhead; see lsh_bucket_expr / PERFORMANCE.md)
-    terms = []
-    for p, plane in enumerate(planes):
-        arr = ",".join(f"{w}L" for w in plane)
-        terms.append(
-            f"(CASE WHEN aggregate(zip_with(q, array({arr}),"
-            f" (x, y) -> x * y), 0L, (acc, v) -> acc + v)"
-            f" >= 0 THEN {1 << p} ELSE 0 END)"
-        )
-    bucket = F.expr(" + ".join(terms))
-
-    b = iv.withColumn("bucket", bucket).withColumn(
-        "nrm", F.sqrt(_idot(F.col("q"), F.col("q")).cast("double"))
-    )
-    probes = F.array(*_hamming_probes(F.col("qbucket"), 1))
-    qb = (
-        b.filter(F.col("vec_id") == 0)
-        .select(
-            F.col("q").alias("qq"),
-            F.col("nrm").alias("qnrm"),
-            F.col("bucket").alias("qbucket"),
-        )
-        .select("qq", "qnrm", F.explode(probes).alias("probe"))
-    )
-    cos = _idot(F.col("q"), F.col("qq")).cast("double") / (
-        F.col("nrm") * F.col("qnrm")
-    )
-    return (
-        b.join(F.broadcast(qb), F.col("bucket") == F.col("probe"))
-        .filter(F.col("vec_id") != 0)
-        .select("vec_id", "bucket", cos.alias("cos_x"))
-        .orderBy(F.desc("cos_x"), "vec_id")
-        .limit(10)
-        .select("vec_id", "bucket", F.round("cos_x", 6).alias("cos"))
+    """``ann_lsh_topk`` on the md5-derived integer hyperplanes, so
+    every stage — bucket assignment (no FP sign boundary), the 9-probe
+    Hamming-1 ball, candidate pruning and the exact scaled-integer
+    cosine ranking — is hash-verified by the DuckDB oracle."""
+    return ann_lsh_topk_frame(
+        load_table(spark, sf_dir, "embeddings"), _portable_planes()
     )
 
 

@@ -29,7 +29,6 @@ from map_reduce_spark.operators.dedup import (
     PORTABLE_PAIRS_CTES,
     connected_components,
     dedup_exact,
-    dedup_minhash_lsh,
     dedup_minhash_lsh_portable,
 )
 from map_reduce_spark.operators.pipeline_ops import _hash_bucket, _sql_bucket
@@ -46,18 +45,14 @@ def prepare_training_data(
     spark: SparkSession,
     sf_dir: str,
     out_dir: str | None = None,
-    lsh_fn=None,
 ) -> DataFrame:
     """Run the full preparation chain; optionally write the result
     partitioned by predicted language. Returns the prepared frame
     (doc_id, text, source, pred_lang, n_tokens, n_chars_actual, split).
 
-    ``lsh_fn`` selects the near-dup pair generator: the default is the
-    fast engine-hash variant (``dedup_minhash_lsh``); the registered
-    oracle twin passes the portable-hash variant so the WHOLE composed
-    pipeline is reproduced by DuckDB."""
-    if lsh_fn is None:
-        lsh_fn = dedup_minhash_lsh
+    Near-dup pairs come from the portable-hash MinHash-LSH
+    (``dedup_minhash_lsh_portable``), so the WHOLE composed pipeline is
+    reproduced by DuckDB."""
     docs = load_table(spark, sf_dir, "documents")
 
     # 1. quality gate
@@ -76,7 +71,7 @@ def prepare_training_data(
     # clusters; everything but each cluster's canonical (min-id) member
     # is dropped
     near_drop = (
-        connected_components(lsh_fn(spark, sf_dir))
+        connected_components(dedup_minhash_lsh_portable(spark, sf_dir))
         .filter(~F.col("is_canonical"))
         .select("doc_id")
     )
@@ -154,7 +149,7 @@ WHERE length(text) >= 200
 def prepare_training_data_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The composed pipeline as a registered, fully-oracled query
     (portable-LSH variant so every stage is DuckDB-reproducible)."""
-    return prepare_training_data(spark, sf_dir, lsh_fn=dedup_minhash_lsh_portable)
+    return prepare_training_data(spark, sf_dir)
 
 
 # --- composed pipeline #2: decontaminate-and-select -------------------

@@ -76,47 +76,9 @@ def register(name: str, oracle: str | None = None):
 
 
 # Catalog order is a verification budget: the round driver hash-checks
-# the FIRST 50 entries of queries() against their DuckDB oracles.
-# The round-11 window (the r10 verdict's rotation order, exactly):
-#   - two anchors (the reference flagship + exact dedup), continuously
-#     verified;
-#   - the two r11 additions with NO driver row yet:
-#     delta_v2_checkpoint_policy_scan (the automatic
-#     delta.checkpointPolicy=v2 write path, VERDICT r10 item 3) and
-#     delta_cdf_mapped_dv_scan (CDF over a column-mapped + DV-deleted
-#     + mapped-append table — both r11 CDF completions in one row; it
-#     takes the slot iceberg_bucket_time_prune would have had: the tz
-#     fix touched only the object-dtype fallback branch no registered
-#     query reaches, so the sentinel's green r10 row on the unchanged
-#     datetime64 branch still stands);
-#   - the verdict-named 20 r9-row queries on delta_py.py /
-#     iceberg_py.py — the files r10 grew by ~2,000 lines and r11
-#     edited again (CDF completeness, flattened change readers,
-#     v2-checkpoint policy): the delta DV/mapping/schema-travel reads,
-#     the delta rewrite writers (merge/optimize/zorder/update/ingest),
-#     partition pruning, the iceberg MOR family, snapshot travel +
-#     expiry, incremental changes both formats, rewrite_sorted,
-#     migrate_iceberg_to_delta, and both streaming sinks;
-#   - the five r10-row queries sitting DIRECTLY on r11-edited
-#     functions: delta_cdf_scan + streaming_delta_cdf (flattened CDF
-#     reader), iceberg_changelog_scan (flattened + rollback-aware
-#     changelog), delta_restore (now CDF-staging), iceberg_rollback
-#     (whose abandoned-lineage log the changelog now consults);
-#   - the r2-era tail in full (15 queries — the catalog's oldest rows:
-#     the pandas-UDF family, outer joins, exact percentiles, pivot,
-#     UDTF, scalar subquery, and — r12 — the ORACLED twins of the four
-#     approximate operators: portable minhash/simhash dedup, portable
-#     LSH top-k, linear-counting distinct);
-#   - the verdict-named r3-era corpus_quality tail (6 queries).
-# Displaced (all keep green r10 rows on paths whose r11 edits they
-# don't touch): the SURVEY §2.1 ten + multimodal six + pipeline_ops
-# tail (fresh r10 rows, files unchanged in r11), iceberg_name_mapping
-# / files/history metadata / orphan sweep / partition-writer rows
-# (r10 rows; their code paths are re-driven here via the mor/travel/
-# prune/migrate entries) — the builder's full-catalog sf0.01 drive
-# re-covers the whole registry on the final tree each round.
-# The round-10 window rationale is in git history (as are all prior
-# windows').
+# the FIRST 50 entries of queries() against their DuckDB oracles, so
+# every entry here is oracled. The rotation history of this window is
+# in git.
 _PRIORITY: tuple[str, ...] = (
     # anchors
     "mr_pipeline",
@@ -195,7 +157,10 @@ def _load() -> None:
 
 def all_queries() -> dict[str, Query]:
     _load()
-    prioritized = {n: _REGISTRY[n] for n in _PRIORITY if n in _REGISTRY}
+    missing = [n for n in _PRIORITY if n not in _REGISTRY]
+    if missing:
+        raise KeyError(f"_PRIORITY names unregistered queries: {missing}")
+    prioritized = {n: _REGISTRY[n] for n in _PRIORITY}
     rest = {n: q for n, q in _REGISTRY.items() if n not in prioritized}
     return {**prioritized, **rest}
 

@@ -3170,6 +3170,9 @@ def stream_delta_cdf(spark: SparkSession, table: str) -> DataFrame:
     ddl += ", `_change_type` string, `_commit_version` long"
     table_abs = os.path.abspath(table)
     col_names = [f.name for f in snap0.schema.fields]
+    # logical -> physical as a plain dict (pickles by value, NOTES rule
+    # 39): change files of a column-mapped table carry physical names
+    phys = snap0.column_mapping() or {n: n for n in col_names}
 
     from pyspark.sql.datasource import (
         DataSource,
@@ -3198,8 +3201,10 @@ def stream_delta_cdf(spark: SparkSession, table: str) -> DataFrame:
             v, kind, path = partition.value
             import pyarrow.parquet as _pq
 
-            cols = col_names + (["_change_type"] if kind == "cdc" else [])
-            tbl = _pq.read_table(path, columns=cols)
+            extra = ["_change_type"] if kind == "cdc" else []
+            cols = [phys[n] for n in col_names] + extra
+            tbl = _pq.read_table(path, columns=cols).select(cols)
+            tbl = tbl.rename_columns(col_names + extra)
             if kind != "cdc":
                 tbl = tbl.append_column(
                     "_change_type", _pa.array(["insert"] * tbl.num_rows)

@@ -66,8 +66,10 @@ T = TypeVar("T")
 def token() -> str:
     """Unique per process AND per call (two threads of one writer must
     never share a temp or staged name; itertools.count is GIL-atomic);
-    deterministic — no entropy."""
-    return f"{os.getpid()}-{next(_SEQ)}"
+    deterministic — no entropy. The pid is zero-padded to 7 digits
+    (Linux's largest pid_max is 4194304), so the stored paths that
+    carry a token are the same length whatever the pid."""
+    return f"{os.getpid():07d}-{next(_SEQ)}"
 
 
 def publish_if_absent(path: str, payload: str) -> bool:

@@ -44,12 +44,12 @@ OUT = "/root/repo/SCALE_r08.json"
 
 
 def build_frames(spark):
-    from map_reduce_spark.operators.dedup import _portable_bands
+    from map_reduce_spark.operators.dedup import minhash_bands
 
     docs = spark.read.parquet(os.path.join(SYNTH, "documents.parquet"))
     is_batch = F.col("doc_id") % 10 == 0
-    stored = _portable_bands(docs.filter(~is_batch))
-    batch = _portable_bands(docs.filter(is_batch))
+    stored = minhash_bands(docs.filter(~is_batch), "md5")
+    batch = minhash_bands(docs.filter(is_batch), "md5")
     # the boilerplate cluster: HOT_ROWS stored docs whose signatures all
     # collapse into one (band, bucket); ids disjoint from the corpus
     hot_stored = spark.range(HOT_ROWS).select(

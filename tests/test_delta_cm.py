@@ -164,3 +164,35 @@ def test_cm_with_dv_through_v2_checkpoint(spark, sf_dir, tmp_path):
     got = {tuple(r) for r in D.read_delta_py(spark, tbl).collect()}
     assert got == want
     _sh.rmtree(tbl, ignore_errors=True)
+
+
+def test_mapped_cdf_stream_matches_batch_feed(spark, tbl, tmp_path):
+    """The CDF stream source reads a column-mapped table's change files
+    under their PHYSICAL names and renames to logical: drained to a
+    memory sink, it serves exactly the rows the batch CDF reader
+    serves over the same range (cdc files and appended files both)."""
+    D.write_mapped_table(_mk(spark, 20), tbl, stats_cols=("id",))  # v0
+    D.set_delta_table_property(tbl, "delta.enableChangeDataFeed", "true")  # v1
+    D.delete_where_dv(spark, tbl, F.col("id") < 5, checkpoint_interval=0)  # v2
+    D.write_delta_py(  # v3: mapped append
+        _mk(spark, 25).filter(F.col("id") >= 20), tbl, mode="append",
+        checkpoint_interval=0,
+    )
+    q = (
+        D.stream_delta_cdf(spark, tbl)
+        .writeStream.format("memory")
+        .queryName("mapped_cdf_stream")
+        .option("checkpointLocation", str(tmp_path / "chk"))
+        .start()
+    )
+    try:
+        q.processAllAvailable()
+        got = spark.table("mapped_cdf_stream").collect()
+    finally:
+        q.stop()
+    want = D.read_delta_changes_cdf(spark, tbl, since_version=-1).collect()
+    cols = ["id", "y", "v", "_change_type", "_commit_version"]
+    assert len(want) == 30
+    assert sorted(tuple(r[c] for c in cols) for r in got) == sorted(
+        tuple(r[c] for c in cols) for r in want
+    )

@@ -77,3 +77,15 @@ def test_bench_output_tail(spark, sf_dir, tmp_path, monkeypatch, capsys):
 )
 def test_scripts_compile(path, tmp_path):
     py_compile.compile(path, cfile=str(tmp_path / "out.pyc"), doraise=True)
+
+
+def test_all_queries_refuses_unregistered_priority_name(monkeypatch):
+    """A renamed or deleted query must not silently shrink the driver
+    window: ``all_queries`` names every missing ``_PRIORITY`` entry."""
+    from map_reduce_spark import registry
+
+    monkeypatch.setattr(
+        registry, "_PRIORITY", ("mr_pipeline", "no_such_query", "gone_too")
+    )
+    with pytest.raises(KeyError, match="no_such_query.*gone_too"):
+        registry.all_queries()

@@ -196,3 +196,17 @@ def test_first_publish_loses_race(spark, tmp_path, monkeypatch, caplog, fmt, op)
     loser = seen["loser_staged"]
     assert not loser & _referenced(fmt, raced)
     assert not loser & _files(raced), "the losing attempt left staged files behind"
+
+
+def test_token_width_does_not_follow_the_pid(monkeypatch):
+    """Tokens land in stored manifest, log and data paths, so their
+    length must not move with the pid's digit count."""
+    import itertools
+
+    monkeypatch.setattr(L, "_SEQ", itertools.count(10))
+    monkeypatch.setattr(L.os, "getpid", lambda: 7)
+    short = L.token()
+    monkeypatch.setattr(L.os, "getpid", lambda: 4194303)
+    long_ = L.token()
+    assert len(short) == len(long_)
+    assert short != long_

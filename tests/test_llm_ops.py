@@ -107,7 +107,7 @@ def test_ann_lsh_recall_at_10_on_planted_neighbors(spark, sf_dir):
     (small perturbations, cos >= ~0.95), run the SAME operator over the
     augmented corpus, and require it to find >= 8 of the 10 in its
     top-10."""
-    from map_reduce_spark.operators.similarity import ann_lsh_topk_frame
+    from map_reduce_spark.operators.similarity import _planes, ann_lsh_topk_frame
     from map_reduce_spark.io import load_table
 
     e = load_table(spark, sf_dir, "embeddings")
@@ -125,7 +125,10 @@ def test_ann_lsh_recall_at_10_on_planted_neighbors(spark, sf_dir):
     aug = base.unionByName(
         spark.createDataFrame(planted, schema=base.schema)
     )
-    got = {r.vec_id for r in ann_lsh_topk_frame(aug, query_id=0, k=10).collect()}
+    got = {
+        r.vec_id
+        for r in ann_lsh_topk_frame(aug, _planes(), query_id=0, k=10).collect()
+    }
     want = {1_000_000 + i for i in range(10)}
     recall = len(got & want) / len(want)
     assert recall >= 0.8, f"ann recall@10 on planted near-dups {recall:.2f}"

@@ -12,8 +12,8 @@ from pyspark.sql import functions as F
 from map_reduce_spark.io import load_table
 from map_reduce_spark.operators.dedup import (
     _INCREMENTAL_MOD,
-    _portable_bands,
     incremental_dedup_frames,
+    minhash_bands,
 )
 from map_reduce_spark.operators.similarity import (
     _UPSERT_MOD,
@@ -110,11 +110,11 @@ def test_incremental_dedup_from_stored_index(spark, duck, sf_dir, tmp_path):
     # round N: persist the signature index (bands are per-doc
     # independent, so banding a filtered corpus == filtering the bands)
     idx_path = str(tmp_path / "band_index")
-    _portable_bands(docs.filter(~is_new)).write.parquet(idx_path)
+    minhash_bands(docs.filter(~is_new), "md5").write.parquet(idx_path)
 
     # round N+1: band only the batch, fold against the stored index
     got = incremental_dedup_frames(
-        _portable_bands(docs.filter(is_new)),
+        minhash_bands(docs.filter(is_new), "md5"),
         spark.read.parquet(idx_path),
         docs,
     )

@@ -486,14 +486,14 @@ def test_dedup_compact_fold_order_through_parquet(spark, sf_dir, tmp_path):
     from map_reduce_spark.operators.dedup import (
         _DEDUP_COMPACT_BATCHES,
         _collision_pairs,
-        _portable_bands,
         dedup_compact_finish,
         dedup_index_compact,
         merge_dedup_states,
+        minhash_bands,
     )
 
     docs = load_table(spark, sf_dir, "documents")
-    bands = _portable_bands(docs)
+    bands = minhash_bands(docs, "md5")
     day = F.col("doc_id") % _DEDUP_COMPACT_BATCHES
     states = []
     for d in range(_DEDUP_COMPACT_BATCHES):
@@ -655,9 +655,9 @@ def test_dedup_index_lifecycle_roundtrip(spark, sf_dir, tmp_path):
 
     from map_reduce_spark.operators.dedup import (
         _collision_pairs,
-        _portable_bands,
         dedup_compact_finish,
         incremental_dedup_frames,
+        minhash_bands,
     )
     from map_reduce_spark.streaming.jobs import (
         DOCS_SCHEMA,
@@ -691,13 +691,13 @@ def test_dedup_index_lifecycle_roundtrip(spark, sf_dir, tmp_path):
     # day 4 folds against the STORED index
     got = _rows(
         incremental_dedup_frames(
-            _portable_bands(day4), spark.read.parquet(idx_path), docs
+            minhash_bands(day4, "md5"), spark.read.parquet(idx_path), docs
         )
     )
     release_caches()
 
     # the in-memory one-shot twin of the same semantics
-    b_early, b_day4 = _portable_bands(early), _portable_bands(day4)
+    b_early, b_day4 = minhash_bands(early, "md5"), minhash_bands(day4, "md5")
     survivors = dedup_compact_finish(b_early, _collision_pairs(b_early), docs)
     want = _rows(incremental_dedup_frames(b_day4, survivors, docs))
     release_caches()
