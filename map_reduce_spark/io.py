@@ -228,10 +228,13 @@ def read_avro(spark: SparkSession, path: str) -> DataFrame:
     object-container reader (``sources.avro_py``), a partition-parallel
     Python DataSource whose planner indexes block ranges without
     decompressing. Same rows either way; the fallback trades scan
-    throughput for zero install footprint."""
+    throughput for zero install footprint. Only the jar-absence failure
+    falls back; any other native error re-raises."""
     try:
         return spark.read.format("avro").load(path)
-    except Exception:  # AnalysisException: jar absent -> Python path
+    except Exception as e:  # jar absent -> Python path; else re-raise
+        if not _is_missing_datasource(e):
+            raise
         from map_reduce_spark.sources.avro_py import read_avro_py
 
         return read_avro_py(spark, path)

@@ -430,7 +430,7 @@ def k_anonymity(spark: SparkSession, sf_dir: str) -> DataFrame:
 # signatures instead — K portable min-hashes per source (constant-size
 # state, like dedup.py's doc-level signatures but at source grain),
 # pairwise agreement estimating trigram Jaccard. md5 hash family as in
-# dedup._portable_bands, so DuckDB replays every component and the
+# minhash_bands(docs, "md5"), so DuckDB replays every component and the
 # estimator itself is hash-verified, not just bounded. The K=64
 # permutations come from 16 md5 calls per gram, each sliced into 4
 # independent 8-hex-char (32-bit) windows — one md5 is 128 bits = 32

@@ -39,10 +39,10 @@ Driver-side materialization policy: the package's data plane is
 collect-free (NOTES; VERDICT r7 audits it); a transactional commit,
 however, must know its action set on the driver — that is the commit,
 not a computation. Every such site goes through
-``_control_plane_rows``, which documents the bound: frames collected
-there are FILE-granularity (O(files touched), like delta-core's own
-collected action list) or single-row aggregates, never row- or
-data-proportional.
+``rowlevel.control_plane_rows``, which documents the bound: frames
+collected there are FILE-granularity (O(files touched), like
+delta-core's own collected action list) or single-row aggregates,
+never row- or data-proportional.
 
 Reference parity: the reference engine (ghostdsb/map_reduce) appends
 to its output sinks with no transactional story at all (worker.ex:124,
@@ -65,14 +65,10 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import LongType, StringType, StructField, StructType
 
 from map_reduce_spark.registry import register
-from map_reduce_spark.sources import lakecommit
+from map_reduce_spark.sources import lakecommit, rowlevel
 
 _LOG = "_delta_log"
 _LAST_CHECKPOINT = "_last_checkpoint"
-# how many file-granularity rows a control-plane collect may return
-# before we refuse (a rewrite touching this many files at once is a
-# full-table rewrite — use overwrite mode, which never lists rows)
-_CONTROL_PLANE_MAX = 100_000
 # vacuum won't reap a staging dir quieter than this (a live writer may
 # be mid-stage; see vacuum_delta)
 _STAGING_RETENTION_SEC = 600
@@ -706,27 +702,6 @@ def skip_files(snap: DeltaSnapshot, col: str, lo, hi) -> list[str]:
     return keep
 
 # --------------------------------------------------------------------
-# control plane
-# --------------------------------------------------------------------
-
-
-def _control_plane_rows(df: DataFrame, what: str) -> list:
-    """THE package's sanctioned driver materialization site (module
-    docstring): transactional commits must hold their action set on the
-    driver — delta-core's OptimisticTransaction does the identical
-    collect. Callers pass only FILE-granularity frames (distinct file
-    paths of a rewrite set) or single-row aggregates (key bounds);
-    a guard refuses anything row-proportional."""
-    rows = df.limit(_CONTROL_PLANE_MAX + 1).collect()
-    if len(rows) > _CONTROL_PLANE_MAX:
-        raise RuntimeError(
-            f"control-plane frame for {what} exceeded {_CONTROL_PLANE_MAX} "
-            "rows — this is a full-table rewrite; use mode='overwrite'"
-        )
-    return rows
-
-
-# --------------------------------------------------------------------
 # reader
 # --------------------------------------------------------------------
 
@@ -739,30 +714,33 @@ def read_delta_py(
 ) -> DataFrame:
     """Read a Delta table as of ``version`` (default: latest) — log
     replay on the driver, then a plain NATIVE parquet scan over the
-    active file list (pushdown/pruning/codegen all intact; hive-style
+    active file list (``_scan_snapshot``). ``files`` (from
+    ``skip_files``) narrows the scan to a stats-pruned subset."""
+    snap = snapshot(table, version)
+    return _scan_snapshot(spark, snap, snap.file_paths() if files is None else files)
+
+
+def _scan_snapshot(spark: SparkSession, snap: DeltaSnapshot, files: list[str]) -> DataFrame:
+    """Native parquet scan of ``files`` (absolute paths of ``snap``'s
+    active set) — pushdown/pruning/codegen all intact; hive-style
     layout + the log's schema recovers partition columns, so partition
-    filters prune at plan time). ``files`` (from ``skip_files``)
-    narrows the scan to a stats-pruned subset (sound under deletion
-    vectors too — a DV only removes rows, so per-file min/max stay
+    filters prune at plan time. A narrowed scan is sound under deletion
+    vectors too (a DV only removes rows, so per-file min/max stay
     conservative). Active adds carrying a deletionVector apply as a
     merge-on-read anti-join (``_apply_deletion_vectors``). Column
-    mapping (name/id mode) scans under PHYSICAL names — parquet
-    columns and hive partition dirs both carry them — then projects
-    back to logical names, after the DV join (``_metadata`` resolves
-    only on the scan relation)."""
-    snap = snapshot(table, version)
-    paths = snap.file_paths() if files is None else files
-    schema = snap.schema
-    if not paths:
-        return spark.createDataFrame([], schema)
+    mapping (name/id mode) scans under PHYSICAL names — parquet columns
+    and hive partition dirs both carry them — then projects back to
+    logical names, after the DV join (``_metadata`` resolves only on
+    the scan relation)."""
+    if not files:
+        return spark.createDataFrame([], snap.schema)
     mapping = snap.column_mapping()
-    reader = spark.read.schema(snap.physical_schema() if mapping else schema)
+    reader = spark.read.schema(snap.physical_schema() if mapping else snap.schema)
     if snap.partition_columns:
-        reader = reader.option("basePath", table)
-    df = reader.parquet(*paths)
+        reader = reader.option("basePath", snap.table)
+    df = reader.parquet(*files)
     if any(a.get("deletionVector") for a in snap.adds.values()):
-        sel = None if files is None else {os.path.abspath(p) for p in paths}
-        df = _apply_deletion_vectors(spark, df, snap, sel)
+        df = _apply_deletion_vectors(spark, df, snap, {os.path.abspath(p) for p in files})
     if mapping:
         df = df.select(
             [F.col(phys).alias(logical) for logical, phys in mapping.items()]
@@ -987,6 +965,55 @@ def write_delta_py(
     return lakecommit.retry_commit(f"{mode} on {table!r}", attempt)
 
 
+def _cow_view(
+    spark: SparkSession,
+    table: str,
+    name: str,
+    stats_cols: tuple[str, ...],
+    checkpoint_interval: int,
+):
+    """``rowlevel``'s Delta adapter for the public function ``name``:
+    each ``open_view(op)`` replays the log once, refuses deletion-
+    vector and column-mapping tables (``_gate_dv_rewrite``), scans and
+    skips against that one snapshot, and publishes remove(victims) +
+    add(rewrite) — plus cdc files when the change feed is on — as the
+    next version."""
+
+    def open_view(op: str) -> rowlevel.View:
+        snap = snapshot(table)
+        _gate_dv_rewrite(snap, name)
+        part = tuple(snap.partition_columns)
+
+        def candidates(keys: rowlevel.KeyPlan) -> list[str]:
+            lo, hi = keys.bounds
+            return [] if lo is None else skip_files(snap, keys.key, lo, hi)
+
+        def publish(victims, out, changes):
+            actions = [
+                {"remove": {"path": p, "deletionTimestamp": 0, "dataChange": True}}
+                for p in sorted(_rel_paths(snap, victims))
+            ]
+            moved = _stage_and_move(out, table, part, distribute=True)
+            actions.extend(_add_actions(table, moved, stats_cols))
+            if _cdf_enabled(snap):
+                actions.extend(_stage_cdc_files(changes(), table, part))
+            actions.append(
+                {"commitInfo": {"operation": op.upper(), "engine": "map_reduce_spark"}}
+            )
+            # a lost race re-derives everything against the new
+            # snapshot: the winner may have rewritten our victims
+            return _commit(
+                table, snap.version + 1, actions, checkpoint_interval, owns_files=True
+            )
+
+        return rowlevel.View(
+            f"{name} on {table!r}", snap.version, snap.schema, snap.file_paths(),
+            lambda files: _scan_snapshot(spark, snap, files), candidates, publish,
+        )
+
+    return open_view
+
+
 def delete_where(
     spark: SparkSession,
     table: str,
@@ -994,59 +1021,14 @@ def delete_where(
     stats_cols: tuple[str, ...] = (),
     checkpoint_interval: int = 10,
 ) -> int:
-    """Delta DELETE: find the files containing matching rows (file-
-    granularity control plane via ``_metadata.file_path``), rewrite
-    ONLY those files minus the matches, commit remove+add. Files with
-    no matching row are untouched — at 100 TB a selective delete
-    rewrites a handful of files, never the table. Returns the committed
-    version.
-
-    SQL DELETE semantics on NULLs: only rows where the predicate is
-    TRUE are deleted — rows where it evaluates to NULL are KEPT, so
-    both the victim selection and the rewrite filter go through
-    ``coalesce(predicate, false)`` (a bare ``~predicate`` would turn
-    NULL into NULL and silently drop those rows from the rewrite)."""
-    pred_true = F.coalesce(predicate, F.lit(False))
-
-    def attempt():
-        snap = snapshot(table)
-        _gate_dv_rewrite(snap, "delete_where (file rewrite)")
-        active = read_delta_py(spark, table, snap.version)
-        victims_df = (
-            active.filter(pred_true)
-            .select(F.col("_metadata.file_path").alias("fp"))
-            .distinct()
-        )
-        victims = {r.fp for r in _control_plane_rows(victims_df, "delete rewrite set")}
-        if not victims:  # nothing matches: no-op commit not needed
-            return snap.version
-        victim_rel = _rel_paths(snap, victims)
-        keep_rows = read_delta_py(spark, table, snap.version, files=sorted(victims)).filter(
-            ~pred_true
-        )
-        moved = _stage_and_move(
-            keep_rows, table, tuple(snap.partition_columns), distribute=True
-        )
-        actions = [
-            {"remove": {"path": p, "deletionTimestamp": 0, "dataChange": True}}
-            for p in sorted(victim_rel)
-        ]
-        actions.extend(_add_actions(table, moved, stats_cols))
-        if _cdf_enabled(snap):
-            deleted = read_delta_py(
-                spark, table, snap.version, files=sorted(victims)
-            ).filter(pred_true).withColumn("_change_type", F.lit("delete"))
-            actions.extend(
-                _stage_cdc_files(deleted, table, tuple(snap.partition_columns))
-            )
-        actions.append({"commitInfo": {"operation": "DELETE", "engine": "map_reduce_spark"}})
-        # a lost race re-derives everything against the new snapshot:
-        # the winner may have rewritten our victims
-        return _commit(
-            table, snap.version + 1, actions, checkpoint_interval, owns_files=True
-        )
-
-    return lakecommit.retry_commit(f"delete on {table!r}", attempt)
+    """Delta DELETE (``rowlevel.delete``): rewrite ONLY the files
+    holding predicate-TRUE rows, minus those rows, and commit
+    remove+add. Files with no matching row are untouched — at 100 TB a
+    selective delete rewrites a handful of files, never the table.
+    NULL-predicate rows are kept. Returns the committed version (the
+    current one, with no commit, when nothing matches)."""
+    view = _cow_view(spark, table, "delete_where", stats_cols, checkpoint_interval)
+    return rowlevel.delete(view, predicate)
 
 
 def _rel_paths(snap: DeltaSnapshot, abs_paths) -> list[str]:
@@ -1076,133 +1058,16 @@ def merge_upsert(
     stats_cols: tuple[str, ...] = (),
     checkpoint_interval: int = 10,
 ) -> int:
-    """Delta MERGE (upsert): matched target rows take the source row's
-    values, unmatched source rows insert. Candidate files come from
-    LOG-LEVEL data skipping — one single-row aggregate gives the source
-    key bounds, ``skip_files`` prunes the active list against per-file
-    stats, and only files that can possibly hold a match are read or
-    rewritten. Unmatched-source detection anti-joins against the
-    candidate rows only (any match must live in a candidate file, so
-    the anti-join is complete). The rewrite unions updated+kept rows of
-    candidate files with the inserts, all in one shuffle-side plan; the
-    commit is remove(candidates)+add(rewrite). Returns the committed
-    version.
-
-    Source must be key-unique (the SQL MERGE precondition); enforced by
-    weaving ``assert_true`` into the key expression itself (the house
-    pattern — an unreferenced guard column would be pruned by
-    Catalyst), so a bad source fails loudly, not by row
-    multiplication. The guard's window shuffles only the batch-sized
-    source."""
-    from pyspark.sql.window import Window
-
-    snap0 = snapshot(table)
-    want = {f.name: f.dataType.simpleString() for f in snap0.schema.fields}
-    got = dict(source.dtypes)
-    if got != want:
-        raise TypeError(
-            "merge source schema must match the table exactly (a widened "
-            "column would silently rewrite files the log schema can no "
-            f"longer read): table {want}, source {got}"
-        )
-    key_type = dict(source.dtypes)[key]
-    guarded_key = F.when(
-        F.count("*").over(Window.partitionBy(key)) > 1,
-        F.assert_true(
-            F.lit(False), F.lit("merge source has duplicate keys")
-        ).cast(key_type),
-    ).otherwise(F.col(key))
-    # persist the guarded batch: it feeds the bounds collect, the
-    # rewrite join, the insert anti-join and (on CDF tables) the cdc
-    # staging — without the barrier the source subtree (scan +
-    # dup-guard window) re-executes once per consumer (NOTES rule 11).
-    # Batch-sized at any corpus scale; released in the finally (the
-    # commit is the materialization point, so release is safe).
-    src = source.withColumn(key, guarded_key).persist()
-    try:
-        return _merge_upsert_inner(
-            spark, table, src, key, stats_cols, checkpoint_interval
-        )
-    finally:
-        src.unpersist(blocking=True)
-
-
-def _merge_upsert_inner(
-    spark: SparkSession,
-    table: str,
-    src: DataFrame,
-    key: str,
-    stats_cols: tuple[str, ...],
-    checkpoint_interval: int,
-) -> int:
-    bounds_df = src.agg(F.min(key).alias("lo"), F.max(key).alias("hi"))
-    lo_hi = _control_plane_rows(bounds_df, "merge key bounds")[0]
-
-    def attempt():
-        snap = snapshot(table)
-        _gate_dv_rewrite(snap, "merge_upsert")
-        cols = [f.name for f in snap.schema.fields]
-        cand = (
-            skip_files(snap, key, lo_hi.lo, lo_hi.hi)
-            if lo_hi.lo is not None
-            else []
-        )
-        src_named = src.select(*[F.col(c).alias(f"__s_{c}") for c in cols])
-        if cand:
-            cand_rows = read_delta_py(spark, table, snap.version, files=cand)
-            joined = cand_rows.join(
-                src_named, cand_rows[key] == src_named[f"__s_{key}"], "left"
-            )
-            rewritten = joined.select(
-                *[
-                    F.when(F.col(f"__s_{key}").isNotNull(), F.col(f"__s_{c}"))
-                    .otherwise(F.col(c))
-                    .alias(c)
-                    for c in cols
-                ]
-            )
-            inserts = src_named.join(
-                cand_rows.select(F.col(key).alias("__t_k")),
-                src_named[f"__s_{key}"] == F.col("__t_k"),
-                "left_anti",
-            ).select(*[F.col(f"__s_{c}").alias(c) for c in cols])
-            out = rewritten.unionByName(inserts)
-            victim_rel = _rel_paths(
-                snap, {os.path.realpath(p) for p in cand}
-            )
-        else:  # no file can hold a match: pure insert
-            out = src_named.select(*[F.col(f"__s_{c}").alias(c) for c in cols])
-            victim_rel = []
-        moved = _stage_and_move(
-            out, table, tuple(snap.partition_columns), distribute=True
-        )
-        actions = [
-            {"remove": {"path": p, "deletionTimestamp": 0, "dataChange": True}}
-            for p in sorted(victim_rel)
-        ]
-        actions.extend(_add_actions(table, moved, stats_cols))
-        if _cdf_enabled(snap):
-            if cand:
-                matched = joined.filter(F.col(f"__s_{key}").isNotNull())
-                pre = matched.select(*cols).withColumn(
-                    "_change_type", F.lit("update_preimage")
-                )
-                post = matched.select(
-                    *[F.col(f"__s_{c}").alias(c) for c in cols]
-                ).withColumn("_change_type", F.lit("update_postimage"))
-                ins = inserts.withColumn("_change_type", F.lit("insert"))
-                changes = pre.unionByName(post).unionByName(ins)
-            else:
-                changes = out.withColumn("_change_type", F.lit("insert"))
-            actions.extend(
-                _stage_cdc_files(changes, table, tuple(snap.partition_columns))
-            )
-        actions.append({"commitInfo": {"operation": "MERGE", "engine": "map_reduce_spark"}})
-        return _commit(
-            table, snap.version + 1, actions, checkpoint_interval, owns_files=True
-        )
-
-    return lakecommit.retry_commit(f"merge on {table!r}", attempt)
+    """Delta MERGE (upsert, ``rowlevel.merge``): matched target rows
+    take the source row's values, unmatched source rows insert.
+    Candidate files come from LOG-LEVEL data skipping — one single-row
+    aggregate gives the source key bounds, ``skip_files`` prunes the
+    active list against per-file stats, and only files that can
+    possibly hold a match are read or rewritten; the commit is
+    remove(candidates)+add(rewrite). The source must match the table
+    schema exactly and be key-unique. Returns the committed version."""
+    view = _cow_view(spark, table, "merge_upsert", stats_cols, checkpoint_interval)
+    return rowlevel.merge(view, source, key)
 
 
 def delta_history_table(spark: SparkSession, table: str) -> DataFrame:
@@ -1655,11 +1520,6 @@ def make_dv_codec():
     )
 
 
-def _strip_scheme(col):
-    # _metadata.file_path arrives as a file:-scheme URI from the scan
-    return F.regexp_replace(col, "^file:(//)?", "")
-
-
 def _resolve_dv_location(table: str, dv: dict, codec) -> tuple[str, str]:
     """-> ("inline", payload) or ("file", absolute path)."""
     kind = dv["storageType"]
@@ -1754,7 +1614,7 @@ def _apply_deletion_vectors(
     dele = _dv_positions_frame(spark, dv_rows)
     src = df.withColumns(
         {
-            "__mr_fp": _strip_scheme(F.col("_metadata.file_path")),
+            "__mr_fp": rowlevel.strip_scheme(F.col("_metadata.file_path")),
             "__mr_pos": F.col("_metadata.row_index"),
         }
     )
@@ -1821,7 +1681,7 @@ def delete_where_dv(
             reader = reader.option("basePath", table)
         src = reader.parquet(*paths).withColumns(
             {
-                "__fp": _strip_scheme(F.col("_metadata.file_path")),
+                "__fp": rowlevel.strip_scheme(F.col("_metadata.file_path")),
                 "__pos": F.col("_metadata.row_index"),
             }
         )
@@ -1884,7 +1744,7 @@ def delete_where_dv(
         per_file = hits.groupBy("__fp").applyInPandas(
             write_group, "fp string, payload string, offset long, size long, card long"
         )
-        rows = _control_plane_rows(per_file, "dv delete set")
+        rows = rowlevel.control_plane_rows(per_file, "dv delete set")
         if not rows:
             return snap.version
         cdc_actions: list[dict] = []
@@ -2680,7 +2540,7 @@ def optimize_compact(
         ]
         total = sum(snap.adds[p].get("size", 0) for p in victim_rel)
         n_out = max(1, -(-total // target_bytes))  # ceil
-        rows = read_delta_py(spark, table, snap.version, files=victim_abs)
+        rows = _scan_snapshot(spark, snap, victim_abs)
         if zorder_by is not None:
             from map_reduce_spark.operators.pipeline_ops import _z_spark
 
@@ -3007,7 +2867,7 @@ def _read_change_range(
                 "__cdf_fp string, _commit_version long",
             )
             df = (
-                df.withColumn("__cdf_fp", _strip_scheme(F.col("_metadata.file_path")))
+                df.withColumn("__cdf_fp", rowlevel.strip_scheme(F.col("_metadata.file_path")))
                 .join(F.broadcast(vmap), "__cdf_fp")
                 .drop("__cdf_fp")
             )
@@ -4110,71 +3970,12 @@ def update_where(
     stats_cols: tuple[str, ...] = (),
     checkpoint_interval: int = 10,
 ) -> int:
-    """Delta UPDATE: rewrite only the files containing predicate-TRUE
-    rows, applying ``set_exprs`` (column → Column) to those rows and
-    carrying every other row unchanged — the same file-granularity
-    control plane and NULL discipline as ``delete_where`` (NULL
-    predicate rows are NOT updated: the condition goes through
-    ``coalesce(pred, false)``). Returns the committed version."""
-    snap0 = snapshot(table)
-    cols = [f.name for f in snap0.schema.fields]
-    unknown = set(set_exprs) - set(cols)
-    if unknown:
-        raise KeyError(f"update_where: unknown columns {sorted(unknown)}")
-    pred_true = F.coalesce(predicate, F.lit(False))
-
-    def attempt():
-        snap = snapshot(table)
-        _gate_dv_rewrite(snap, "update_where (file rewrite)")
-        active = read_delta_py(spark, table, snap.version)
-        victims_df = (
-            active.filter(pred_true)
-            .select(F.col("_metadata.file_path").alias("fp"))
-            .distinct()
-        )
-        victims = {r.fp for r in _control_plane_rows(victims_df, "update rewrite set")}
-        if not victims:
-            return snap.version  # nothing matches: no-op
-        victim_rel = _rel_paths(snap, victims)
-        rows = read_delta_py(spark, table, snap.version, files=sorted(victims))
-        out = rows.select(
-            *[
-                F.when(pred_true, set_exprs[c]).otherwise(F.col(c)).alias(c)
-                if c in set_exprs
-                else F.col(c)
-                for c in cols
-            ]
-        )
-        moved = _stage_and_move(
-            out, table, tuple(snap.partition_columns), distribute=True
-        )
-        actions = [
-            {"remove": {"path": p, "deletionTimestamp": 0, "dataChange": True}}
-            for p in sorted(victim_rel)
-        ]
-        actions.extend(_add_actions(table, moved, stats_cols))
-        if _cdf_enabled(snap):
-            matched = rows.filter(pred_true)
-            pre = matched.withColumn("_change_type", F.lit("update_preimage"))
-            post = matched.select(
-                *[
-                    set_exprs[c].alias(c) if c in set_exprs else F.col(c)
-                    for c in cols
-                ]
-            ).withColumn("_change_type", F.lit("update_postimage"))
-            actions.extend(
-                _stage_cdc_files(
-                    pre.unionByName(post), table, tuple(snap.partition_columns)
-                )
-            )
-        actions.append(
-            {"commitInfo": {"operation": "UPDATE", "engine": "map_reduce_spark"}}
-        )
-        return _commit(
-            table, snap.version + 1, actions, checkpoint_interval, owns_files=True
-        )
-
-    return lakecommit.retry_commit(f"update on {table!r}", attempt)
+    """Delta UPDATE (``rowlevel.update``): rewrite only the files
+    containing predicate-TRUE rows, applying ``set_exprs`` (column →
+    Column) to those rows and carrying every other row — NULL-predicate
+    rows included — unchanged. Returns the committed version."""
+    view = _cow_view(spark, table, "update_where", stats_cols, checkpoint_interval)
+    return rowlevel.update(view, predicate, set_exprs)
 
 
 def restore_table(

@@ -68,7 +68,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import StructField, StructType
 
 from map_reduce_spark.registry import register
-from map_reduce_spark.sources import lakecommit
+from map_reduce_spark.sources import lakecommit, rowlevel
 
 _MAGIC = b"Obj\x01"
 
@@ -600,11 +600,6 @@ _DELETE_BROADCAST_ROWS = 4_000_000
 _POS_DELETE_DDL = "file_path string, pos bigint"
 
 
-def _strip_file_scheme(col):
-    # _metadata.file_path arrives as a file:-scheme URI from the scan
-    return F.regexp_replace(col, "^file:(//)?", "")
-
-
 def _pos_delete_frame(spark: SparkSession, plan: dict) -> DataFrame:
     """The snapshot's positional deletes as (``__mr_del_fp`` local
     path, ``__mr_del_pos``). Delete rows are mapped from their STORED
@@ -642,7 +637,7 @@ def _apply_positional_deletes(spark: SparkSession, df: DataFrame, plan: dict) ->
     dele = _pos_delete_frame(spark, plan)
     src = df.withColumns(
         {
-            "__mr_fp": _strip_file_scheme(F.col("_metadata.file_path")),
+            "__mr_fp": rowlevel.strip_scheme(F.col("_metadata.file_path")),
             "__mr_pos": F.col("_metadata.row_index"),
         }
     )
@@ -699,7 +694,7 @@ def _apply_equality_deletes(
         )
         dele = (
             spark.read.schema(ddl).parquet(*[p for p, _, _ in files])
-            .withColumn("__mr_dfp", _strip_file_scheme(F.col("_metadata.file_path")))
+            .withColumn("__mr_dfp", rowlevel.strip_scheme(F.col("_metadata.file_path")))
             .join(F.broadcast(dmap), F.col("__mr_dfp") == F.col("__mr_df"), "inner")
             .select(
                 *[F.col(c).alias(f"__mr_eq_{c}") for c in cols],
@@ -835,7 +830,7 @@ def read_iceberg_py(
         return df
     src = df.withColumns(
         {
-            "__mr_fp": _strip_file_scheme(F.col("_metadata.file_path")),
+            "__mr_fp": rowlevel.strip_scheme(F.col("_metadata.file_path")),
             "__mr_pos": F.col("_metadata.row_index"),
         }
     )
@@ -1618,7 +1613,7 @@ def commit_positional_deletes(
         spark, meta, _current_schema(meta, snap), plan["data_files"]
     ).withColumns(
         {
-            "__mr_fp": _strip_file_scheme(F.col("_metadata.file_path")),
+            "__mr_fp": rowlevel.strip_scheme(F.col("_metadata.file_path")),
             "__mr_pos": F.col("_metadata.row_index"),
         }
     )
@@ -2275,7 +2270,7 @@ def read_iceberg_changelog(
             frames.append(
                 _mapped_parquet_scan(spark, meta, ice_schema, sorted(paths))
                 .withColumn(
-                    "__cl_fp", _strip_file_scheme(F.col("_metadata.file_path"))
+                    "__cl_fp", rowlevel.strip_scheme(F.col("_metadata.file_path"))
                 )
                 .join(vmap, "__cl_fp")
                 .drop("__cl_fp")
@@ -2981,7 +2976,7 @@ def iceberg_minmax_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --------------------------------------------------------------------
-# copy-on-write MERGE (round 9): the delta_py.merge_upsert twin
+# copy-on-write DML (``rowlevel`` adapter) and table clones
 # --------------------------------------------------------------------
 
 
@@ -3081,7 +3076,60 @@ def _rewrite_attempt(
     return snap_id
 
 
-_MERGE_INLIST_MAX = 10_000
+def _cow_view(spark: SparkSession, table: str, name: str):
+    """``rowlevel``'s Iceberg adapter for the public function ``name``:
+    each ``open_view(op)`` loads the metadata once and plans the
+    current snapshot, refuses tables carrying merge-on-read delete
+    files (rewriting a file without applying its deletes resurrects
+    rows, NOTES rule 42), scans under the CURRENT schema through
+    ``_mapped_parquet_scan``, prunes merge candidates with the
+    reader's three-layer metadata pruning over the key plan, and
+    publishes through the version-pinned manifest rewrite
+    (``_rewrite_attempt``). Iceberg keeps no change feed, so the change
+    rows are never built."""
+
+    def open_view(op: str) -> rowlevel.View:
+        meta, base_version = _load_meta_versioned(table)
+        snap = _pick_snapshot(meta, None)
+        plan = scan_plan_for_snapshot(table, meta, snap)
+        if plan["delete_files"] or plan["eq_deletes"]:
+            raise NotImplementedError(
+                f"{name}: table carries merge-on-read delete files; "
+                "compact_iceberg_files first (rewriting a file without "
+                "applying its deletes would resurrect rows)"
+            )
+        ice_schema = _current_schema(meta, snap)
+
+        def candidates(keys: rowlevel.KeyPlan) -> list[str]:
+            return scan_plan_for_snapshot(
+                table, meta, snap, predicates=keys.predicates
+            )["data_files"]
+
+        def publish(victims, out, changes):
+            descs = _stage_parquet_files(
+                out, table, op[0], distribute=True,
+                partition_by=_default_partition_by(meta, ice_schema),
+            )
+            return _rewrite_attempt(
+                table, set(victims), descs,
+                _SNAPSHOT_OPERATION[op], (meta, base_version),
+            )
+
+        return rowlevel.View(
+            f"{name} on {table!r}",
+            snap["snapshot-id"],
+            StructType.fromDDL(_iceberg_schema_to_ddl(ice_schema)),
+            plan["data_files"],
+            lambda files: _mapped_parquet_scan(spark, meta, ice_schema, files),
+            candidates,
+            publish,
+        )
+
+    return open_view
+
+
+# the snapshot summary operation each rewrite commits under
+_SNAPSHOT_OPERATION = {"delete": "delete", "update": "update", "merge": "overwrite"}
 
 
 def merge_iceberg_upsert(
@@ -3090,137 +3138,17 @@ def merge_iceberg_upsert(
     source: DataFrame,
     key: str,
 ) -> int:
-    """Copy-on-write MERGE (upsert) into an Iceberg table — the
-    delta_py.merge_upsert twin: matched target rows take the source
-    row's values, unmatched source rows insert. CANDIDATE files come
-    from the reader's own metadata pruning with the source-key IN-list
-    (bucket/identity partition projection + per-file key bounds), so
-    only files that can possibly hold a match are read or rewritten —
-    the write-amplification bound at 100 TB. Unmatched-source
-    detection anti-joins candidate rows only (inclusive pruning ⇒ any
-    match lives in a candidate file, so the anti-join is complete).
-    Partitioned tables restage the rewrite per partition tuple.
-
-    Source must be key-unique (the SQL MERGE precondition), enforced
-    by weaving ``assert_true`` into the key expression (the house
-    pattern — a free-standing guard column would be pruned). Tables
-    carrying merge-on-read deletes are refused loudly: rewriting a
-    file without applying its deletes resurrects rows (NOTES rule 42).
-    Returns the committed snapshot id."""
-    from pyspark.sql.window import Window
-
-    meta0 = load_table_metadata(table)
-    ice_schema0 = _schema_for_snapshot(meta0, _pick_snapshot(meta0, None))
-    schema = StructType.fromDDL(_iceberg_schema_to_ddl(ice_schema0))
-    want = {f.name: f.dataType.simpleString() for f in schema.fields}
-    got = dict(source.dtypes)
-    if got != want:
-        raise TypeError(
-            f"merge source schema must match the table exactly: "
-            f"table {want}, source {got}"
-        )
-    key_type = got[key]
-    guarded_key = F.when(
-        F.count("*").over(Window.partitionBy(key)) > 1,
-        F.assert_true(
-            F.lit(False), F.lit("merge source has duplicate keys")
-        ).cast(key_type),
-    ).otherwise(F.col(key))
-    # persist the guarded batch: it feeds the key-set collect, the
-    # rewrite join AND the insert anti-join — without the barrier the
-    # source subtree (scan + dup-guard window) re-executes once per
-    # consumer (NOTES rule 11). The batch is MERGE's bounded input, so
-    # the persist is batch-sized at any corpus scale; released before
-    # return (the commit is the materialization point, so release is
-    # always safe here).
-    src = source.withColumn(key, guarded_key).persist()
-    try:
-        return _merge_iceberg_upsert_inner(
-            spark, table, src, key, schema, ice_schema0
-        )
-    finally:
-        src.unpersist(blocking=True)
-
-
-def _merge_iceberg_upsert_inner(
-    spark: SparkSession,
-    table: str,
-    src: DataFrame,
-    key: str,
-    schema: StructType,
-    ice_schema0: dict,
-) -> int:
-    from map_reduce_spark.sources.delta_py import _control_plane_rows
-
-    # candidate predicate: the exact key IN-list while it is metadata-
-    # sized (it prices like a pruning literal set, not data), else the
-    # single-row key bounds — a billion-key source must never collect
-    # its key set to the driver
-    key_rows = _control_plane_rows(
-        src.select(F.col(key).alias("k")).distinct().limit(_MERGE_INLIST_MAX + 1),
-        "merge key set (bounded)",
-    )
-    if len(key_rows) > _MERGE_INLIST_MAX:
-        b = _control_plane_rows(
-            src.agg(F.min(key).alias("lo"), F.max(key).alias("hi")),
-            "merge key bounds",
-        )[0]
-        preds = (
-            [(key, ">=", b.lo), (key, "<=", b.hi)] if b.lo is not None else None
-        )
-    else:
-        key_set = tuple(sorted(r.k for r in key_rows if r.k is not None))
-        preds = [(key, "in", key_set)] if key_set else None
-    cols = [f.name for f in schema.fields]
-    src_named = src.select(*[F.col(c).alias(f"__s_{c}") for c in cols])
-
-    def attempt():
-        meta, base_version = _load_meta_versioned(table)
-        snap = _pick_snapshot(meta, None)
-        plan = scan_plan_for_snapshot(table, meta, snap, predicates=preds)
-        if plan["delete_files"] or plan["eq_deletes"]:
-            raise NotImplementedError(
-                "merge_iceberg_upsert: table carries merge-on-read delete "
-                "files; compact them into data files first (rewriting a "
-                "file without applying its deletes would resurrect rows)"
-            )
-        cand = plan["data_files"]
-        if cand:
-            cand_rows = _mapped_parquet_scan(
-                spark, meta, _current_schema(meta, snap), cand
-            )
-            joined = cand_rows.join(
-                src_named, cand_rows[key] == src_named[f"__s_{key}"], "left"
-            )
-            rewritten = joined.select(
-                *[
-                    F.when(F.col(f"__s_{key}").isNotNull(), F.col(f"__s_{c}"))
-                    .otherwise(F.col(c))
-                    .alias(c)
-                    for c in cols
-                ]
-            )
-            inserts = src_named.join(
-                cand_rows.select(F.col(key).alias("__t_k")),
-                src_named[f"__s_{key}"] == F.col("__t_k"),
-                "left_anti",
-            ).select(*[F.col(f"__s_{c}").alias(c) for c in cols])
-            out = rewritten.unionByName(inserts)
-        else:  # no file can hold a match: pure insert
-            out = src_named.select(*[F.col(f"__s_{c}").alias(c) for c in cols])
-        descs = _stage_parquet_files(
-            out, table, "m", distribute=True,
-            partition_by=_default_partition_by(meta, ice_schema0),
-        )
-        return _rewrite_attempt(
-            table,
-            {os.path.abspath(p) for p in cand},
-            descs,
-            "overwrite",
-            (meta, base_version),
-        )
-
-    return lakecommit.retry_commit(f"iceberg merge on {table!r}", attempt)
+    """Copy-on-write MERGE (upsert, ``rowlevel.merge``) into an Iceberg
+    table: matched target rows take the source row's values, unmatched
+    source rows insert. CANDIDATE files come from the reader's own
+    metadata pruning with the source-key IN-list (bucket/identity
+    partition projection + per-file key bounds; key bounds past 10k
+    keys), so only files that can possibly hold a match are read or
+    rewritten — the write-amplification bound at 100 TB. Partitioned
+    tables restage the rewrite per partition tuple. The source must
+    match the table schema exactly and be key-unique; merge-on-read
+    tables are refused. Returns the committed snapshot id."""
+    return rowlevel.merge(_cow_view(spark, table, "merge_iceberg_upsert"), source, key)
 
 
 def _cust_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3463,59 +3391,14 @@ def streaming_iceberg_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def delete_iceberg_where(spark: SparkSession, table: str, predicate) -> int:
-    """Copy-on-write DELETE — the delta_py.delete_where twin: find the
-    files actually CONTAINING matching rows (file-granularity control
-    plane via ``_metadata.file_path`` on one scan), rewrite only those
-    files minus the matches, commit as a manifest rewrite. Untouched
-    files are carried, so a selective delete rewrites a handful of
-    files at 100 TB, never the table. Returns the committed (or, for a
-    no-match no-op, current) snapshot id.
-
-    SQL DELETE semantics on NULLs: only predicate-TRUE rows are
-    deleted — NULL-predicate rows are KEPT, so victim selection and
-    the rewrite filter both go through ``coalesce(predicate, false)``
-    (a bare ``~predicate`` maps NULL to NULL and would silently drop
-    those rows from the rewrite). Merge-on-read tables are refused
-    (rewriting without applying delete files resurrects rows)."""
-    from map_reduce_spark.sources.delta_py import _control_plane_rows
-
-    pred_true = F.coalesce(predicate, F.lit(False))
-
-    def attempt():
-        meta, base_version = _load_meta_versioned(table)
-        snap = _pick_snapshot(meta, None)
-        plan = scan_plan_for_snapshot(table, meta, snap)
-        if plan["delete_files"] or plan["eq_deletes"]:
-            raise NotImplementedError(
-                "delete_iceberg_where: table carries merge-on-read delete "
-                "files; compact first (or use commit_positional_deletes "
-                "for another MOR delete)"
-            )
-        ice_schema = _current_schema(meta, snap)
-        if not plan["data_files"]:
-            return snap["snapshot-id"]
-        active = _mapped_parquet_scan(spark, meta, ice_schema, plan["data_files"])
-        victims_df = (
-            active.filter(pred_true)
-            .select(_strip_file_scheme(F.col("_metadata.file_path")).alias("fp"))
-            .distinct()
-        )
-        victims = {
-            os.path.abspath(r.fp)
-            for r in _control_plane_rows(victims_df, "delete rewrite set")
-        }
-        if not victims:
-            return snap["snapshot-id"]  # nothing matches: no-op
-        keep_rows = _mapped_parquet_scan(
-            spark, meta, ice_schema, sorted(victims)
-        ).filter(~pred_true)
-        descs = _stage_parquet_files(
-            keep_rows, table, "d", distribute=True,
-            partition_by=_default_partition_by(meta, ice_schema),
-        )
-        return _rewrite_attempt(table, victims, descs, "delete", (meta, base_version))
-
-    return lakecommit.retry_commit(f"iceberg delete on {table!r}", attempt)
+    """Copy-on-write DELETE (``rowlevel.delete``): rewrite only the
+    files actually CONTAINING predicate-TRUE rows, minus those rows,
+    and commit as a manifest rewrite. Untouched files are carried, so a
+    selective delete rewrites a handful of files at 100 TB, never the
+    table. NULL-predicate rows are kept; merge-on-read tables are
+    refused. Returns the committed (or, for a no-match no-op, current)
+    snapshot id."""
+    return rowlevel.delete(_cow_view(spark, table, "delete_iceberg_where"), predicate)
 
 
 @register(
@@ -4568,60 +4451,14 @@ def update_iceberg_where(
     predicate,
     set_exprs: dict,
 ) -> int:
-    """Iceberg COW UPDATE — the delta_py.update_where twin: rewrite
-    only the files containing predicate-TRUE rows, applying
-    ``set_exprs`` (column → Column) to those rows, carrying the rest
-    unchanged, committing through the version-pinned manifest rewrite.
-    NULL-predicate rows are NOT updated (``coalesce(pred, false)``).
-    Merge-on-read tables are refused — compact first."""
-    from map_reduce_spark.sources.delta_py import _control_plane_rows
-
-    pred_true = F.coalesce(predicate, F.lit(False))
-
-    def attempt():
-        meta, base_version = _load_meta_versioned(table)
-        snap = _pick_snapshot(meta, None)
-        plan = scan_plan_for_snapshot(table, meta, snap)
-        if plan["delete_files"] or plan["eq_deletes"]:
-            raise NotImplementedError(
-                "update_iceberg_where: table carries merge-on-read delete "
-                "files; compact_iceberg_files first"
-            )
-        ice_schema = _current_schema(meta, snap)
-        cols = [f["name"] for f in ice_schema["fields"]]
-        unknown = set(set_exprs) - set(cols)
-        if unknown:
-            raise KeyError(f"update_iceberg_where: unknown columns {sorted(unknown)}")
-        if not plan["data_files"]:
-            return snap["snapshot-id"]
-        active = _mapped_parquet_scan(spark, meta, ice_schema, plan["data_files"])
-        victims_df = (
-            active.filter(pred_true)
-            .select(_strip_file_scheme(F.col("_metadata.file_path")).alias("fp"))
-            .distinct()
-        )
-        victims = {
-            os.path.abspath(r.fp)
-            for r in _control_plane_rows(victims_df, "update rewrite set")
-        }
-        if not victims:
-            return snap["snapshot-id"]
-        rows = _mapped_parquet_scan(spark, meta, ice_schema, sorted(victims))
-        out = rows.select(
-            *[
-                F.when(pred_true, set_exprs[c]).otherwise(F.col(c)).alias(c)
-                if c in set_exprs
-                else F.col(c)
-                for c in cols
-            ]
-        )
-        descs = _stage_parquet_files(
-            out, table, "u", distribute=True,
-            partition_by=_default_partition_by(meta, ice_schema),
-        )
-        return _rewrite_attempt(table, victims, descs, "update", (meta, base_version))
-
-    return lakecommit.retry_commit(f"iceberg update on {table!r}", attempt)
+    """Iceberg COW UPDATE (``rowlevel.update``): rewrite only the files
+    containing predicate-TRUE rows, applying ``set_exprs`` (column →
+    Column) to those rows, carrying the rest — NULL-predicate rows
+    included — unchanged, committing through the version-pinned
+    manifest rewrite. Merge-on-read tables are refused — compact
+    first."""
+    view = _cow_view(spark, table, "update_iceberg_where")
+    return rowlevel.update(view, predicate, set_exprs)
 
 
 def rollback_iceberg(table: str, snapshot_id: int) -> int:

@@ -32,15 +32,16 @@ import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 from pyspark.sql import functions as F  # noqa: E402
 
 HOT_ROWS = 1_000_000  # stored-side rows in the planted hot bucket
 HOT_BATCH = 4  # batch-side rows probing the hot bucket
 RUNS = 3
-SYNTH = "/root/repo/.sf1synth"
-OUT = "/root/repo/SCALE_r08.json"
+SYNTH = os.path.join(ROOT, ".sf1synth")
+OUT = os.path.join(ROOT, "SCALE_r08.json")
 
 
 def build_frames(spark):

@@ -129,6 +129,25 @@ def test_io_read_avro_falls_back(spark, tmp_path, sf_dir):
     ]
 
 
+def test_io_read_avro_surfaces_native_errors(spark, tmp_path, monkeypatch):
+    """Only a missing avro data source falls back: any other native
+    error must surface as itself, never as a silent Python-path read."""
+    from pyspark.sql.readwriter import DataFrameReader
+
+    from map_reduce_spark import io as mio
+
+    def broken(self, *a, **k):
+        raise RuntimeError("corrupt avro block header")
+
+    def never(*a, **k):
+        raise AssertionError("fell back on a non-missing native error")
+
+    monkeypatch.setattr(DataFrameReader, "load", broken)
+    monkeypatch.setattr("map_reduce_spark.sources.avro_py.read_avro_py", never)
+    with pytest.raises(RuntimeError, match="corrupt avro block header"):
+        mio.read_avro(spark, str(tmp_path / "t.avro"))
+
+
 def test_avro_scan_matches_parquet(spark, sf_dir):
     """The registered query's rows == the parquet table, value-exact."""
     from map_reduce_spark.io import load_table
